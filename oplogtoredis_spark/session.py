@@ -8,6 +8,7 @@ cluster the same builder is used by spark-submit; only master/memory differ.
 
 from __future__ import annotations
 
+import atexit
 import os
 import shutil
 import tempfile
@@ -15,12 +16,28 @@ import tempfile
 from pyspark.sql import SparkSession
 
 
+#: per-process directory holding the package zip; removed at exit
+_PKG_DIR: str | None = None
+
+
 def _ship_package(spark: SparkSession) -> None:
     """Ship this package to executor Python workers (pandas UDFs pickle by
-    module reference). Local equivalent of `spark-submit --py-files`."""
+    module reference). Local equivalent of `spark-submit --py-files`.
+
+    The zip goes into one private directory per process, removed when the
+    process exits: a shared fixed name in the temp dir outlived every
+    session, and Spark refuses a second file of the same name from another
+    path, so every call in a process reuses the same directory (made again
+    at the same path if something removed it meanwhile)."""
+    global _PKG_DIR
+    if _PKG_DIR is None:
+        _PKG_DIR = tempfile.mkdtemp(prefix="oplogtoredis_spark_pkg-")
+        atexit.register(shutil.rmtree, _PKG_DIR, ignore_errors=True)
+    else:
+        os.makedirs(_PKG_DIR, exist_ok=True)
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     parent = os.path.dirname(pkg_dir)
-    zip_base = os.path.join(tempfile.gettempdir(), "oplogtoredis_spark_pkg")
+    zip_base = os.path.join(_PKG_DIR, "oplogtoredis_spark_pkg")
     zip_path = shutil.make_archive(zip_base, "zip", root_dir=parent, base_dir="oplogtoredis_spark")
     spark.sparkContext.addPyFile(zip_path)
 
@@ -62,9 +79,14 @@ def get_spark(
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
-        # small single-file inputs must still parallelize across all cores
-        # (one 5 MB parquet file would otherwise become ONE scan task)
-        .config("spark.sql.files.minPartitionNum", str(shuffle_partitions))
+        # No scan-split floor is set: Spark's default floor
+        # (spark.sql.files.minPartitionNum) is defaultParallelism, so a
+        # small file set packs into about one task per core while a large
+        # one still splits at 128 MB. The shuffle-partition count (32) used
+        # as the floor before planned one task per small file: on 4 cores a
+        # 15k-event catch-up epoch ran 40 map tasks (8 batch files plus 32
+        # bucket files) and a 48-file live epoch 48 discovery tasks, each
+        # paying task launch and deserialization for kilobytes of input.
         .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")

@@ -25,6 +25,10 @@ import os
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
+
+from .schemas import EVENT_SCHEMA_EVOLVED
 
 _BASE_T = 1_700_000_000  # fixed epoch base (no wall clock!)
 
@@ -261,15 +265,40 @@ def write_events_chunked(
         df["ts"] = df["ts"] + (np.int64(i) * 10_000_000 << 32)
         df["wall"] = df["wall"] + pd.Timedelta(seconds=10_000_000 * i)
         df["seq"] = df["seq"] + total
-        df = df.assign(wall=df["wall"].astype("datetime64[us]"))
         bounds = np.linspace(0, len(df), files_per_chunk + 1).astype(int)
         for j in range(files_per_chunk):
             part = df.iloc[bounds[j] : bounds[j + 1]]
-            part.to_parquet(
-                os.path.join(out_dir, f"events-{i:03d}-{j:03d}.parquet"), index=False
-            )
+            _write_parquet(part, os.path.join(out_dir, f"events-{i:03d}-{j:03d}.parquet"))
         total += len(df)
     return total
+
+
+#: parquet types of the event columns, from EVENT_SCHEMA_EVOLVED; wall is
+#: written in microseconds — Spark's parquet reader rejects TIMESTAMP(NANOS)
+_ARROW_OF = {
+    "bigint": pa.int64(),
+    "int": pa.int32(),
+    "string": pa.string(),
+    "timestamp": pa.timestamp("us"),
+}
+_EVENT_ARROW_TYPES = {
+    f.name: _ARROW_OF[f.dataType.simpleString()] for f in EVENT_SCHEMA_EVOLVED.fields
+}
+
+
+def _write_parquet(part: pd.DataFrame, path: str) -> None:
+    """Write one log segment with the event schema's types. Left to pandas,
+    a segment whose values in a column are all null (``diff`` in a file of
+    inserts) got an INT32 column, and a stream reading the log with
+    EVENT_SCHEMA died with PARQUET_COLUMN_DATA_TYPE_MISMATCH. Columns
+    outside the event schema keep their inferred type."""
+    if "wall" in part:
+        part = part.assign(wall=part["wall"].astype("datetime64[us]"))
+    inferred = pa.Schema.from_pandas(part, preserve_index=False)
+    schema = pa.schema(
+        [(f.name, _EVENT_ARROW_TYPES.get(f.name, f.type)) for f in inferred]
+    )
+    pq.write_table(pa.Table.from_pandas(part, schema=schema, preserve_index=False), path)
 
 
 def write_events(df: pd.DataFrame, out_dir: str, n_files: int = 8) -> list[str]:
@@ -280,14 +309,12 @@ def write_events(df: pd.DataFrame, out_dir: str, n_files: int = 8) -> list[str]:
     batch fill (lib/redispub/publisher.go:191-207).
     """
     os.makedirs(out_dir, exist_ok=True)
-    # Spark's parquet reader rejects TIMESTAMP(NANOS); pandas defaults to ns.
-    df = df.assign(wall=df["wall"].astype("datetime64[us]"))
     paths = []
     bounds = np.linspace(0, len(df), n_files + 1).astype(int)
     for i in range(n_files):
         part = df.iloc[bounds[i] : bounds[i + 1]]
         p = os.path.join(out_dir, f"events-{i:05d}.parquet")
-        part.to_parquet(p, index=False)
+        _write_parquet(part, p)
         paths.append(p)
     return paths
 

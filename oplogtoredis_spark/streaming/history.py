@@ -152,6 +152,10 @@ def make_history_applier(
         # the join's (KEYS) hash partitioning (a clustering-superset), so
         # the dedup costs a sort instead of the extra full batch shuffle a
         # pre-join dropDuplicates paid (guide §2.4 — share one exchange).
+        # That saving assumes a shuffle join: when Spark broadcasts the
+        # pinned lake snapshot (a small table), the batch is not shuffled by
+        # KEYS, so the window adds the full batch shuffle the pre-join
+        # dropDuplicates paid anyway — the same cost, not a saving.
         # Duplicate deliveries are identical rows, so which copy survives
         # is value-irrelevant (same contract as dropDuplicates).
         joined = (

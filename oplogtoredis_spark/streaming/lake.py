@@ -39,6 +39,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import threading
 import time
 import uuid
 
@@ -74,6 +75,48 @@ _BLOOM_PROBE_CACHE: dict = {}
 #: Sidecars are immutable once linked (uuid-named, written tmp+replace),
 #: so the cache can never serve stale bits.
 _BLOOM_SIDECAR_CACHE: dict = {}
+
+
+#: Process-wide cache of batch-invariant merge plan fragments (see
+#: LakeTable._epoch_exprs): key -> fragments, emptied when full.
+_EPOCH_EXPR_CACHE: dict = {}
+_EPOCH_EXPR_CACHE_MAX = 64
+
+#: Spark lists more root paths than this conf's value with a distributed
+#: listing job (default 32); see _read_parquet.
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+_LISTING_LOCK = threading.Lock()
+
+
+def _read_parquet(
+    spark: SparkSession, paths: list[str], schema: T.StructType | None = None
+) -> DataFrame:
+    """Parquet read over dirs/files the manifest already names, listed on
+    the driver at any path count. Spark builds the file index eagerly and,
+    past the parallel-discovery threshold, lists with a Spark job: on a
+    128-bucket table a 48-event epoch touching ~37 buckets spent 0.26-0.40 s
+    building its target read that way, against 0.03 s at ~13 buckets. The
+    threshold is raised to the path count for the index build only and
+    restored after. Only that raise/read/restore runs under the lock (it
+    keeps concurrent readers from restoring each other's raised value);
+    reads at or under the threshold build their DataFrames concurrently.
+    ``schema`` None = mergeSchema inference."""
+    reader = (
+        spark.read.schema(schema)
+        if schema is not None
+        else spark.read.option("mergeSchema", "true")
+    )
+    if len(paths) <= int(spark.conf.get(_LISTING_THRESHOLD)):
+        return reader.parquet(*paths)
+    with _LISTING_LOCK:
+        prev = spark.conf.get(_LISTING_THRESHOLD)
+        if len(paths) <= int(prev):
+            return reader.parquet(*paths)
+        spark.conf.set(_LISTING_THRESHOLD, str(len(paths)))
+        try:
+            return reader.parquet(*paths)
+        finally:
+            spark.conf.set(_LISTING_THRESHOLD, prev)
 
 
 def _footer_col_range(path: str, col: str):
@@ -186,10 +229,6 @@ class LakeTable:
         self._manifest_dir = os.path.join(path, "_manifests")
         self._lineage_dir = os.path.join(path, "_lineage")
         self._refs_dir = os.path.join(path, "_refs")
-        # single-slot cache of batch-invariant merge expressions (see
-        # _epoch_exprs): (key, dict) — streaming epochs share one batch
-        # schema, so the hit rate is every epoch after the first
-        self._expr_cache: tuple[tuple, dict] | None = None
         # lineage ordinal: seeded lazily from one listdir, then local
         self._lineage_seq: int | None = None
 
@@ -576,8 +615,8 @@ class LakeTable:
             # fast path: every selected bucket was written at the current
             # schema id — read with the explicit schema (no driver-side
             # mergeSchema footer scan, measured 0.25-0.8 s per epoch)
-            df = spark.read.schema(schema).parquet(
-                *[p for ps in paths.values() for p in ps]
+            df = _read_parquet(
+                spark, [p for ps in paths.values() for p in ps], schema
             )
         else:
             # buckets written at older schema ids → per-sid conformed reads
@@ -755,14 +794,11 @@ class LakeTable:
                 continue
             s = T.StructType.fromJson(json.loads(sj))
             parts.append(
-                conform_to_schema(spark.read.schema(s).parquet(*ds), schema)
+                conform_to_schema(_read_parquet(spark, ds, s), schema)
             )
         if unknown:
             parts.append(
-                conform_to_schema(
-                    spark.read.option("mergeSchema", "true").parquet(*unknown),
-                    schema,
-                )
+                conform_to_schema(_read_parquet(spark, unknown), schema)
             )
         out = parts[0]
         for p in parts[1:]:
@@ -804,8 +840,8 @@ class LakeTable:
             1,
         ).cast("long")
         if sids == {cur_sid}:
-            d = spark.read.schema(schema).parquet(
-                *[p for _, p in sid_dirs]
+            d = _read_parquet(
+                spark, [p for _, p in sid_dirs], schema
             ).withColumn("_seq", seq_expr)
         else:
             # mixed schema ids: per-sid conformed reads, like
@@ -821,12 +857,11 @@ class LakeTable:
             parts = []
             for sid, ds in groups.items():
                 sj = schemas_reg.get(str(sid)) if sid is not None else None
-                if sj is not None:
-                    raw = spark.read.schema(
-                        T.StructType.fromJson(json.loads(sj))
-                    ).parquet(*ds)
-                else:
-                    raw = spark.read.option("mergeSchema", "true").parquet(*ds)
+                raw = _read_parquet(
+                    spark,
+                    ds,
+                    T.StructType.fromJson(json.loads(sj)) if sj is not None else None,
+                )
                 parts.append(
                     conform_to_schema(raw.withColumn("_seq", seq_expr), target)
                 )
@@ -1081,26 +1116,30 @@ class LakeTable:
     def _epoch_exprs(
         self, batch: DataFrame, m: dict, extra_payload_cols: tuple[str, ...]
     ) -> dict:
-        """Batch-invariant merge plan fragments, cached per (batch schema,
-        table schema, payload, bucket count).
+        """Batch-invariant merge plan fragments, cached process-wide per
+        (live SparkContext, batch schema, table schema, payload, bucket
+        count).
 
         Unresolved Column trees are immutable and not bound to any plan, so
         they can be built once and attached to every epoch's DataFrames.
-        Rebuilding them per epoch cost ~550 py4j round-trips (~0.5-0.7 s)
-        of driver-serial time per micro-batch — the dominant term of the
-        streaming Amdahl serial fraction after the O(1) manifest commit.
-        The ONE schema analysis probe (for schema evolution) also moves
-        here, so steady-state epochs trigger no analysis round-trip at all.
+        Building them costs ~550 py4j round-trips plus the ONE schema
+        analysis probe (for schema evolution): 0.65-1.27 s of driver-serial
+        time on 4 cores. Keyed by content rather than held per LakeTable
+        instance, so a new stream on a known shape (each catch-up round,
+        each restart) does not pay that on its first epoch; a new session,
+        a schema-evolving batch or a rebucket gets a new key and rebuilds.
         """
         batch_schema_json = batch.schema.json()
         key_t = (
+            batch.sparkSession.sparkContext.applicationId,
             batch_schema_json,
             m["schema"],
             tuple(extra_payload_cols),
             m["n_buckets"],
         )
-        if self._expr_cache is not None and self._expr_cache[0] == key_t:
-            return self._expr_cache[1]
+        cached = _EPOCH_EXPR_CACHE.get(key_t)
+        if cached is not None:
+            return cached
 
         from ..functions.histograms import hist_bucket_col_sql, hist_observe_aggs_on
 
@@ -1127,6 +1166,7 @@ class LakeTable:
         ]
         if any(f.name == "wall" for f in batch_schema.fields):
             in_aggs.append(F.max(F.col("wall")).alias("max_wall"))
+        bucket = bucket_for(F.col("repo"), F.col("path"), n_buckets)
         src_cols = [
             F.col("repo"),
             F.col("path"),
@@ -1135,7 +1175,7 @@ class LakeTable:
             F.col("ts").alias("last_ts"),
             F.col("tx_idx").cast("int").alias("last_tx_idx"),
             (F.col("op") == F.lit("d")).alias("deleted"),
-            bucket_for(F.col("repo"), F.col("path"), n_buckets).alias("bucket"),
+            bucket.alias("bucket"),
         ]
         # entry-size histogram fragments (reference
         # prometheus.ExponentialBuckets(8,2,29), lib/oplog/tail.go:71-137):
@@ -1205,11 +1245,12 @@ class LakeTable:
                     "deletes"
                 ),
             ],
-            "bucket_b": bucket_for(F.col("repo"), F.col("path"), n_buckets).alias(
-                "b"
-            ),
+            "bucket": bucket,
+            "bucket_b": bucket.alias("b"),
         }
-        self._expr_cache = (key_t, cx)
+        if len(_EPOCH_EXPR_CACHE) >= _EPOCH_EXPR_CACHE_MAX:
+            _EPOCH_EXPR_CACHE.clear()  # bounded; shapes in use rebuild once
+        _EPOCH_EXPR_CACHE[key_t] = cx
         return cx
 
     def _apply_epoch(
@@ -1228,13 +1269,10 @@ class LakeTable:
         m = self.manifest()
         n_buckets = m["n_buckets"]
 
-        # Batch-invariant plan fragments come from a single-slot cache: a
-        # streaming epoch's driver-serial cost was ~55% py4j expression
-        # construction (~550 round-trips/epoch rebuilding identical Column
-        # trees — measured ~0.5-0.7 s/epoch), which is an Amdahl term wall
-        # clock can't parallelize away. Unresolved Column trees are immutable
-        # and plan-independent, so they are built once per (batch schema,
-        # table schema) and reused every epoch.
+        # Batch-invariant plan fragments (~550 py4j round-trips and one
+        # analysis probe to build) come from the process-wide cache in
+        # _epoch_exprs: built once per session and table shape, shared by
+        # every epoch of every stream on that shape.
         cx = self._epoch_exprs(batch, m, extra_payload_cols)
         new_schema: T.StructType = cx["new_schema"]
 
@@ -1350,8 +1388,12 @@ class LakeTable:
             # only; the base merge is deferred to read time)
             u = src.withColumn("_is_tgt", F.lit(False))
         else:
+            # the merge groups and writes on the bucket recomputed from the
+            # key, never on the stored column: a foreign or corrupt row whose
+            # stored bucket is wrong still meets its key's events in one
+            # group (one winner) and is written where the key hashes
             u = src.withColumn("_is_tgt", F.lit(False)).unionByName(
-                tgt.withColumn("_is_tgt", F.lit(True))
+                tgt.withColumns({"bucket": cx["bucket"], "_is_tgt": F.lit(True)})
             )
         # skew mitigation (north_rule): max_by is algebraic, so map-side
         # partial aggregation (partial_max_by, verified in BENCH/PLANS.md)
@@ -1364,6 +1406,15 @@ class LakeTable:
         # ~35% of epoch wall time) for no additional bound.
         order = cx["order"]
         pay = cx["pay"]
+        # Write width: one task per touched bucket up to one per core, so
+        # the write runs in one wave. The 4 x cores width used before ran
+        # 16 write tasks for ~3 MB of shuffle on 4 cores, each paying
+        # ~50 ms of executor deserialization (0.73-0.81 s of the 1.8-1.9 s
+        # write-stage task time). Hash-partitioning on the bucket puts each
+        # bucket in one task, so each touched bucket gets exactly one file.
+        nb_eff = len(affected) if affected else n_buckets
+        cores = spark.sparkContext.defaultParallelism
+        width = min(nb_eff, cores)
         if n_salts and n_salts > 1:
             salted = u.withColumn(
                 "_salt",
@@ -1382,23 +1433,20 @@ class LakeTable:
             )
             one_shuffle = False
         else:
-            # Single-payload-shuffle plan (guide §8): ``bucket`` is a pure
-            # function of the key (pmod(xxhash64(repo,path), n_buckets) —
-            # the invariant fsck checks per file), so hash-partitioning by
-            # bucket co-locates each key, and a groupBy on (bucket, *key)
-            # is satisfied by that partitioning (subset rule) with NO
-            # second exchange — the bucketed write below then reuses the
-            # same layout, so the full payload crosses the wire ONCE
-            # instead of key-collapse + bucket-repartition. Only taken
-            # when the touched bucket count keeps reduce parallelism at or
-            # above the core count (a 100 TB table has thousands of
-            # buckets, so this IS the production branch); small-bucket
-            # fixtures keep the two-step plan whose collapse runs at full
-            # session width.
-            nb_eff = len(affected) if affected else n_buckets
-            cores = spark.sparkContext.defaultParallelism
+            # Single-payload-shuffle plan (guide §8): ``bucket`` is
+            # recomputed from the key on both sides of the union (see
+            # above), so hash-partitioning by bucket co-locates
+            # each key, and a groupBy on (bucket, *key) is satisfied by
+            # that partitioning (subset rule) with NO second exchange — the
+            # bucketed write below then reuses the same layout, so the full
+            # payload crosses the wire ONCE instead of key-collapse +
+            # bucket-repartition. Only taken when the touched bucket count
+            # keeps reduce parallelism at or above the core count (a
+            # 100 TB table has thousands of buckets, so this IS the
+            # production branch); small-bucket fixtures keep the two-step
+            # plan whose collapse runs at full session width.
             if nb_eff >= cores:
-                u = u.repartition(min(nb_eff, 4 * cores), F.col("bucket"))
+                u = u.repartition(width, F.col("bucket"))
                 p2 = u.groupBy("bucket", *key).agg(*cx["collapse_aggs"])
                 one_shuffle = True
             else:
@@ -1424,19 +1472,32 @@ class LakeTable:
         if merge_mode == "mor" or affected or not prune or empty_table_dense:
             to_write = merged.withColumn("pb", F.col("bucket"))
             if not one_shuffle:
-                write_n = (
-                    len(affected)
-                    if affected
-                    else min(n_buckets, 4 * spark.sparkContext.defaultParallelism)
-                )
-                to_write = to_write.repartition(write_n, F.col("pb"))
+                to_write = to_write.repartition(width, F.col("pb"))
             # (one_shuffle: already hash-partitioned by bucket — the
             # partitionBy writer splits per dir within each task)
             to_write.write.partitionBy("pb").mode("overwrite").parquet(out_dir)
             metrics = observed_row(obs)
+            written = sorted(
+                int(d[3:]) for d in os.listdir(out_dir) if d.startswith("pb=")
+            )
             if merge_mode == "mor" or not prune or adaptive_dense or empty_table_dense:
-                affected = sorted(
-                    int(d[3:]) for d in os.listdir(out_dir) if d.startswith("pb=")
+                affected = written
+            elif not set(written) <= set(affected):
+                # a row read from a touched bucket hashes to an untouched
+                # one: committing would drop it (that bucket's base is not
+                # rewritten). After a concurrent commit (the target read
+                # resolves CURRENT) it is a lost race; otherwise the stored
+                # layout is corrupt: fail loud, commit nothing
+                if self.current_version() != m["version"]:
+                    raise ConcurrentCommitError(
+                        f"version {m['version']} was superseded during the merge"
+                    )
+                stray = sorted(set(written) - set(affected))
+                raise RuntimeError(
+                    f"{self.path}: rows read from touched buckets hash to "
+                    f"untouched buckets {stray[:8]}; the stored layout breaks "
+                    "bucket_for(repo, path, n_buckets) (see fsck) — nothing "
+                    "committed"
                 )
         else:
             # empty batch (everything filtered): no data change, but the
@@ -1793,7 +1854,7 @@ class LakeTable:
         mixed-modulus state a reader or merger can ever observe. MoR deltas
         fold into the new base (same as compact). Old snapshots keep their
         own ``n_buckets`` and dirs — time travel and tags read the old
-        layout unchanged until expiry. The per-table expression cache keys
+        layout unchanged until expiry. The merge's plan-fragment cache keys
         on the bucket count, so a live stream picks up the new modulus on
         its next epoch. ``file_stats``/``file_blooms`` are cleared (they
         describe the replaced files; re-run rewrite_clustered to rebuild

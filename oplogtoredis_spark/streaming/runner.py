@@ -78,14 +78,14 @@ def make_batch_applier(
     bucket exceed the target, the table grows to the next power-of-two
     count (≤ ``rebucket_max_n_buckets``) as its own commit inside the
     foreachBatch loop — single-writer discipline holds, the next epoch's
-    merge picks up the new modulus through the expression cache's
+    merge picks up the new modulus through the plan-fragment cache's
     bucket-count key. The pre-check is a driver-side listdir (no Spark
     job), so leaving it on costs nothing between fires."""
     seen = {"n": 0}
     # ONE sink instance for the stream's lifetime (not one per batch): the
-    # sink may carry per-stream caches — LakeTable reuses its batch-invariant
-    # merge expressions across epochs, which a per-batch instance would
-    # rebuild (~0.5-0.7 s/epoch of driver-serial py4j traffic). Durable
+    # sink may carry per-stream state (LakeTable seeds its lineage ordinal
+    # from one listdir, then counts locally; its merge plan fragments are
+    # cached process-wide, so they survive either way). Durable
     # state still lives behind the path, so crash/restart semantics are
     # unchanged (a restarted stream gets a fresh instance and re-reads the
     # manifest; every epoch re-reads it anyway).
