@@ -93,22 +93,42 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _par(spark, spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
 
 
+#: fixture scratch dirs made by _scratch_dir in this process
+_SCRATCH_MADE: list[str] = []
+
+
+def _remove_scratch(owner_pid: int) -> None:
+    """atexit: remove the dirs this process made (never the shared base,
+    never another process's dirs; a forked child that inherits the list
+    leaves them to the owner)."""
+    if os.getpid() != owner_pid:
+        return
+    import shutil
+
+    for d in _SCRATCH_MADE:
+        shutil.rmtree(d, ignore_errors=True)
+
+
 def _scratch_dir(prefix: str) -> str:
     """Scratch dir for query fixtures (lake tables, stream checkpoints,
-    file sinks): prefer the fastest local storage. This sandbox's root disk
-    is shared and slow (~75-100 MB/s effective); /dev/shm stands in for the
-    local NVMe a real cluster would give scratch space (the same posture
-    bench.py/session.py take for spark.local.dir). Parameterised via
-    OTR_SCRATCH_DIR; falls back to the system tempdir."""
+    file sinks): prefer the fastest local storage. A shared root disk is
+    often slow; /dev/shm stands in for the local NVMe a real cluster would
+    give scratch space (the same posture bench.py/session.py take for
+    spark.local.dir). Parameterised via OTR_SCRATCH_DIR; falls back to the
+    system tempdir. Every dir made here is removed when the process exits."""
+    import atexit
     import tempfile
 
     base = os.environ.get("OTR_SCRATCH_DIR")
     if base is None and os.path.isdir("/dev/shm"):
         base = "/dev/shm/otr_scratch"
-    if base is None:
-        return tempfile.mkdtemp(prefix=prefix)
-    os.makedirs(base, exist_ok=True)
-    return tempfile.mkdtemp(prefix=prefix, dir=base)
+    if base is not None:
+        os.makedirs(base, exist_ok=True)
+    d = tempfile.mkdtemp(prefix=prefix, dir=base)
+    if not _SCRATCH_MADE:
+        atexit.register(_remove_scratch, os.getpid())
+    _SCRATCH_MADE.append(d)
+    return d
 
 
 def _dump_split_stream_dir(
@@ -981,10 +1001,7 @@ def q_scd2_stream_history(spark, sf_dir):
         base + "/tbl", TARGET_SCHEMA,
         n_buckets=spark.sparkContext.defaultParallelism,
     )
-    # dense fixture: the batch's user_id keys cover every bucket, so the
-    # affected-bucket discovery pass prunes nothing (guide §2.4 — remove
-    # the shuffle/job outright; same rationale as bench.py merge_prune)
-    applier = make_history_applier(t.path, base + "/hist", prune=False)
+    applier = make_history_applier(t.path, base + "/hist")
     # the rank-2 split feeds both epochs from ONE windowed pass: without
     # the persist, each applier epoch re-runs the 1M-row ranking window
     # (scan + full shuffle) just to slice its half (guide §2.4). Epochs run
@@ -1071,10 +1088,8 @@ def q_enrich_stream_events(spark, sf_dir):
     # overhead (the _epoch_shuffle_scale discipline; scoped to the
     # core count, never a constant)
     with _stream_state_parallelism(spark):
-        t.merge_batch(env(purchases.where(F.col("event_id") % 2 == 0)), 0,
-                      prune=False)
-        t.merge_batch(env(purchases.where(F.col("event_id") % 2 == 1)), 1,
-                      prune=False)
+        t.merge_batch(env(purchases.where(F.col("event_id") % 2 == 0)), 0)
+        t.merge_batch(env(purchases.where(F.col("event_id") % 2 == 1)), 1)
 
         clicks = ev.where(F.col("event_type") == "click").select(
             F.lit("users").alias("repo"),
@@ -1753,11 +1768,9 @@ def q_lake_changes(spark, sf_dir):
     # overhead (the _epoch_shuffle_scale discipline; scoped to the
     # core count, never a constant)
     with _stream_state_parallelism(spark):
-        t.merge_batch(ev.where(F.col("event_id") % 2 == 0).select(env_cols), 0,
-                      prune=False)
+        t.merge_batch(ev.where(F.col("event_id") % 2 == 0).select(env_cols), 0)
         v1 = t.current_version()
-        t.merge_batch(ev.where(F.col("event_id") % 2 == 1).select(env_cols), 1,
-                      prune=False)
+        t.merge_batch(ev.where(F.col("event_id") % 2 == 1).select(env_cols), 1)
     return t.changes(spark, v1).select(
         "repo",
         "path",
@@ -1856,12 +1869,10 @@ def q_agg_view_lake(spark, sf_dir):
             env(first.where(F.col("doc_id") % 5 != 0).unionByName(drafts)
                 .unionByName(extras), 1),
             0,
-            prune=False,
         )
         view.follow_lake(spark, t)
         upserts = docs.where((F.col("doc_id") % 3 == 0) | (F.col("doc_id") % 5 == 0))
-        t.merge_batch(env(upserts, 2).unionByName(env(extras, 2, op="d")), 1,
-                      prune=False)
+        t.merge_batch(env(upserts, 2).unionByName(env(extras, 2, op="d")), 1)
         view.follow_lake(spark, t)
     return view.summary(spark)
 
@@ -1928,12 +1939,10 @@ def q_distinct_view_lake(spark, sf_dir):
             env(first.where(F.col("doc_id") % 5 != 0).unionByName(drafts)
                 .unionByName(extras), 1),
             0,
-            prune=False,
         )
         view.follow_lake(spark, t)
         upserts = docs.where((F.col("doc_id") % 3 == 0) | (F.col("doc_id") % 5 == 0))
-        t.merge_batch(env(upserts, 2).unionByName(env(extras, 2, op="d")), 1,
-                      prune=False)
+        t.merge_batch(env(upserts, 2).unionByName(env(extras, 2, op="d")), 1)
         view.follow_lake(spark, t)
     return view.read(spark)
 
@@ -1994,11 +2003,9 @@ def q_lake_read_clustered(spark, sf_dir):
             env(first.where(F.col("doc_id") % 5 != 0).unionByName(drafts)
                 .unionByName(extras), 1),
             0,
-            prune=False,
         )
         upserts = docs.where((F.col("doc_id") % 3 == 0) | (F.col("doc_id") % 5 == 0))
-        t.merge_batch(env(upserts, 2).unionByName(env(extras, 2, op="d")), 1,
-                      prune=False)
+        t.merge_batch(env(upserts, 2).unionByName(env(extras, 2, op="d")), 1)
         t.rewrite_clustered(spark, ["lang"], files_per_bucket=4)
     return t.read_pruned(spark, "lang", "en", "en").select(
         "path",
@@ -2068,11 +2075,9 @@ def q_lake_point_lookup(spark, sf_dir):
             env(first.where(F.col("doc_id") % 5 != 0).unionByName(drafts)
                 .unionByName(extras), 1),
             0,
-            prune=False,
         )
         upserts = docs.where((F.col("doc_id") % 3 == 0) | (F.col("doc_id") % 5 == 0))
-        t.merge_batch(env(upserts, 2).unionByName(env(extras, 2, op="d")), 1,
-                      prune=False)
+        t.merge_batch(env(upserts, 2).unionByName(env(extras, 2, op="d")), 1)
         t.rewrite_clustered(
             spark, ["lang"], files_per_bucket=4, bloom_cols=["path"]
         )
@@ -2148,8 +2153,7 @@ def q_rebucket_lake(spark, sf_dir):
         upserts = docs.where(
             (F.col("doc_id") % 3 == 0) | (F.col("doc_id") % 5 == 0)
         )
-        t.merge_batch(env(upserts, 2).unionByName(env(extras, 2, op="d")), 1,
-                      prune=False)
+        t.merge_batch(env(upserts, 2).unionByName(env(extras, 2, op="d")), 1)
     return t.read(spark).select(
         "path",
         "lang",
@@ -2216,7 +2220,6 @@ def q_schema_evolution_lake(spark, sf_dir):
             env(first.where(F.col("doc_id") % 5 != 0).unionByName(drafts)
                 .unionByName(extras), 1),
             0,
-            prune=False,
         )
         upserts = docs.where((F.col("doc_id") % 3 == 0) | (F.col("doc_id") % 5 == 0))
         b2 = (
@@ -2228,7 +2231,7 @@ def q_schema_evolution_lake(spark, sf_dir):
                 )
             )
         )
-        t.merge_batch(b2, 1, extra_payload_cols=("stars",), prune=False)
+        t.merge_batch(b2, 1, extra_payload_cols=("stars",))
     return t.read(spark).select("path", "lang", "stars")
 
 
@@ -2296,12 +2299,10 @@ def q_lake_read_tagged(spark, sf_dir):
                 1,
             ),
             0,
-            prune=False,
         )
         t.create_tag("pre_incident")
         # the incident: a bad job tombstones every even doc
-        t.merge_batch(env(docs.where(F.col("doc_id") % 2 == 0), 2, op="d"), 1,
-                      prune=False)
+        t.merge_batch(env(docs.where(F.col("doc_id") % 2 == 0), 2, op="d"), 1)
         t.rollback(t.resolve_ref("pre_incident"))
         # the real fix, applied on the restored state
         t.merge_batch(
@@ -2309,7 +2310,6 @@ def q_lake_read_tagged(spark, sf_dir):
                 env(extras, 3, op="d")
             ),
             2,
-            prune=False,
         )
         t.expire_snapshots(keep_last=2)  # reclaims the incident; tag pins c1
         cols = lambda snap: [  # noqa: E731
@@ -2386,17 +2386,17 @@ def q_wap_publish_lake(spark, sf_dir):
     # overhead (the _epoch_shuffle_scale discipline; scoped to the
     # core count, never a constant)
     with _stream_state_parallelism(spark):
-        wap_merge(t, spark, env(evens, 1), 0, checks(), prune=False)
+        wap_merge(t, spark, env(evens, 1), 0, checks())
         poisoned = odds.withColumn(
             "lang",
             F.when(F.col("doc_id") % 5 == 0, F.lit("xx")).otherwise(F.col("lang")),
         )
         try:
-            wap_merge(t, spark, env(poisoned, 2), 1, checks(), prune=False)
+            wap_merge(t, spark, env(poisoned, 2), 1, checks())
             raise AssertionError("poisoned epoch must fail its audit")
         except WriteAuditError:
             pass  # rolled back; tag still at epoch 0's snapshot
-        wap_merge(t, spark, env(odds, 2), 1, checks(), prune=False)
+        wap_merge(t, spark, env(odds, 2), 1, checks())
     return t.read(spark, tag="published").select(
         "path", "lang", F.length("content").cast("long").alias("n_chars")
     )
@@ -2446,14 +2446,12 @@ def q_lake_fsck(spark, sf_dir):
     # overhead (the _epoch_shuffle_scale discipline; scoped to the
     # core count, never a constant)
     with _stream_state_parallelism(spark):
-        t.merge_batch(env(docs.where(F.col("doc_id") % 2 == 0), 1), 0,
-                      prune=False)
+        t.merge_batch(env(docs.where(F.col("doc_id") % 2 == 0), 1), 0)
         t.merge_batch(
             env(docs.where(F.col("doc_id") % 2 == 1), 2).unionByName(
                 env(docs.where(F.col("doc_id") % 10 == 0), 2, op="d")
             ),
             1,
-            prune=False,
         )
     return t.fsck(spark)
 
@@ -2521,12 +2519,10 @@ def q_index_view_lake(spark, sf_dir):
             env(first.where(F.col("doc_id") % 5 != 0).unionByName(drafts)
                 .unionByName(extras), 1),
             0,
-            prune=False,
         )
         view.follow_lake(spark, t)
         upserts = docs.where((F.col("doc_id") % 3 == 0) | (F.col("doc_id") % 5 == 0))
-        t.merge_batch(env(upserts, 2).unionByName(env(extras, 2, op="d")), 1,
-                      prune=False)
+        t.merge_batch(env(upserts, 2).unionByName(env(extras, 2, op="d")), 1)
         view.follow_lake(spark, t)
     return view.stats(spark)
 
@@ -2588,12 +2584,10 @@ def q_follow_lake_corpus(spark, sf_dir):
             env(first.where(F.col("doc_id") % 5 != 0).unionByName(drafts)
                 .unionByName(extras), 1),
             0,
-            prune=False,
         )
         corpus.follow_lake(spark, t, repo="docs")
         upserts = docs.where((F.col("doc_id") % 3 == 0) | (F.col("doc_id") % 5 == 0))
-        t.merge_batch(env(upserts, 2).unionByName(env(extras, 2, op="d")), 1,
-                      prune=False)
+        t.merge_batch(env(upserts, 2).unionByName(env(extras, 2, op="d")), 1)
         corpus.follow_lake(spark, t, repo="docs")
     return corpus.chunks(spark).select("doc_id", "split", "chunk_idx", "n_tokens")
 
@@ -4663,14 +4657,12 @@ def q_follow_lake_semdedup(spark, sf_dir):
             env(first.where(~is_draft).unionByName(drafts)
                 .unionByName(extras), 1),
             0,
-            prune=False,
         )
         state.follow_lake(spark, t, repo="emb")
         upserts = emb.where(
             ((vid >= 256) & (vid % 3 != 0)) | ((vid % 3 == 0) & is_draft)
         )
-        t.merge_batch(env(upserts, 2).unionByName(env(extras, 2, op="d")), 1,
-                      prune=False)
+        t.merge_batch(env(upserts, 2).unionByName(env(extras, 2, op="d")), 1)
         state.follow_lake(spark, t, repo="emb")
     return state.kept(spark).select(F.col("doc_id").alias("vec_id"), "cid")
 

@@ -333,13 +333,6 @@ def main() -> None:
             max_files_per_trigger=max(
                 4, len([f for f in os.listdir(events_dir) if f.endswith(".parquet")]) // 8
             ),
-            # dense single-job merge: the bench table's keys hash uniformly
-            # over 32 buckets, so every micro-batch touches every bucket and
-            # the affected-bucket discovery job prunes nothing — dense mode
-            # drops that serial driver round-trip + pruned re-scan per epoch
-            # (the pruned default remains the 100 TB posture where batches
-            # touch a small fraction of thousands of buckets)
-            merge_prune=False,
         )
 
     stream_secs, raw = _timed_reps(_run_stream_cow)

@@ -30,9 +30,6 @@ class EngineConfig:
     # this → skip to end of log. In Spark this becomes the watermark delay /
     # allowed lateness for streaming dedup state.
     max_catch_up_seconds: int = 120
-    # Reference dedupe TTL (lib/config/main.go:20,88-100): how long an applied
-    # (ts, tx_idx) stays deduplicable. Tombstone/lineage retention analogue.
-    dedupe_ttl_seconds: int = 150
 
     # --- parallelism / layout ----------------------------------------------
     # Number of hash buckets in the lake target table. The analogue of the
@@ -41,15 +38,8 @@ class EngineConfig:
     # sized so one bucket's live data fits comfortably in an executor
     # (e.g. 4096+ buckets); small here for local tests.
     target_buckets: int = 32
-    # Salt fan-out for hot-key mitigation (north_rule explicit skew handling).
-    skew_salts: int = 16
-    shuffle_partitions: int = 32
 
     # --- behaviour gates ----------------------------------------------------
-    # Reference OTR_OPLOG_V2_EXTRACT_SUBFIELD_CHANGES
-    # (lib/oplog/oplog_v2_converter.go:208-220): shallow vs deep (dotted-path)
-    # changed-field extraction for v2 diffs.
-    v2_extract_subfield_changes: bool = False
     # Reference OTR_RESUME_FROM_END_ON_FAILURE escape hatch
     # (lib/config/main.go:204-219): if the checkpoint is unreadable, never
     # silently skip unless this is set.
@@ -72,13 +62,7 @@ class EngineConfig:
         )
         return EngineConfig(
             max_catch_up_seconds=_env_int("OTR_SPARK_MAX_CATCH_UP_SECONDS", 120),
-            dedupe_ttl_seconds=_env_int("OTR_SPARK_DEDUPE_TTL_SECONDS", 150),
             target_buckets=_env_int("OTR_SPARK_TARGET_BUCKETS", 32),
-            skew_salts=_env_int("OTR_SPARK_SKEW_SALTS", 16),
-            shuffle_partitions=_env_int("OTR_SPARK_SHUFFLE_PARTITIONS", 32),
-            v2_extract_subfield_changes=_env_bool(
-                "OTR_SPARK_OPLOG_V2_EXTRACT_SUBFIELD_CHANGES", False
-            ),
             resume_from_end_on_failure=_env_bool(
                 "OTR_SPARK_RESUME_FROM_END_ON_FAILURE", False
             ),

@@ -9,7 +9,7 @@ names. Exact re-expression of:
   T5 v2 shallow        — /root/reference/lib/oplog/oplog_v2_converter.go:144-186
      (v2 detector ``IsV2Update`` oplogEntry.go:58-75)
   T6 v2 deep (dotted)  — /root/reference/lib/oplog/oplog_v2_converter.go:16-142
-     (opt-in via OTR_OPLOG_V2_EXTRACT_SUBFIELD_CHANGES, :208-220)
+     (the reference's env opt-in, :208-220, is ``changed_fields(deep=True)``)
 
 T4/T5 are pure Catalyst expressions: one ``from_json`` to
 ``map<string,string>`` (nested objects surface as their JSON text) + map /

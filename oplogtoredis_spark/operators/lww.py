@@ -11,11 +11,9 @@ Scale notes:
   * ``max_by(payload_struct, order_struct)`` is a hash aggregate with
     map-side partial aggregation — each map task emits at most one candidate
     per key, so a hot key receives one row per upstream partition at the
-    reducer, not its full event volume.
-  * For pathological skew (north_rule demands explicit mitigation) we also
-    provide a salted two-phase variant: reduce per (key, salt) first, then per
-    key. salt is derived deterministically from the event identity so replay
-    is stable.
+    reducer, not its full event volume — the explicit hot-key mitigation, with
+    no salted second reduce (that would add a full exchange + sort for no
+    tighter bound).
   * Exact duplicates collapse for free: max_by picks one of the identical
     rows, which is the reference's "apply once" outcome.
 """
@@ -46,28 +44,6 @@ def lww_collapse(
     win = F.max_by(F.struct(*[F.col(c) for c in payload]), order).alias("_w")
     out = df.groupBy(*key).agg(win)
     return out.select(*key, *[F.col(f"_w.{c}").alias(c) for c in payload])
-
-
-def lww_collapse_salted(
-    df: DataFrame,
-    key: tuple[str, ...] = ("repo", "path"),
-    n_salts: int = 16,
-) -> DataFrame:
-    """Two-phase LWW for hot keys: reduce per (key, salt), then per key.
-
-    Phase 1 spreads a hot key over ``n_salts`` reducers; phase 2 sees at most
-    ``n_salts`` rows per key. The salt is ``pmod(xxhash64(ts, tx_idx), S)`` —
-    deterministic per event identity, so a replayed batch salts identically.
-    """
-    payload = _payload_cols(df, key)
-    salted = df.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col("ts"), F.col("tx_idx")), F.lit(n_salts))
-    )
-    order = total_order_col(F.col("ts"), F.col("tx_idx"))
-    win = F.max_by(F.struct(*[F.col(c) for c in payload]), order).alias("_w")
-    phase1 = salted.groupBy(*key, "_salt").agg(win)
-    phase1 = phase1.select(*key, *[F.col(f"_w.{c}").alias(c) for c in payload])
-    return lww_collapse(phase1, key)
 
 
 def lww_collapse_broadcast(

@@ -13,10 +13,10 @@ equal the plain join's, row for row (the oracle computes the plain join).
 Cost: dimension ×n_salts (bounded, dimension-sized); payoff: the hot
 key's reduce work parallelizes n_salts-ways.
 
-This complements the engine's existing skew levers: the LWW merge's
-two-phase salted reduce (streaming/lake.py n_salts) handles AGGREGATION
-skew; this operator handles JOIN skew. Both exist because at 10^10 events
-a single hot (repo, path) otherwise serializes one reducer.
+This complements the engine's other skew lever: the LWW merge's map-side
+partial max_by (operators/lww.py, streaming/lake.py) bounds AGGREGATION
+skew to one row per map task per key; this operator handles JOIN skew,
+where no partial aggregate can pre-collapse a hot key's rows.
 
 Reference analogue: the reference shards its publish fan-out by a hash
 parallelism key (lib/redispub — routing.py's R1/R2); salting is the same

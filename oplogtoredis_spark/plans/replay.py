@@ -13,22 +13,20 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import DEFAULT_CONFIG, EngineConfig
 from ..operators.filters import apply_all_filters
-from ..operators.lww import lww_collapse, lww_collapse_salted
+from ..operators.lww import lww_collapse
 from .. import sources  # noqa: F401  (package coherence)
 
 
 def final_state(
     events: DataFrame,
     cfg: EngineConfig = DEFAULT_CONFIG,
-    salted: bool = False,
 ) -> DataFrame:
     """(repo, path, commit, lang, content, content_sha256, last_ts,
     last_tx_idx) for every live (non-deleted) key."""
     ev = apply_all_filters(events, cfg.denylist)
     extra = [c for c in ("stars",) if c in events.columns]
     ev = ev.select("repo", "path", "ts", "tx_idx", "op", "commit", "lang", "content", *extra)
-    collapse = lww_collapse_salted if salted else lww_collapse
-    winners = collapse(ev, key=("repo", "path"))
+    winners = lww_collapse(ev, key=("repo", "path"))
     live = winners.where(F.col("op") != F.lit("d"))
     return live.select(
         "repo",
@@ -47,7 +45,6 @@ def replay_events_path(
     spark: SparkSession,
     events_path: str,
     cfg: EngineConfig = DEFAULT_CONFIG,
-    salted: bool = False,
 ) -> DataFrame:
     events = spark.read.parquet(events_path)
-    return final_state(events, cfg, salted)
+    return final_state(events, cfg)

@@ -111,8 +111,10 @@ def get_spark(
         )
     except Exception:
         pass  # conf removed in a future Spark: coalescing stays default
-    # AQE coalesce floor history (Spark 4.1 ignores the deprecated
-    # minPartitionNum floor set above): r6.1 lowered minPartitionSize to
+    # AQE coalesce floor history (the minPartitionNum floor set above is
+    # deprecated but still honoured by Spark 4.1: with minPartitionSize at
+    # 1k, a 64-partition reduce on local[4] ran 64 tasks with the floor at
+    # 64, 19 at 16 and 5 with it unset): r6.1 lowered minPartitionSize to
     # 256k so small-bytes/CPU-heavy JVM stages (the embedding pair-verify's
     # 77.7 M interpreted cosines coalesced onto 4 of 32 cores) kept
     # ~defaultParallelism tasks. r6.2 moved those pair-verify stages into

@@ -100,7 +100,6 @@ def make_history_applier(
     merge_mode: str = "cow",
     late: str = "absorb",
     compact_min_dirs: int = 0,
-    prune: bool = True,
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch factory: maintain lake + SCD2 history log together.
 
@@ -238,8 +237,7 @@ def make_history_applier(
         finally:
             eff.unpersist()
         lake.merge_batch(
-            batch_df, batch_id, epoch_ns=epoch_ns, merge_mode=merge_mode,
-            prune=prune,
+            batch_df, batch_id, epoch_ns=epoch_ns, merge_mode=merge_mode
         )
         if compact_min_dirs and len(
             _live_dirs(history_dir, _applied_max(lake, epoch_ns))

@@ -63,7 +63,6 @@ class IcebergSinkPlanner:
         batch_id: int,
         extra_payload_cols: tuple[str, ...] = (),
         epoch_ns: str = "",
-        n_salts: int = 0,
     ) -> dict:
         epoch_key = f"{epoch_ns}:{batch_id}"
         if self.epoch_applied(epoch_ns, batch_id):

@@ -474,9 +474,9 @@ class LakeTable:
     COMMIT_RETRIES = 10
 
     #: adaptive pruning threshold: when the manifest's last TWO affected-
-    #: fraction measurements are both at least this, merge_batch(prune=True)
-    #: skips the per-epoch bucket-discovery job (driver-serial 2-stage job +
-    #: collect) and takes the dense posture; pruned epochs re-measure the
+    #: fraction measurements are both at least this, a CoW merge skips the
+    #: per-epoch bucket-discovery job (driver-serial 2-stage job + collect)
+    #: and takes the dense posture; discovery epochs re-measure the
     #: fraction exactly, dense ones estimate it balls-into-bins, so the
     #: policy is self-correcting in both directions (VERDICT r4 #2)
     ADAPTIVE_DENSE_FRAC = 0.6
@@ -487,6 +487,28 @@ class LakeTable:
     #: CoW rewrite — catastrophic at thousands of buckets, noise at 32. Above
     #: this bucket count the engine always runs discovery.
     ADAPTIVE_DENSE_MAX_BUCKETS = 64
+
+    def _dense_epoch(self, m: dict) -> bool:
+        """The CoW merge's one plan decision, from the manifest alone: True
+        = dense (read every bucket holding data, take the affected set from
+        the written ``pb=`` dirs, no discovery job); False = discover the
+        batch's buckets first and rewrite only those.
+
+        Dense when the table has no live buckets (a first merge: nothing to
+        prune or read, at any bucket count), or when the table is small
+        enough that a misprediction is cheap (``ADAPTIVE_DENSE_MAX_BUCKETS``)
+        and its last two affected-fraction measurements both say most
+        buckets were touched (``ADAPTIVE_DENSE_FRAC``). A stream that turns
+        sparse recalibrates the estimate and resumes discovery by itself.
+        """
+        live = len(m["buckets"])
+        if not live:
+            return True
+        fracs = (m.get("affected_frac") or 0.0, m.get("affected_frac_prev") or 0.0)
+        return (
+            live <= self.ADAPTIVE_DENSE_MAX_BUCKETS
+            and min(fracs) >= self.ADAPTIVE_DENSE_FRAC
+        )
 
     #: recent epoch keys kept verbatim in the manifest; older epochs are
     #: covered by the per-namespace high-watermark (ADVICE: manifest size and
@@ -1019,8 +1041,6 @@ class LakeTable:
         batch_id: int,
         extra_payload_cols: tuple[str, ...] = (),
         epoch_ns: str = "",
-        n_salts: int = 0,
-        prune: bool = True,
         merge_mode: str = "cow",
     ) -> dict:
         """Idempotent LWW upsert of a change batch.
@@ -1036,18 +1056,16 @@ class LakeTable:
         expressed as a full-outer join per key, which on a bucketed Iceberg
         table is exactly what MERGE INTO plans.
 
-        ``n_salts``: 0/1 = single-phase max_by — its map-side partial
-        aggregation already bounds a hot key's reducer fan-in to one partial
-        row per map task, which holds at any executor count. >1 enables the
-        two-phase salted reduce for merges whose combine step is NOT
-        algebraic (e.g. diff folding), where partial agg can't pre-collapse.
+        The collapse is a single-phase max_by: its map-side partial
+        aggregation bounds a hot key's reducer fan-in to one partial row per
+        map task, at any executor count.
 
-        ``prune``: True (default, the 100 TB posture) runs a column-pruned
-        discovery job so only affected buckets are read and rewritten.
-        False = single-job dense mode for tables whose batches touch ~every
-        bucket anyway (small bucket counts / uniform keys): skips the
-        discovery job (one less serial driver round-trip per epoch), reads
-        the whole table, and derives the affected set from the written
+        The engine picks the CoW plan itself (:meth:`_dense_epoch`, from
+        the manifest): by default a column-pruned discovery job finds the
+        batch's buckets so only those are read and rewritten (the 100 TB
+        posture). A dense epoch — an empty table, or a small table whose
+        recent epochs touched most buckets — skips that job, reads every
+        bucket holding data, and derives the affected set from the written
         partition dirs — valid because a touched bucket always has ≥1
         output row (tombstones persist; rows never vanish in a merge).
 
@@ -1106,7 +1124,7 @@ class LakeTable:
             try:
                 return self._apply_epoch(
                     batch, batch_id, epoch_key, epoch_ns, extra_payload_cols,
-                    n_salts, prune, merge_mode,
+                    merge_mode,
                 )
             except ConcurrentCommitError as e:
                 last_err = e
@@ -1213,8 +1231,6 @@ class LakeTable:
             "hist_bucket": hist_bucket,
             "hist_aggs": hist_aggs,
             "conform_cols": conform_cols,
-            "order": order,
-            "pay": pay,
             "collapse_aggs": [
                 F.max_by(pay, order).alias("_w"),
                 F.max((~F.col("_is_tgt")).cast("int")).alias("_had_src"),
@@ -1260,8 +1276,6 @@ class LakeTable:
         epoch_key: str,
         epoch_ns: str,
         extra_payload_cols: tuple[str, ...],
-        n_salts: int,
-        prune: bool = True,
         merge_mode: str = "cow",
     ) -> dict:
         t0 = time.time()
@@ -1306,72 +1320,42 @@ class LakeTable:
             src = src.select(*cx["conform_cols"])
 
         # ---- manifest-level partition pruning: touch only affected buckets.
-        # Derived from the RAW batch (cheap scan), not from src: every key's
+        # ONE flag picks the plan. A dense epoch runs no discovery job and
+        # takes its affected set from the written pb= dirs: merge-on-read
+        # always (no target read at all — the batch's collapsed winners
+        # append as a delta), CoW when _dense_epoch says so from the
+        # manifest. Otherwise discovery derives the affected set from the
+        # RAW batch (cheap column-pruned scan), not from src: every key's
         # winner lives in the same bucket as its events, and computing it
         # from src would run the whole LWW collapse once for this collect
         # and again for the write (measured 2x batch cost).
         t_plan = time.time()
-        adaptive_dense = False
-        empty_table_dense = False
+        dense = merge_mode == "mor" or self._dense_epoch(m)
+        tgt = None
         if merge_mode == "mor":
-            # merge-on-read: NO target read, NO discovery job — the batch's
-            # collapsed winners append as a delta; the affected set is
-            # derived from the written partition dirs (as in dense mode)
-            affected = None
-            tgt = None
-            t_affected = t_tgt = time.time()
-        elif prune:
-            # ADAPTIVE pruning (VERDICT r4 #2): the discovery job is a
-            # per-epoch driver-serial term (a 2-stage job + collect) that
-            # buys nothing when batches touch most buckets anyway. The
-            # manifest carries a running affected-fraction estimate — exact
-            # in pruned epochs, balls-into-bins (1 - exp(-applied/live)) in
-            # dense ones — and when the last TWO measurements both say
-            # dense AND the table is small enough that a misprediction is
-            # cheap (see ADAPTIVE_DENSE_MAX_BUCKETS), the epoch skips
-            # discovery and reads every live bucket; a stream that turns
-            # sparse recalibrates and resumes pruning by itself (pinned in
-            # tests/test_lake.py).
-            live = sorted(int(b) for b in m["buckets"])
-            fracs = ((m.get("affected_frac") or 0.0), (m.get("affected_frac_prev") or 0.0))
-            if (
-                live
-                and len(live) <= self.ADAPTIVE_DENSE_MAX_BUCKETS
-                and min(fracs) >= self.ADAPTIVE_DENSE_FRAC
-            ):
-                affected = live
-                adaptive_dense = True
-            elif not live:
-                # EMPTY table (first epoch): there is nothing to prune and
-                # nothing to read, so the discovery job's only product —
-                # the affected set — is cheaper derived from the written
-                # partition dirs, exactly like dense mode (drops a 2-stage
-                # job + collect from every table's first merge; guide §2.4).
-                # Distinct from the adaptive-dense heuristic: this branch
-                # needs no history and holds at ANY bucket count (the write
-                # width is capped below, so a sparse first batch into a
-                # many-bucket table never fans out to n_buckets tasks).
-                affected = None
-                empty_table_dense = True
-            else:
-                affected = sorted(
-                    r.b for r in batch_ok.select(cx["bucket_b"]).distinct().collect()
-                )
+            affected = []
+        elif dense:
+            # every bucket holding data — bases and merge-on-read deltas
+            # alike (a delta-only bucket the batch touches must be read, or
+            # its rewrite drops the delta's rows); none on an empty table
+            deltas = m.get("bucket_deltas", {})
+            affected = sorted(
+                {int(b) for b in m["buckets"]}
+                | {int(b) for b, ds in deltas.items() if ds}
+            )
         else:
-            # dense mode: no discovery job; the true affected set is derived
-            # from the written partition dirs after the merge action
-            affected = sorted(int(b) for b in m["buckets"]) or None
+            affected = sorted(
+                r.b for r in batch_ok.select(cx["bucket_b"]).distinct().collect()
+            )
+        t_affected = time.time()
         if merge_mode != "mor":
-            t_affected = time.time()
             # read() always emits exactly the manifest schema, so the target
             # needs conforming only when this batch evolves the schema — the
             # steady state skips a per-epoch analysis round-trip
             tgt = self.read(spark, include_deleted=True, buckets=affected)
             if new_schema.json() != m["schema"]:
                 tgt = conform_to_schema(tgt, new_schema)
-            t_tgt = time.time()
-            if affected is None:
-                affected = []  # empty table: nothing to prune, nothing to read
+        t_tgt = time.time()
 
         # ---- the LWW MERGE as ONE union + aggregate (single shuffle) ----
         # Existing rows and batch events union into one stream of candidate
@@ -1399,13 +1383,7 @@ class LakeTable:
         # partial aggregation (partial_max_by, verified in BENCH/PLANS.md)
         # already bounds a hot key's reducer fan-in to ONE partial row per
         # map task — at 1000 executors a hot repo costs the reducer
-        # O(map tasks), not O(events). The optional two-phase salted reduce
-        # (n_salts > 1) spreads a hot key over n_salts reducers first; it is
-        # for merges whose combine step is not algebraic (diff folding) —
-        # for this LWW merge it adds a full extra exchange+sort (measured
-        # ~35% of epoch wall time) for no additional bound.
-        order = cx["order"]
-        pay = cx["pay"]
+        # O(map tasks), not O(events), so no salted pre-reduce is needed.
         # Write width: one task per touched bucket up to one per core, so
         # the write runs in one wave. The 4 x cores width used before ran
         # 16 write tasks for ~3 MB of shuffle on 4 cores, each paying
@@ -1415,43 +1393,23 @@ class LakeTable:
         nb_eff = len(affected) if affected else n_buckets
         cores = spark.sparkContext.defaultParallelism
         width = min(nb_eff, cores)
-        if n_salts and n_salts > 1:
-            salted = u.withColumn(
-                "_salt",
-                F.pmod(F.xxhash64(F.col("last_ts"), F.col("last_tx_idx")), F.lit(n_salts)),
-            )
-            p1 = salted.groupBy(*key, "_salt").agg(
-                F.max_by(pay, order).alias("_w"),
-                F.max((~F.col("_is_tgt")).cast("int")).alias("_had_src"),
-            )
-            p2 = p1.groupBy(*key).agg(
-                F.max_by(
-                    F.col("_w"),
-                    F.struct(F.col("_w.last_ts"), F.col("_w.last_tx_idx"), F.col("_w._is_tgt").cast("int")),
-                ).alias("_w"),
-                F.max("_had_src").alias("_had_src"),
-            )
-            one_shuffle = False
+        # Single-payload-shuffle plan (guide §8): ``bucket`` is recomputed
+        # from the key on both sides of the union (see above), so
+        # hash-partitioning by bucket co-locates each key, and a groupBy on
+        # (bucket, *key) is satisfied by that partitioning (subset rule)
+        # with NO second exchange — the bucketed write below then reuses
+        # the same layout, so the full payload crosses the wire ONCE
+        # instead of key-collapse + bucket-repartition. Only taken when the
+        # touched bucket count keeps reduce parallelism at or above the
+        # core count (a 100 TB table has thousands of buckets, so this IS
+        # the production branch); small-bucket fixtures keep the two-step
+        # plan whose collapse runs at full session width.
+        one_shuffle = nb_eff >= cores
+        if one_shuffle:
+            u = u.repartition(width, F.col("bucket"))
+            p2 = u.groupBy("bucket", *key).agg(*cx["collapse_aggs"])
         else:
-            # Single-payload-shuffle plan (guide §8): ``bucket`` is
-            # recomputed from the key on both sides of the union (see
-            # above), so hash-partitioning by bucket co-locates
-            # each key, and a groupBy on (bucket, *key) is satisfied by
-            # that partitioning (subset rule) with NO second exchange — the
-            # bucketed write below then reuses the same layout, so the full
-            # payload crosses the wire ONCE instead of key-collapse +
-            # bucket-repartition. Only taken when the touched bucket count
-            # keeps reduce parallelism at or above the core count (a
-            # 100 TB table has thousands of buckets, so this IS the
-            # production branch); small-bucket fixtures keep the two-step
-            # plan whose collapse runs at full session width.
-            if nb_eff >= cores:
-                u = u.repartition(width, F.col("bucket"))
-                p2 = u.groupBy("bucket", *key).agg(*cx["collapse_aggs"])
-                one_shuffle = True
-            else:
-                p2 = u.groupBy(*key).agg(*cx["collapse_aggs"])
-                one_shuffle = False
+            p2 = u.groupBy(*key).agg(*cx["collapse_aggs"])
         merged = p2.select(*cx["merged_cols"])
         # metrics ride the same pass via observe() — no second job
         # (reference metrics analogue, SURVEY.md §2 M1; lib/redispub/publisher.go:64-114)
@@ -1469,7 +1427,7 @@ class LakeTable:
         rel_dir = f"{prefix}/v{new_version:08d}-{uuid.uuid4().hex[:8]}"
         out_dir = os.path.join(self.path, rel_dir)
         t_write0 = time.time()
-        if merge_mode == "mor" or affected or not prune or empty_table_dense:
+        if dense or affected:
             to_write = merged.withColumn("pb", F.col("bucket"))
             if not one_shuffle:
                 to_write = to_write.repartition(width, F.col("pb"))
@@ -1480,7 +1438,7 @@ class LakeTable:
             written = sorted(
                 int(d[3:]) for d in os.listdir(out_dir) if d.startswith("pb=")
             )
-            if merge_mode == "mor" or not prune or adaptive_dense or empty_table_dense:
+            if dense:
                 affected = written
             elif not set(written) <= set(affected):
                 # a row read from a touched bucket hashes to an untouched
@@ -1616,7 +1574,7 @@ class LakeTable:
         else:
             if not live_before:
                 affected_frac = 1.0  # fresh table: first real epoch is dense
-            elif adaptive_dense or not prune:
+            elif dense:
                 import math as _math
 
                 applied_n = int(metrics.get("applied") or 0)
@@ -1668,7 +1626,8 @@ class LakeTable:
             "epoch_key": epoch_key,
             "version": new_version,
             "merge_mode": merge_mode,
-            "adaptive_dense": adaptive_dense,
+            # dense chosen from history (not merely an empty table)
+            "adaptive_dense": dense and merge_mode != "mor" and live_before > 0,
             "affected_buckets": len(affected),
             "unprocessable_in": n_dead,
             "schema_evolved": new_schema.json() != m["schema"],

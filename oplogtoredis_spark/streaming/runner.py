@@ -38,7 +38,6 @@ def make_batch_applier(
     fail_before_batch: int | None = None,
     epoch_ns: str = "",
     sink_factory=LakeTable,
-    merge_prune: bool = True,
     merge_mode: str = "cow",
     compact_min_deltas: int | None = None,
     wap_checks: list | None = None,
@@ -91,7 +90,7 @@ def make_batch_applier(
     # manifest; every epoch re-reads it anyway).
     sink = sink_factory(table_path)
     # isinstance, not identity: a LakeTable SUBCLASS must keep the caller's
-    # merge_mode/prune/compaction knobs instead of silently dropping them
+    # merge_mode/compaction knobs instead of silently dropping them
     is_lake = isinstance(sink, LakeTable)
     if not is_lake and (
         merge_mode != "cow"
@@ -111,9 +110,7 @@ def make_batch_applier(
             raise RuntimeError(f"injected failure before batch {batch_id}")
         seen["n"] += 1
         table = sink
-        kw = (
-            {"prune": merge_prune, "merge_mode": merge_mode} if is_lake else {}
-        )
+        kw = {"merge_mode": merge_mode} if is_lake else {}
         if wap_checks:
             from .wap import wap_merge
 
@@ -268,7 +265,6 @@ def start_stream(
     dedup_within_watermark: bool = False,
     sink_factory=None,
     source_format: str = "parquet",
-    merge_prune: bool = True,
     merge_mode: str = "cow",
     compact_min_deltas: int | None = None,
     dq_checks: list | None = None,
@@ -350,7 +346,6 @@ def start_stream(
         fail_before_batch,
         epoch_ns=epoch_ns,
         sink_factory=sink_factory,
-        merge_prune=merge_prune,
         merge_mode=merge_mode,
         compact_min_deltas=compact_min_deltas,
         rebucket_target_bytes=rebucket_target_bytes,

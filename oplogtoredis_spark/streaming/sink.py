@@ -56,7 +56,6 @@ class UpsertSink(Protocol):
         batch_id: int,
         extra_payload_cols: tuple[str, ...] = (),
         epoch_ns: str = "",
-        n_salts: int = 0,
     ) -> dict: ...
 
     def read(
@@ -102,7 +101,6 @@ class InMemorySink:
         batch_id: int,
         extra_payload_cols: tuple[str, ...] = (),
         epoch_ns: str = "",
-        n_salts: int = 0,
     ) -> dict:
         epoch_key = f"{epoch_ns}:{batch_id}"
         if self.epoch_applied(epoch_ns, batch_id):

@@ -142,18 +142,19 @@ shutil.rmtree(work, ignore_errors=True)
 # steady-state dense variant: the same end-to-end apply with (a) streaming
 # codegen/infra warmed by a 2-file prologue run (cold JVM compile is a
 # constant serial term identical at both levels — excluded so the metric is
-# steady-state throughput) and (b) merge_batch dense mode (prune=False: no
-# bucket-discovery job; this 16-bucket log touches every bucket per epoch)
+# steady-state throughput) and (b) ~8 epochs whose dense history lets
+# merge_batch skip the bucket-discovery job (this 16-bucket log touches
+# every bucket per epoch)
 warm = f"/dev/shm/otr_scaling_warm_{cpus}"
 shutil.rmtree(warm, ignore_errors=True)
 run_to_completion(spark, events, warm + "/tbl", warm + "/ckpt", cfg,
-                  max_files_per_trigger=2, merge_prune=False)
+                  max_files_per_trigger=2)
 shutil.rmtree(warm, ignore_errors=True)
 c4, r4 = stage_totals()
 shutil.rmtree(work, ignore_errors=True)
 t0 = time.time()
 run_to_completion(spark, events, work + "/tbl", work + "/ckpt", cfg,
-                  max_files_per_trigger=max(4, nf // 8), merge_prune=False)
+                  max_files_per_trigger=max(4, nf // 8))
 out["stream_dense"] = round(time.time() - t0, 2)
 c5, r5 = stage_totals()
 out["stream_dense_cpu_s"], out["stream_dense_run_s"] = round(c5 - c4, 1), round(r5 - r4, 1)
@@ -179,7 +180,7 @@ shutil.rmtree(work, ignore_errors=True)
 # wall-efficiency shortfall is the per-epoch Amdahl term, not the engine.
 t0 = time.time()
 run_to_completion(spark, events, work + "/tbl", work + "/ckpt", cfg,
-                  max_files_per_trigger=max(1, nf // 3), merge_prune=False)
+                  max_files_per_trigger=max(1, nf // 3))
 out["stream_bigepoch"] = round(time.time() - t0, 2)
 c6, r6 = stage_totals()
 out["stream_bigepoch_cpu_s"], out["stream_bigepoch_run_s"] = round(c6 - c5, 1), round(r6 - r5, 1)
@@ -357,9 +358,9 @@ def write_baseline_md() -> None:
     job_title = {
         "batch": "CDC batch replay",
         "kernel": "per-event transform kernel (T6 deep changed-fields)",
-        "stream": "CDC streaming apply (cold, pruned merge)",
-        "stream_dense": "CDC streaming apply (steady-state, dense merge)",
-        "stream_bigepoch": "CDC streaming apply (dense, ~3 production-sized epochs)",
+        "stream": "CDC streaming apply (cold)",
+        "stream_dense": "CDC streaming apply (steady-state, warm)",
+        "stream_bigepoch": "CDC streaming apply (~3 production-sized epochs)",
     }
     ALL_JOBS = ("batch", "kernel", "stream", "stream_dense", "stream_bigepoch")
     sections = []
@@ -512,8 +513,8 @@ and the per-run load stamps ride in BENCH_scaling_2x8.json.
 The engine-side serial cost: single-phase merge (ONE payload shuffle on
 wide tables), schema-id fast-path read, no second batch scan, O(1)
 manifest commit, batch-invariant merge expressions cached across epochs;
-`merge_batch(prune=False)` additionally drops the bucket-discovery job
-for dense tables and empty-table first merges skip it automatically.
+the engine skips the bucket-discovery job on empty-table first merges and
+on small tables whose recent epochs touched most buckets.
 
 Caveats: single shared machine — no network shuffle, shared memory
 bandwidth/page cache, foreign tenant load. Discrete executors on a real

@@ -3,6 +3,11 @@ DuckDB — row count, schema (column names), and order-insensitive values —
 exactly what the driver records into CORRECTNESS_r{N}.json, run at sf0.001
 for speed (the driver runs sf0.01)."""
 
+import json
+import os
+import subprocess
+import sys
+
 import duckdb
 import pandas as pd
 import pytest
@@ -64,3 +69,31 @@ def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     assert df.count() > 0
     assert "user_id" in df.columns and "pkey" in df.columns
+
+
+def test_scratch_dirs_removed_at_exit(tmp_path):
+    """Fixture scratch made by _scratch_dir goes away when the process
+    exits; the shared base dir and dirs the process did not make stay."""
+    base = tmp_path / "scratch"
+    foreign = base / "not_made_here"
+    foreign.mkdir(parents=True)
+    root = os.path.dirname(os.path.abspath(entry_mod.__file__))
+    child = (
+        "import json, os, sys\n"
+        f"sys.path.insert(0, {root!r})\n"
+        "import __spark_entry__ as e\n"
+        "made = [e._scratch_dir('otr_a_'), e._scratch_dir('otr_b_')]\n"
+        "os.makedirs(os.path.join(made[0], 'tbl', 'pb=0'))\n"
+        "print(json.dumps(made))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", child],
+        env={**os.environ, "OTR_SCRATCH_DIR": str(base)},
+        capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    made = json.loads(out.stdout.strip().splitlines()[-1])
+    assert len(made) == 2
+    assert all(os.path.dirname(d) == str(base) for d in made)
+    assert not any(os.path.exists(d) for d in made)
+    assert base.is_dir() and foreign.is_dir()

@@ -195,31 +195,118 @@ def test_merge_quarantines_unprocessable_rows(spark, tmp_path):
     assert rec and rec[0]["unprocessable_in"] == 2
 
 
-def test_dense_merge_mode_matches_pruned(spark, tmp_path):
-    """prune=False (single-job dense mode) must produce the identical table
-    state and manifest bookkeeping as the default pruned merge."""
+def _manifest(n_live, frac=None, frac_prev=None):
+    return {
+        "buckets": {str(b): f"data/v1/pb={b}" for b in range(n_live)},
+        "affected_frac": frac,
+        "affected_frac_prev": frac_prev,
+    }
+
+
+@pytest.mark.parametrize(
+    "n_live, frac, frac_prev, dense",
+    [
+        (0, None, None, True),  # empty table: dense at any bucket count
+        (0, 0.0, 0.0, True),
+        (8, 1.0, None, False),  # one high fraction: discover
+        (8, None, 1.0, False),
+        (8, 0.9, 0.59, False),  # one below ADAPTIVE_DENSE_FRAC
+        (8, 0.6, 0.6, True),  # two high fractions at <= cap: dense
+        (LakeTable.ADAPTIVE_DENSE_MAX_BUCKETS, 1.0, 1.0, True),
+        (LakeTable.ADAPTIVE_DENSE_MAX_BUCKETS + 1, 1.0, 1.0, False),  # above cap
+    ],
+)
+def test_dense_epoch_decision(tmp_path, n_live, frac, frac_prev, dense):
+    """The merge's one plan decision is a pure function of the manifest."""
+    t = LakeTable(str(tmp_path / "unused"))
+    assert t._dense_epoch(_manifest(n_live, frac, frac_prev)) is dense
+
+
+def test_dense_merge_mode_matches_pruned(spark, tmp_path, monkeypatch):
+    """A table whose dense history makes later epochs skip discovery must
+    reach the identical table state and merge bookkeeping as one that
+    discovers buckets on every epoch."""
     from pyspark.sql import functions as F
 
     from oplogtoredis_spark.sources.generator import generate_events
 
     ev = generate_events(n_events=1000, n_repos=15, seed=61)
     sdf = spark.createDataFrame(ev)
-    halves = [sdf.where(F.col("seq") < 500), sdf.where(F.col("seq") >= 500)]
+    quarters = [
+        sdf.where((F.col("seq") >= lo) & (F.col("seq") < lo + 250))
+        for lo in range(0, 1000, 250)
+    ]
 
-    tables = {}
-    for mode, prune in (("pruned", True), ("dense", False)):
+    tables, stats = {}, {}
+    for mode in ("pruned", "dense"):
         t = LakeTable.create(str(tmp_path / mode), TARGET_SCHEMA, n_buckets=8)
-        for i, h in enumerate(halves):
-            t.merge_batch(h, i, epoch_ns=mode, prune=prune)
+        if mode == "pruned":
+            # cap 0: no non-empty table is small enough to go dense
+            monkeypatch.setattr(t, "ADAPTIVE_DENSE_MAX_BUCKETS", 0)
+        stats[mode] = [
+            t.merge_batch(q, i, epoch_ns=mode) for i, q in enumerate(quarters)
+        ]
         tables[mode] = t
 
-    a = tables["pruned"].read(spark).toPandas().sort_values(["repo", "path"]).reset_index(drop=True)
-    b = tables["dense"].read(spark).toPandas().sort_values(["repo", "path"]).reset_index(drop=True)
-    assert a.equals(b)
-    # dense mode still records per-bucket lineage and replay bookkeeping
-    assert tables["dense"].epoch_applied("dense", 1)
-    rec = [x for x in tables["dense"].lineage() if x.get("bucket_rows")]
-    assert rec and sum(rec[-1]["bucket_rows"].values()) == rec[-1]["rows_out"]
+    def state(t):
+        return (
+            t.read(spark, include_deleted=True).toPandas()
+            .sort_values(["repo", "path"]).reset_index(drop=True)
+        )
+
+    assert state(tables["pruned"]).equals(state(tables["dense"]))
+    assert sorted(tables["pruned"].manifest()["buckets"]) == sorted(
+        tables["dense"].manifest()["buckets"]
+    )
+    for k in ("applied", "dedup_hits", "deletes"):
+        assert [s[k] for s in stats["pruned"]] == [s[k] for s in stats["dense"]]
+    # each side took its path: lineage records the plan of every epoch
+    lin = {m: [r for r in tables[m].lineage() if "adaptive_dense" in r]
+           for m in tables}
+    assert [r["adaptive_dense"] for r in lin["pruned"]] == [False] * 4
+    # epoch 0 is an empty table, epoch 1 has one dense measurement on
+    # record; from epoch 2 on, two dense measurements skip discovery
+    assert [r["adaptive_dense"] for r in lin["dense"]] == [False, False, True, True]
+    assert lin["dense"][-1]["affected_buckets"] == len(tables["dense"].manifest()["buckets"])
+    # dense epochs still record per-bucket lineage and replay bookkeeping
+    assert tables["dense"].epoch_applied("dense", 3)
+    assert sum(lin["dense"][-1]["bucket_rows"].values()) == lin["dense"][-1]["rows_out"]
+
+
+def test_dense_epoch_reads_delta_only_buckets(spark, tmp_path):
+    """A dense CoW epoch rewrites every bucket it writes from a target read
+    that must include merge-on-read deltas in buckets with no base yet;
+    otherwise the rewrite drops the delta's rows."""
+    from pyspark.sql import functions as F
+
+    from oplogtoredis_spark.functions.routing import bucket_for
+
+    t = LakeTable.create(str(tmp_path / "t"), TARGET_SCHEMA, n_buckets=8)
+    cands = spark.createDataFrame(
+        [("org/r", f"f{i}.py") for i in range(64)], "repo string, path string"
+    )
+    by_bucket = {}
+    for r in cands.select("path", bucket_for(F.col("repo"), F.col("path"), 8)
+                          .alias("b")).collect():
+        by_bucket.setdefault(r.b, []).append(r.path)
+    base_b, delta_b = sorted(b for b in by_bucket if len(by_bucket[b]) >= 2)[:2]
+    a, k1, k2 = by_bucket[base_b][0], *by_bucket[delta_b][:2]
+
+    def row(path, ts, content):
+        return ("org/r", path, ts << 32, 0, "i", "c", "py", content)
+
+    # two CoW epochs on one bucket: two dense measurements on record
+    t.merge_batch(_batch(spark, [row(a, 1, "a1")]), 0, epoch_ns="s")
+    t.merge_batch(_batch(spark, [row(a, 2, "a2")]), 1, epoch_ns="s")
+    # a merge-on-read delta lands in a bucket that has no base
+    t.merge_batch(_batch(spark, [row(k1, 3, "k1")]), 2, epoch_ns="s",
+                  merge_mode="mor")
+    assert str(delta_b) not in t.manifest()["buckets"]
+    # the next CoW epoch is dense and writes that bucket
+    s = t.merge_batch(_batch(spark, [row(k2, 4, "k2")]), 3, epoch_ns="s")
+    assert s["adaptive_dense"] is True
+    got = {r.path: r.content for r in t.read(spark).collect()}
+    assert got == {a: "a2", k1: "k1", k2: "k2"}
 
 
 def test_concurrent_commit_detected(spark, tmp_path):
@@ -501,7 +588,7 @@ def test_entry_size_histogram_in_lineage(spark, tmp_path):
 
 def test_adaptive_pruning_dense_skips_discovery_sparse_resumes(spark, tmp_path):
     """VERDICT r4 #2 serial-term fix: after TWO consecutive dense
-    measurements on a small table, merge_batch(prune=True) skips the
+    measurements on a small table, merge_batch skips the
     per-epoch bucket-discovery job (adaptive_dense in lineage); a sparse
     epoch recalibrates the estimate (balls-into-bins from the applied
     count) and the NEXT epoch prunes again with a small affected set —

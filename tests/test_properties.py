@@ -9,7 +9,7 @@ import pandas as pd
 from hypothesis import HealthCheck, given, settings, strategies as st
 
 from oplogtoredis_spark.operators.fold import _apply_modifier
-from oplogtoredis_spark.operators.lww import lww_collapse, lww_collapse_salted
+from oplogtoredis_spark.operators.lww import lww_collapse
 
 
 def _mk_events(spark, rows):
@@ -50,10 +50,9 @@ def test_lww_collapse_order_invariant_and_duplicate_absorbing(spark, rows, seed)
     shuffled = list(rows)
     random.Random(seed).shuffle(shuffled)
     dup = shuffled + shuffled[: len(shuffled) // 2]  # replayed prefix (HA)
-    for variant in (lww_collapse, lww_collapse_salted):
-        out = variant(_mk_events(spark, dup), key=("repo", "path")).collect()
-        got = {(r.repo, r.path): (r.ts, r.tx_idx) for r in out}
-        assert got == _oracle_lww(rows)
+    out = lww_collapse(_mk_events(spark, dup), key=("repo", "path")).collect()
+    got = {(r.repo, r.path): (r.ts, r.tx_idx) for r in out}
+    assert got == _oracle_lww(rows)
 
 
 # ---------------------------------------------------------------------------

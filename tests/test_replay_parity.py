@@ -17,22 +17,15 @@ DENY = ("denied_org/repo0", "denied_org/repo1")
 CFG = EngineConfig(denylist=DENY)
 
 
-def _spark_state(spark, events_pd: pd.DataFrame, salted: bool) -> pd.DataFrame:
+def _spark_state(spark, events_pd: pd.DataFrame) -> pd.DataFrame:
     sdf = spark.createDataFrame(events_pd)
-    return final_state(sdf, CFG, salted=salted).toPandas()
+    return final_state(sdf, CFG).toPandas()
 
 
 def test_batch_replay_matches_oracle(spark, small_events):
     oracle = replay_oracle(small_events, DENY)
-    engine = _spark_state(spark, small_events, salted=False)
+    engine = _spark_state(spark, small_events)
     assert len(engine) == len(oracle) > 0
-    assert_parity(engine, oracle)
-
-
-def test_salted_replay_identical(spark, small_events):
-    """Two-phase skew-mitigated reduction must be semantically invisible."""
-    oracle = replay_oracle(small_events, DENY)
-    engine = _spark_state(spark, small_events, salted=True)
     assert_parity(engine, oracle)
 
 
@@ -43,13 +36,13 @@ def test_duplicates_and_late_arrivals_collapse(spark):
         dup_frac=0.3, late_frac=0.4, late_window=200,
     )
     oracle = replay_oracle(ev, DENY)
-    engine = _spark_state(spark, ev, salted=False)
+    engine = _spark_state(spark, ev)
     assert_parity(engine, oracle)
 
 
 def test_filters_drop_junk(spark, small_events):
     """Denylist, config repo, system.* paths and 'c' ops never reach the state."""
-    engine = _spark_state(spark, small_events, salted=False)
+    engine = _spark_state(spark, small_events)
     assert not engine["repo"].isin(DENY).any()
     assert not (engine["repo"] == "config").any()
     assert not engine["path"].str.startswith("system.").any()
@@ -67,7 +60,7 @@ def test_transaction_tx_idx_tiebreak(spark):
     ]
     cols = ["seq", "ts", "tx_idx", "wall", "op", "repo", "path", "commit", "lang", "content", "diff"]
     ev = pd.DataFrame(rows, columns=cols)
-    engine = _spark_state(spark, ev, salted=False)
+    engine = _spark_state(spark, ev)
     assert len(engine) == 1
     assert engine.iloc[0]["content"] == "v2"
     assert engine.iloc[0]["last_tx_idx"] == 2
@@ -108,5 +101,5 @@ def test_winning_delete_removes_row(spark):
     ]
     cols = ["seq", "ts", "tx_idx", "wall", "op", "repo", "path", "commit", "lang", "content", "diff"]
     ev = pd.DataFrame(rows, columns=cols)
-    engine = _spark_state(spark, ev, salted=False)
+    engine = _spark_state(spark, ev)
     assert list(engine["repo"]) == ["r/b"]
