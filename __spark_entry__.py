@@ -18,7 +18,7 @@ from collections.abc import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from oplogtoredis_spark.functions.hashing import (
     MERSENNE31,
@@ -27,6 +27,7 @@ from oplogtoredis_spark.functions.hashing import (
     N_MINHASH,
 )
 from oplogtoredis_spark.functions.routing import assign_to_shard, sha256_le_int64
+from oplogtoredis_spark.session import scoped_shuffle_partitions
 
 SF_DEFAULT = "/root/testdata/sf0.001"
 
@@ -137,7 +138,7 @@ def _dump_split_stream_dir(
     sub: str,
     order_col: str,
     extra_second: DataFrame | None = None,
-) -> str:
+) -> tuple[str, int]:
     """Streaming-fixture dump, SPARK-NATIVE (guide §5; VERDICT r5 #3): two
     time-ordered parquet files under ``base/sub`` — earlier half of
     ``order_col`` in 00.parquet, the rest (plus ``extra_second``, e.g.
@@ -148,10 +149,13 @@ def _dump_split_stream_dir(
     sort per key per batch), so only the CROSS-batch time ordering matters,
     which the threshold split guarantees. Replaces the r5 driver-side
     ``toPandas`` dump that materialized every row on the driver (a 100×
-    driver OOM; also ~seconds of serialize at sf1.0)."""
+    driver OOM; also ~seconds of serialize at sf1.0). Returns the dir and
+    the rows written, read from the two files' footers."""
     import glob
     import shutil
     import time as _t
+
+    from oplogtoredis_spark.streaming.lake import footer_rows
 
     m = df.approxQuantile(order_col, [0.5], 0.01)[0]
     d = f"{base}/{sub}"
@@ -159,6 +163,7 @@ def _dump_split_stream_dir(
     halves = [df.where(F.col(order_col) <= m), df.where(F.col(order_col) > m)]
     if extra_second is not None:
         halves[1] = halves[1].unionByName(extra_second)
+    rows = 0
     for i, h in enumerate(halves):
         tmp = f"{base}/_tmp_{sub}_{i}"
         h.coalesce(1).write.mode("overwrite").parquet(tmp)
@@ -168,56 +173,120 @@ def _dump_split_stream_dir(
         shutil.rmtree(tmp, ignore_errors=True)
         t0 = _t.time() - 100 + i
         os.utime(p, (t0, t0))
-    return d
+        rows += footer_rows(p)
+    return d, rows
 
 
-import contextlib as _contextlib  # noqa: E402
-
-
-@_contextlib.contextmanager
-def _stream_state_parallelism(spark: SparkSession, width: int | None = None):
-    """Scope shuffle partitions to the core count — or an explicit
-    data-scaled ``width`` — for an availableNow stateful replay
-    (set/restore — same discipline as SemanticCorpus's
-    _epoch_shuffle_scale). A fresh stream checkpoint pins its state-store
-    partition count from this conf: the session's batch-analytics reduce
-    width (128) would schedule 128 state tasks per micro-batch per
-    stateful operator, ~4× task-launch overhead for identical results
-    (state operators are keyed per row; partition count never affects
-    emitted rows). Each stream-stream-join state partition additionally
-    carries ~4 state-store instances with a large FIXED load/commit cost
-    per micro-batch (measured on the interval join at sf1.0: 8 parts
-    3.7 s, 32 parts 10.7 s, 64 parts 20 s — near-linear in partition
-    count), so stateful fixtures pass ``width`` derived from their feed
-    size via :func:`_stateful_width`. Never a constant — core count and
-    feed rows both scale it."""
-    key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key)
-    spark.conf.set(
-        key, str(width or spark.sparkContext.defaultParallelism)
-    )
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
-
-
-def _stateful_width(
-    spark: SparkSession, *dump_dirs: str, target_rows: int = 64_000
-) -> int:
-    """Data-scaled state-partition count for a stateful availableNow
-    replay: ceil(total feed rows / target_rows), clamped to [2, core
-    count]. Row totals come from the parquet footers of the already-
-    written stream fixture dirs — driver-side metadata, no Spark job."""
-    import pyarrow.parquet as pq
-
-    total = 0
-    for d in dump_dirs:
-        for f in os.listdir(d):
-            if f.endswith(".parquet"):
-                total += pq.ParquetFile(os.path.join(d, f)).metadata.num_rows
+def _stateful_width(spark: SparkSession, rows: int) -> int:
+    """State-partition count for a JVM-stateful availableNow replay:
+    ceil(feed rows / 64k), clamped to [2, core count]. Each
+    stream-stream-join state partition carries ~4 state-store instances
+    with a large FIXED load/commit cost per micro-batch (interval join at
+    sf1.0: 8 parts 3.7 s, 32 parts 10.7 s, 64 parts 20 s — near-linear in
+    partition count), and state operators are keyed per row, so the
+    partition count never changes emitted rows."""
     cores = spark.sparkContext.defaultParallelism
-    return max(2, min(cores, -(-total // target_rows)))
+    return max(2, min(cores, -(-rows // 64_000)))
+
+
+def _run_stream(
+    spark: SparkSession,
+    base: str,
+    feeds: list[tuple[str, str]],
+    transform: Callable[..., DataFrame],
+    width: int,
+) -> DataFrame:
+    """Run ``transform`` over stream-fixture feeds ``[(dir, schema), ...]``
+    (one stream each, passed in order) as ONE availableNow query at
+    ``width`` shuffle/state partitions, one file per micro-batch. Output
+    goes to a parquet file sink under ``base`` and is read back with the
+    stream's own schema: a memory sink would collect every row into the
+    driver and leave a temp view behind, and an inferred read-back fails
+    when the stream emits nothing."""
+    streams = [
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(d)
+        for d, schema in feeds
+    ]
+    out = transform(*streams)
+    with scoped_shuffle_partitions(spark, width):
+        (
+            out.writeStream.format("parquet")
+            .option("path", f"{base}/out")
+            .outputMode("append")
+            .option("checkpointLocation", f"{base}/ck")
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+    return spark.read.schema(out.schema).parquet(f"{base}/out")
+
+
+def _env(df: DataFrame, ts, op="u", key: str = "doc_id", **cols: Column) -> DataFrame:
+    """Change envelopes over ``df`` (TARGET_SCHEMA columns, in order).
+    Defaults are the documents recipe: repo 'docs', ``key`` as path and
+    tx_idx, commit ``c{ts}`` at event time ``ts << 32``, lang and content
+    from the lang/text columns. A Column ``ts`` or ``op`` is used as is;
+    ``cols`` replace envelope columns by name, and new names are appended."""
+    k = F.col(key)
+    env = {
+        "repo": F.lit("docs"),
+        "path": k.cast("string"),
+        "ts": ts if isinstance(ts, Column) else F.lit(ts << 32).cast("long"),
+        "tx_idx": k.cast("int"),
+        "op": op if isinstance(op, Column) else F.lit(op),
+        "commit": F.lit(f"c{ts}"),
+        "lang": F.col("lang"),
+        "content": F.col("text"),
+        **cols,
+    }
+    return df.select(*[c.alias(name) for name, c in env.items()])
+
+
+def _docs_lake(spark, sf_dir, prefix, n_buckets=None, follow=None, commit2=None, **env):
+    """The two-commit documents lake the lake fixtures share. Commit 1
+    writes two-thirds of the corpus (doc_id % 3 != 0), every 5th doc as a
+    DRAFT (' zz draft pending zz' appended), plus extra docs (every 7th
+    doc's text under doc_id + 1000000); commit 2 inserts the remaining
+    third, overwrites the drafts with their final text and deletes the
+    extras, so the final live set == the documents table. ``follow(t)``
+    runs after each commit (view and corpus folds); ``commit2`` transforms
+    commit 2's batch, whose columns past the envelope merge as payload;
+    ``env`` overrides envelope columns (:func:`_env`). Both commits run at
+    core-count width. Returns the LakeTable."""
+    from oplogtoredis_spark.sources.schemas import TARGET_SCHEMA
+    from oplogtoredis_spark.streaming.lake import LakeTable
+
+    cores = spark.sparkContext.defaultParallelism
+    docs = _docs(spark, sf_dir, par=True).select("doc_id", "text", "lang")
+    doc_id = F.col("doc_id")
+    first = docs.where(doc_id % 3 != 0)
+    drafts = first.where(doc_id % 5 == 0).withColumn(
+        "text", F.concat(F.col("text"), F.lit(" zz draft pending zz"))
+    )
+    extras = docs.where(doc_id % 7 == 0).select(
+        (doc_id + 1000000).alias("doc_id"), "text", "lang"
+    )
+    upserts = docs.where((doc_id % 3 == 0) | (doc_id % 5 == 0))
+    b1 = _env(
+        first.where(doc_id % 5 != 0).unionByName(drafts).unionByName(extras),
+        1,
+        **env,
+    )
+    b2 = _env(upserts, 2, **env).unionByName(_env(extras, 2, op="d", **env))
+    if commit2 is not None:
+        b2 = commit2(b2)
+    t = LakeTable.create(
+        _scratch_dir(prefix=prefix) + "/tbl", TARGET_SCHEMA,
+        n_buckets=n_buckets or cores,
+    )
+    with scoped_shuffle_partitions(spark, cores):
+        t.merge_batch(b1, 0)
+        if follow is not None:
+            follow(t)
+        t.merge_batch(b2, 1, extra_payload_cols=tuple(b2.columns[len(b1.columns):]))
+        if follow is not None:
+            follow(t)
+    return t
 
 
 # ---------------------------------------------------------------------------
@@ -962,8 +1031,6 @@ def q_scd2_stream_history(spark, sf_dir):
     recompute — scd2 with compress=False is just lead-close over every
     change — which is exactly the invariant the incremental fold
     maintains."""
-    import tempfile
-
     from pyspark.sql.window import Window
 
     from oplogtoredis_spark.sources.schemas import TARGET_SCHEMA
@@ -977,20 +1044,17 @@ def q_scd2_stream_history(spark, sf_dir):
     rn = F.row_number().over(
         Window.partitionBy("user_id").orderBy(_ts_ms(), "event_id")
     )
-    env = ev.select(
-        F.lit("users").alias("repo"),
-        F.col("user_id").cast("string").alias("path"),
-        _ts_ms().alias("ts"),
-        F.col("event_id").cast("int").alias("tx_idx"),
-        F.when(F.col("event_type") == "error", F.lit("d"))
-        .otherwise(F.lit("u"))
-        .alias("op"),
-        F.col("event_type").alias("commit"),
-        F.lit("en").alias("lang"),
-        F.round(F.col("value") * 10000, 0).cast("long").cast("string").alias(
-            "content"
-        ),
-        rn.alias("rn"),
+    env = _env(
+        ev,
+        _ts_ms(),
+        F.when(F.col("event_type") == "error", F.lit("d")).otherwise(F.lit("u")),
+        key="user_id",
+        repo=F.lit("users"),
+        tx_idx=F.col("event_id").cast("int"),
+        commit=F.col("event_type"),
+        lang=F.lit("en"),
+        content=F.round(F.col("value") * 10000, 0).cast("long").cast("string"),
+        rn=rn,
     )
     base = _scratch_dir(prefix="otr_hist_")
     # bucket count = core count (parameterised): at or above the epoch
@@ -1005,12 +1069,10 @@ def q_scd2_stream_history(spark, sf_dir):
     # the rank-2 split feeds both epochs from ONE windowed pass: without
     # the persist, each applier epoch re-runs the 1M-row ranking window
     # (scan + full shuffle) just to slice its half (guide §2.4). Epochs run
-    # at data-scaled reduce width (the _epoch_shuffle_scale discipline —
-    # ~50 MB per epoch across 128 reduce tasks was pure task-launch
-    # overhead; scoped to the session's core count, never a constant).
+    # at core-count reduce width (~50 MB per epoch).
     env = env.persist()
     try:
-        with _stream_state_parallelism(spark):
+        with scoped_shuffle_partitions(spark, spark.sparkContext.defaultParallelism):
             applier(env.where("rn <= 2").drop("rn"), 0)
             applier(env.where("rn > 2").drop("rn"), 1)
     finally:
@@ -1053,8 +1115,6 @@ def q_enrich_stream_events(spark, sf_dir):
     column as e4 fixed-point so cross-engine float formatting never
     appears. Oracle: latest purchase per user (ts, then event_id) left-
     joined to clicks."""
-    import tempfile
-
     from oplogtoredis_spark.sources.schemas import TARGET_SCHEMA
     from oplogtoredis_spark.streaming.enrich import make_enrich_applier
     from oplogtoredis_spark.streaming.lake import LakeTable
@@ -1067,29 +1127,23 @@ def q_enrich_stream_events(spark, sf_dir):
         F.round(F.col("value") * 10000, 0).cast("long").alias("v4"),
     )
 
-    def env(df):
-        return df.select(
-            F.lit("users").alias("repo"),
-            F.col("user_id").cast("string").alias("path"),
-            F.col("ts_ms").alias("ts"),
-            F.col("event_id").alias("tx_idx"),
-            F.lit("u").alias("op"),
-            F.lit("c").alias("commit"),
-            F.lit("en").alias("lang"),
-            F.col("v4").cast("string").alias("content"),
-        )
-
+    env = _env(
+        purchases,
+        F.col("ts_ms"),
+        key="user_id",
+        repo=F.lit("users"),
+        tx_idx=F.col("event_id"),
+        commit=F.lit("c"),
+        lang=F.lit("en"),
+        content=F.col("v4").cast("string"),
+    )
     t = LakeTable.create(
         _scratch_dir(prefix="otr_enrich_") + "/tbl", TARGET_SCHEMA,
         n_buckets=spark.sparkContext.defaultParallelism,
     )
-    # data-scaled epoch width: MB-scale fixture epochs at the
-    # session's 128 analytics reduce width were pure task-launch
-    # overhead (the _epoch_shuffle_scale discipline; scoped to the
-    # core count, never a constant)
-    with _stream_state_parallelism(spark):
-        t.merge_batch(env(purchases.where(F.col("event_id") % 2 == 0)), 0)
-        t.merge_batch(env(purchases.where(F.col("event_id") % 2 == 1)), 1)
+    with scoped_shuffle_partitions(spark, spark.sparkContext.defaultParallelism):
+        t.merge_batch(env.where(F.col("tx_idx") % 2 == 0), 0)
+        t.merge_batch(env.where(F.col("tx_idx") % 2 == 1), 1)
 
         clicks = ev.where(F.col("event_type") == "click").select(
             F.lit("users").alias("repo"),
@@ -1708,8 +1762,6 @@ def q_incremental_corpus_pipeline(spark, sf_dir):
     affected hash groups, state lives as LWW delta logs, and the final
     chunk state must equal the batch recompute — the oracle IS
     corpus_pipeline's full-recompute SQL, unchanged."""
-    import tempfile
-
     from oplogtoredis_spark.operators.incremental_corpus import IncrementalCorpus
 
     docs = _docs(spark, sf_dir, par=True).select("doc_id", "text")
@@ -1739,38 +1791,29 @@ def q_lake_changes(spark, sf_dir):
     manifest diff prunes the comparison to buckets the second epoch
     touched. The oracle recomputes both snapshot states as window
     functions over the same split and classifies identically."""
-    import tempfile
-
     from oplogtoredis_spark.streaming.lake import LakeTable
     from oplogtoredis_spark.sources.schemas import TARGET_SCHEMA
 
-    ev = _ev(spark, sf_dir, par=True).select(
-        F.concat(F.lit("r"), (F.col("user_id") % 8).cast("string")).alias("repo"),
-        F.col("user_id").cast("string").alias("path"),
-        _ts_ms().alias("ts"),
-        F.col("event_id").cast("int").alias("tx_idx"),
-        F.when(F.col("event_type") == "error", F.lit("d"))
-        .otherwise(F.lit("u"))
-        .alias("op"),
-        F.col("event_id").cast("string").alias("commit"),
-        F.lit("en").alias("lang"),
-        F.col("event_type").alias("content"),
-        F.col("event_id"),
+    env = _env(
+        _ev(spark, sf_dir, par=True),
+        _ts_ms(),
+        F.when(F.col("event_type") == "error", F.lit("d")).otherwise(F.lit("u")),
+        key="user_id",
+        repo=F.concat(F.lit("r"), (F.col("user_id") % 8).cast("string")),
+        tx_idx=F.col("event_id").cast("int"),
+        commit=F.col("event_id").cast("string"),
+        lang=F.lit("en"),
+        content=F.col("event_type"),
     )
     t = LakeTable.create(
         _scratch_dir(prefix="otr_lake_changes_") + "/tbl",
         TARGET_SCHEMA,
         n_buckets=8,
     )
-    env_cols = ["repo", "path", "ts", "tx_idx", "op", "commit", "lang", "content"]
-    # data-scaled epoch width: MB-scale fixture epochs at the
-    # session's 128 analytics reduce width were pure task-launch
-    # overhead (the _epoch_shuffle_scale discipline; scoped to the
-    # core count, never a constant)
-    with _stream_state_parallelism(spark):
-        t.merge_batch(ev.where(F.col("event_id") % 2 == 0).select(env_cols), 0)
+    with scoped_shuffle_partitions(spark, spark.sparkContext.defaultParallelism):
+        t.merge_batch(env.where(F.col("tx_idx") % 2 == 0), 0)
         v1 = t.current_version()
-        t.merge_batch(ev.where(F.col("event_id") % 2 == 1).select(env_cols), 1)
+        t.merge_batch(env.where(F.col("tx_idx") % 2 == 1), 1)
     return t.changes(spark, v1).select(
         "repo",
         "path",
@@ -1824,56 +1867,14 @@ def q_agg_view_lake(spark, sf_dir):
     deletes retract the extra docs, so the final view equals the batch
     aggregate over the final live state (== the documents table) without
     ever rescanning the lake. Fold is union + ONE groupBy, no join."""
-    import tempfile
-
     from oplogtoredis_spark.operators.aggview import IncrementalAggView
-    from oplogtoredis_spark.sources.schemas import TARGET_SCHEMA
-    from oplogtoredis_spark.streaming.lake import LakeTable
 
-    docs = _docs(spark, sf_dir, par=True).select("doc_id", "text", "lang")
-
-    def env(df, ts, op="u"):
-        return df.select(
-            F.lit("docs").alias("repo"),
-            F.col("doc_id").cast("string").alias("path"),
-            F.lit(ts << 32).cast("long").alias("ts"),
-            F.col("doc_id").cast("int").alias("tx_idx"),
-            F.lit(op).alias("op"),
-            F.lit(f"c{ts}").alias("commit"),
-            F.col("lang").alias("lang"),
-            F.col("text").alias("content"),
-        )
-
-    t = LakeTable.create(
-        _scratch_dir(prefix="otr_aggv_") + "/tbl", TARGET_SCHEMA,
-        n_buckets=spark.sparkContext.defaultParallelism,
-    )
     view = IncrementalAggView(
         _scratch_dir(prefix="otr_aggv_v_"),
         group_cols=("lang",),
         value_expr="length(content)",
     )
-    first = docs.where(F.col("doc_id") % 3 != 0)
-    drafts = first.where(F.col("doc_id") % 5 == 0).withColumn(
-        "text", F.concat(F.col("text"), F.lit(" zz draft pending zz"))
-    )
-    extras = docs.where(F.col("doc_id") % 7 == 0).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"), "text", "lang"
-    )
-    # data-scaled epoch width: MB-scale fixture epochs at the
-    # session's 128 analytics reduce width were pure task-launch
-    # overhead (the _epoch_shuffle_scale discipline; scoped to the
-    # core count, never a constant)
-    with _stream_state_parallelism(spark):
-        t.merge_batch(
-            env(first.where(F.col("doc_id") % 5 != 0).unionByName(drafts)
-                .unionByName(extras), 1),
-            0,
-        )
-        view.follow_lake(spark, t)
-        upserts = docs.where((F.col("doc_id") % 3 == 0) | (F.col("doc_id") % 5 == 0))
-        t.merge_batch(env(upserts, 2).unionByName(env(extras, 2, op="d")), 1)
-        view.follow_lake(spark, t)
+    _docs_lake(spark, sf_dir, "otr_aggv_", follow=lambda t: view.follow_lake(spark, t))
     return view.summary(spark)
 
 
@@ -1894,56 +1895,14 @@ def q_distinct_view_lake(spark, sf_dir):
     ONE of two rows sharing a length). Same two-commit draft/delete
     recipe as agg_view_lake; final state == documents, so the oracle is
     the plain batch COUNT(DISTINCT)."""
-    import tempfile
-
     from oplogtoredis_spark.operators.aggview import IncrementalDistinctView
-    from oplogtoredis_spark.sources.schemas import TARGET_SCHEMA
-    from oplogtoredis_spark.streaming.lake import LakeTable
 
-    docs = _docs(spark, sf_dir, par=True).select("doc_id", "text", "lang")
-
-    def env(df, ts, op="u"):
-        return df.select(
-            F.lit("docs").alias("repo"),
-            F.col("doc_id").cast("string").alias("path"),
-            F.lit(ts << 32).cast("long").alias("ts"),
-            F.col("doc_id").cast("int").alias("tx_idx"),
-            F.lit(op).alias("op"),
-            F.lit(f"c{ts}").alias("commit"),
-            F.col("lang").alias("lang"),
-            F.col("text").alias("content"),
-        )
-
-    t = LakeTable.create(
-        _scratch_dir(prefix="otr_dv_") + "/tbl", TARGET_SCHEMA,
-        n_buckets=spark.sparkContext.defaultParallelism,
-    )
     view = IncrementalDistinctView(
         _scratch_dir(prefix="otr_dv_v_"),
         group_cols=("lang",),
         distinct_expr="length(content)",
     )
-    first = docs.where(F.col("doc_id") % 3 != 0)
-    drafts = first.where(F.col("doc_id") % 5 == 0).withColumn(
-        "text", F.concat(F.col("text"), F.lit(" zz draft pending zz"))
-    )
-    extras = docs.where(F.col("doc_id") % 7 == 0).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"), "text", "lang"
-    )
-    # data-scaled epoch width: MB-scale fixture epochs at the
-    # session's 128 analytics reduce width were pure task-launch
-    # overhead (the _epoch_shuffle_scale discipline; scoped to the
-    # core count, never a constant)
-    with _stream_state_parallelism(spark):
-        t.merge_batch(
-            env(first.where(F.col("doc_id") % 5 != 0).unionByName(drafts)
-                .unionByName(extras), 1),
-            0,
-        )
-        view.follow_lake(spark, t)
-        upserts = docs.where((F.col("doc_id") % 3 == 0) | (F.col("doc_id") % 5 == 0))
-        t.merge_batch(env(upserts, 2).unionByName(env(extras, 2, op="d")), 1)
-        view.follow_lake(spark, t)
+    _docs_lake(spark, sf_dir, "otr_dv_", follow=lambda t: view.follow_lake(spark, t))
     return view.read(spark)
 
 
@@ -1964,48 +1923,8 @@ def q_lake_read_clustered(spark, sf_dir):
     while returning exactly ``read().where(lang = 'en')``. Sound because a
     base file holds at most one row per key (the LWW collapse wrote it) and
     delta-carrying buckets are read whole."""
-    import tempfile
-
-    from oplogtoredis_spark.sources.schemas import TARGET_SCHEMA
-    from oplogtoredis_spark.streaming.lake import LakeTable
-
-    docs = _docs(spark, sf_dir, par=True).select("doc_id", "text", "lang")
-
-    def env(df, ts, op="u"):
-        return df.select(
-            F.lit("docs").alias("repo"),
-            F.col("doc_id").cast("string").alias("path"),
-            F.lit(ts << 32).cast("long").alias("ts"),
-            F.col("doc_id").cast("int").alias("tx_idx"),
-            F.lit(op).alias("op"),
-            F.lit(f"c{ts}").alias("commit"),
-            F.col("lang").alias("lang"),
-            F.col("text").alias("content"),
-        )
-
-    t = LakeTable.create(
-        _scratch_dir(prefix="otr_clus_") + "/tbl", TARGET_SCHEMA,
-        n_buckets=spark.sparkContext.defaultParallelism,
-    )
-    first = docs.where(F.col("doc_id") % 3 != 0)
-    drafts = first.where(F.col("doc_id") % 5 == 0).withColumn(
-        "text", F.concat(F.col("text"), F.lit(" zz draft pending zz"))
-    )
-    extras = docs.where(F.col("doc_id") % 7 == 0).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"), "text", "lang"
-    )
-    # data-scaled epoch width: MB-scale fixture epochs at the
-    # session's 128 analytics reduce width were pure task-launch
-    # overhead (the _epoch_shuffle_scale discipline; scoped to the
-    # core count, never a constant)
-    with _stream_state_parallelism(spark):
-        t.merge_batch(
-            env(first.where(F.col("doc_id") % 5 != 0).unionByName(drafts)
-                .unionByName(extras), 1),
-            0,
-        )
-        upserts = docs.where((F.col("doc_id") % 3 == 0) | (F.col("doc_id") % 5 == 0))
-        t.merge_batch(env(upserts, 2).unionByName(env(extras, 2, op="d")), 1)
+    t = _docs_lake(spark, sf_dir, "otr_clus_")
+    with scoped_shuffle_partitions(spark, spark.sparkContext.defaultParallelism):
         t.rewrite_clustered(spark, ["lang"], files_per_bucket=4)
     return t.read_pruned(spark, "lang", "en", "en").select(
         "path",
@@ -2036,48 +1955,8 @@ def q_lake_point_lookup(spark, sf_dir):
     positives only keep files; the exact predicate re-applies). The query
     fails loudly if the bloom never skipped a file — the mechanism, not
     just the values, is what it pins."""
-    import tempfile
-
-    from oplogtoredis_spark.sources.schemas import TARGET_SCHEMA
-    from oplogtoredis_spark.streaming.lake import LakeTable
-
-    docs = _docs(spark, sf_dir, par=True).select("doc_id", "text", "lang")
-
-    def env(df, ts, op="u"):
-        return df.select(
-            F.lit("docs").alias("repo"),
-            F.col("doc_id").cast("string").alias("path"),
-            F.lit(ts << 32).cast("long").alias("ts"),
-            F.col("doc_id").cast("int").alias("tx_idx"),
-            F.lit(op).alias("op"),
-            F.lit(f"c{ts}").alias("commit"),
-            F.col("lang").alias("lang"),
-            F.col("text").alias("content"),
-        )
-
-    t = LakeTable.create(
-        _scratch_dir(prefix="otr_bloom_") + "/tbl", TARGET_SCHEMA,
-        n_buckets=spark.sparkContext.defaultParallelism,
-    )
-    first = docs.where(F.col("doc_id") % 3 != 0)
-    drafts = first.where(F.col("doc_id") % 5 == 0).withColumn(
-        "text", F.concat(F.col("text"), F.lit(" zz draft pending zz"))
-    )
-    extras = docs.where(F.col("doc_id") % 7 == 0).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"), "text", "lang"
-    )
-    # data-scaled epoch width: MB-scale fixture epochs at the
-    # session's 128 analytics reduce width were pure task-launch
-    # overhead (the _epoch_shuffle_scale discipline; scoped to the
-    # core count, never a constant)
-    with _stream_state_parallelism(spark):
-        t.merge_batch(
-            env(first.where(F.col("doc_id") % 5 != 0).unionByName(drafts)
-                .unionByName(extras), 1),
-            0,
-        )
-        upserts = docs.where((F.col("doc_id") % 3 == 0) | (F.col("doc_id") % 5 == 0))
-        t.merge_batch(env(upserts, 2).unionByName(env(extras, 2, op="d")), 1)
+    t = _docs_lake(spark, sf_dir, "otr_bloom_")
+    with scoped_shuffle_partitions(spark, spark.sparkContext.defaultParallelism):
         t.rewrite_clustered(
             spark, ["lang"], files_per_bucket=4, bloom_cols=["path"]
         )
@@ -2113,24 +1992,10 @@ def q_rebucket_lake(spark, sf_dir):
     modulus) inserts the % 3 == 0 docs, REPLACES the % 5 == 0 docs, and
     deletes the extras — final live set == documents exactly, each row
     carrying the commit of its last writer."""
-    import tempfile
-
     from oplogtoredis_spark.sources.schemas import TARGET_SCHEMA
     from oplogtoredis_spark.streaming.lake import LakeTable
 
     docs = _docs(spark, sf_dir, par=True).select("doc_id", "text", "lang")
-
-    def env(df, ts, op="u"):
-        return df.select(
-            F.lit("docs").alias("repo"),
-            F.col("doc_id").cast("string").alias("path"),
-            F.lit(ts << 32).cast("long").alias("ts"),
-            F.col("doc_id").cast("int").alias("tx_idx"),
-            F.lit(op).alias("op"),
-            F.lit(f"c{ts}").alias("commit"),
-            F.col("lang").alias("lang"),
-            F.col("text").alias("content"),
-        )
 
     t = LakeTable.create(
         _scratch_dir(prefix="otr_rebucket_") + "/tbl", TARGET_SCHEMA,
@@ -2139,13 +2004,9 @@ def q_rebucket_lake(spark, sf_dir):
     extras = docs.where(F.col("doc_id") % 7 == 0).select(
         (F.col("doc_id") + 1000000).alias("doc_id"), "text", "lang"
     )
-    # data-scaled epoch width: MB-scale fixture epochs at the
-    # session's 128 analytics reduce width were pure task-launch
-    # overhead (the _epoch_shuffle_scale discipline; scoped to the
-    # core count, never a constant)
-    with _stream_state_parallelism(spark):
+    with scoped_shuffle_partitions(spark, spark.sparkContext.defaultParallelism):
         t.merge_batch(
-            env(docs.where(F.col("doc_id") % 3 != 0).unionByName(extras), 1), 0
+            _env(docs.where(F.col("doc_id") % 3 != 0).unionByName(extras), 1), 0
         )
         st = t.rebucket(spark, 16)
         if not (st["rebucketed"] and st["from_n_buckets"] == 4 and st["n_buckets"] == 16):
@@ -2153,7 +2014,7 @@ def q_rebucket_lake(spark, sf_dir):
         upserts = docs.where(
             (F.col("doc_id") % 3 == 0) | (F.col("doc_id") % 5 == 0)
         )
-        t.merge_batch(env(upserts, 2).unionByName(env(extras, 2, op="d")), 1)
+        t.merge_batch(_env(upserts, 2).unionByName(_env(extras, 2, op="d")), 1)
     return t.read(spark).select(
         "path",
         "lang",
@@ -2181,57 +2042,13 @@ def q_schema_evolution_lake(spark, sf_dir):
     rows carry the value. Same draft/delete recipe as the other lake
     queries, so the live set == documents and the oracle derives stars
     from which commit last wrote each row."""
-    import tempfile
-
-    from oplogtoredis_spark.sources.schemas import TARGET_SCHEMA
-    from oplogtoredis_spark.streaming.lake import LakeTable
-
-    docs = _docs(spark, sf_dir, par=True).select("doc_id", "text", "lang")
-
-    def env(df, ts, op="u"):
-        return df.select(
-            F.lit("docs").alias("repo"),
-            F.col("doc_id").cast("string").alias("path"),
-            F.lit(ts << 32).cast("long").alias("ts"),
-            F.col("doc_id").cast("int").alias("tx_idx"),
-            F.lit(op).alias("op"),
-            F.lit(f"c{ts}").alias("commit"),
-            F.col("lang").alias("lang"),
-            F.col("text").alias("content"),
-        )
-
-    t = LakeTable.create(
-        _scratch_dir(prefix="otr_evo_") + "/tbl", TARGET_SCHEMA,
-        n_buckets=spark.sparkContext.defaultParallelism,
+    t = _docs_lake(
+        spark, sf_dir, "otr_evo_",
+        commit2=lambda b: b.withColumn(
+            "stars",
+            F.when(F.col("op") == "u", (F.col("tx_idx") % 5).cast("long")),
+        ),
     )
-    first = docs.where(F.col("doc_id") % 3 != 0)
-    drafts = first.where(F.col("doc_id") % 5 == 0).withColumn(
-        "text", F.concat(F.col("text"), F.lit(" zz draft pending zz"))
-    )
-    extras = docs.where(F.col("doc_id") % 7 == 0).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"), "text", "lang"
-    )
-    # data-scaled epoch width: MB-scale fixture epochs at the
-    # session's 128 analytics reduce width were pure task-launch
-    # overhead (the _epoch_shuffle_scale discipline; scoped to the
-    # core count, never a constant)
-    with _stream_state_parallelism(spark):
-        t.merge_batch(
-            env(first.where(F.col("doc_id") % 5 != 0).unionByName(drafts)
-                .unionByName(extras), 1),
-            0,
-        )
-        upserts = docs.where((F.col("doc_id") % 3 == 0) | (F.col("doc_id") % 5 == 0))
-        b2 = (
-            env(upserts, 2)
-            .withColumn("stars", (F.col("tx_idx") % 5).cast("long"))
-            .unionByName(
-                env(extras, 2, op="d").withColumn(
-                    "stars", F.lit(None).cast("long")
-                )
-            )
-        )
-        t.merge_batch(b2, 1, extra_payload_cols=("stars",))
     return t.read(spark).select("path", "lang", "stars")
 
 
@@ -2257,24 +2074,10 @@ def q_lake_read_tagged(spark, sf_dir):
     (== documents exactly) with the tag read (commit-1 state, readable
     after expiry), so one value hash verifies rollback correctness and
     ref-pinned time travel together."""
-    import tempfile
-
     from oplogtoredis_spark.sources.schemas import TARGET_SCHEMA
     from oplogtoredis_spark.streaming.lake import LakeTable
 
     docs = _docs(spark, sf_dir, par=True).select("doc_id", "text", "lang")
-
-    def env(df, ts, op="u"):
-        return df.select(
-            F.lit("docs").alias("repo"),
-            F.col("doc_id").cast("string").alias("path"),
-            F.lit(ts << 32).cast("long").alias("ts"),
-            F.col("doc_id").cast("int").alias("tx_idx"),
-            F.lit(op).alias("op"),
-            F.lit(f"c{ts}").alias("commit"),
-            F.col("lang").alias("lang"),
-            F.col("text").alias("content"),
-        )
 
     t = LakeTable.create(
         _scratch_dir(prefix="otr_tag_") + "/tbl", TARGET_SCHEMA,
@@ -2286,13 +2089,9 @@ def q_lake_read_tagged(spark, sf_dir):
     extras = docs.where(F.col("doc_id") % 7 == 0).select(
         (F.col("doc_id") + 1000000).alias("doc_id"), "text", "lang"
     )
-    # data-scaled epoch width: MB-scale fixture epochs at the
-    # session's 128 analytics reduce width were pure task-launch
-    # overhead (the _epoch_shuffle_scale discipline; scoped to the
-    # core count, never a constant)
-    with _stream_state_parallelism(spark):
+    with scoped_shuffle_partitions(spark, spark.sparkContext.defaultParallelism):
         t.merge_batch(
-            env(
+            _env(
                 docs.where(F.col("doc_id") % 5 != 0)
                 .unionByName(drafts)
                 .unionByName(extras),
@@ -2302,12 +2101,12 @@ def q_lake_read_tagged(spark, sf_dir):
         )
         t.create_tag("pre_incident")
         # the incident: a bad job tombstones every even doc
-        t.merge_batch(env(docs.where(F.col("doc_id") % 2 == 0), 2, op="d"), 1)
+        t.merge_batch(_env(docs.where(F.col("doc_id") % 2 == 0), 2, op="d"), 1)
         t.rollback(t.resolve_ref("pre_incident"))
         # the real fix, applied on the restored state
         t.merge_batch(
-            env(docs.where(F.col("doc_id") % 5 == 0), 3).unionByName(
-                env(extras, 3, op="d")
+            _env(docs.where(F.col("doc_id") % 5 == 0), 3).unionByName(
+                _env(extras, 3, op="d")
             ),
             2,
         )
@@ -2347,8 +2146,6 @@ def q_wap_publish_lake(spark, sf_dir):
     that legal) and publishes. The result reads through the ``published``
     tag — the consumer boundary that never saw the bad snapshot — and
     equals the documents table exactly."""
-    import tempfile
-
     from oplogtoredis_spark.operators.expectations import (
         accepted_values,
         not_null,
@@ -2363,40 +2160,24 @@ def q_wap_publish_lake(spark, sf_dir):
         accepted_values("lang", ["de", "en", "es", "fr", "zh"]),
     ]
 
-    def env(df, ts):
-        return df.select(
-            F.lit("docs").alias("repo"),
-            F.col("doc_id").cast("string").alias("path"),
-            F.lit(ts << 32).cast("long").alias("ts"),
-            F.col("doc_id").cast("int").alias("tx_idx"),
-            F.lit("u").alias("op"),
-            F.lit(f"c{ts}").alias("commit"),
-            F.col("lang").alias("lang"),
-            F.col("text").alias("content"),
-        )
-
     t = LakeTable.create(
         _scratch_dir(prefix="otr_wap_") + "/tbl", TARGET_SCHEMA,
         n_buckets=spark.sparkContext.defaultParallelism,
     )
     evens = docs.where(F.col("doc_id") % 2 == 0)
     odds = docs.where(F.col("doc_id") % 2 == 1)
-    # data-scaled epoch width: MB-scale fixture epochs at the
-    # session's 128 analytics reduce width were pure task-launch
-    # overhead (the _epoch_shuffle_scale discipline; scoped to the
-    # core count, never a constant)
-    with _stream_state_parallelism(spark):
-        wap_merge(t, spark, env(evens, 1), 0, checks())
+    with scoped_shuffle_partitions(spark, spark.sparkContext.defaultParallelism):
+        wap_merge(t, spark, _env(evens, 1), 0, checks())
         poisoned = odds.withColumn(
             "lang",
             F.when(F.col("doc_id") % 5 == 0, F.lit("xx")).otherwise(F.col("lang")),
         )
         try:
-            wap_merge(t, spark, env(poisoned, 2), 1, checks())
+            wap_merge(t, spark, _env(poisoned, 2), 1, checks())
             raise AssertionError("poisoned epoch must fail its audit")
         except WriteAuditError:
             pass  # rolled back; tag still at epoch 0's snapshot
-        wap_merge(t, spark, env(odds, 2), 1, checks())
+        wap_merge(t, spark, _env(odds, 2), 1, checks())
     return t.read(spark, tag="published").select(
         "path", "lang", F.length("content").cast("long").alias("n_chars")
     )
@@ -2418,38 +2199,20 @@ def q_lake_fsck(spark, sf_dir):
     corruption-detection arms are pinned in tests/test_fsck.py (duplicated
     file, smuggled cross-bucket file, doctored bucket column, missing
     dirs, orphan dirs)."""
-    import tempfile
-
     from oplogtoredis_spark.sources.schemas import TARGET_SCHEMA
     from oplogtoredis_spark.streaming.lake import LakeTable
 
     docs = _docs(spark, sf_dir, par=True).select("doc_id", "text", "lang")
 
-    def env(df, ts, op="u"):
-        return df.select(
-            F.lit("docs").alias("repo"),
-            F.col("doc_id").cast("string").alias("path"),
-            F.lit(ts << 32).cast("long").alias("ts"),
-            F.col("doc_id").cast("int").alias("tx_idx"),
-            F.lit(op).alias("op"),
-            F.lit(f"c{ts}").alias("commit"),
-            F.col("lang").alias("lang"),
-            F.col("text").alias("content"),
-        )
-
     t = LakeTable.create(
         _scratch_dir(prefix="otr_fsck_") + "/tbl", TARGET_SCHEMA,
         n_buckets=spark.sparkContext.defaultParallelism,
     )
-    # data-scaled epoch width: MB-scale fixture epochs at the
-    # session's 128 analytics reduce width were pure task-launch
-    # overhead (the _epoch_shuffle_scale discipline; scoped to the
-    # core count, never a constant)
-    with _stream_state_parallelism(spark):
-        t.merge_batch(env(docs.where(F.col("doc_id") % 2 == 0), 1), 0)
+    with scoped_shuffle_partitions(spark, spark.sparkContext.defaultParallelism):
+        t.merge_batch(_env(docs.where(F.col("doc_id") % 2 == 0), 1), 0)
         t.merge_batch(
-            env(docs.where(F.col("doc_id") % 2 == 1), 2).unionByName(
-                env(docs.where(F.col("doc_id") % 10 == 0), 2, op="d")
+            _env(docs.where(F.col("doc_id") % 2 == 1), 2).unionByName(
+                _env(docs.where(F.col("doc_id") % 10 == 0), 2, op="d")
             ),
             1,
         )
@@ -2479,51 +2242,13 @@ def q_index_view_lake(spark, sf_dir):
     documents table) without ever re-tokenizing the lake. Fold is union +
     ONE groupBy, no join; tokenization is byte-identical to
     operators/retrieval.py, so the oracle is SQL_INVERTED_INDEX unchanged."""
-    import tempfile
-
     from oplogtoredis_spark.operators.indexview import IncrementalIndexView
-    from oplogtoredis_spark.sources.schemas import TARGET_SCHEMA
-    from oplogtoredis_spark.streaming.lake import LakeTable
 
-    docs = _docs(spark, sf_dir, par=True).select("doc_id", "text", "lang")
-
-    def env(df, ts, op="u"):
-        return df.select(
-            F.lit("docs").alias("repo"),
-            F.col("doc_id").cast("string").alias("path"),
-            F.lit(ts << 32).cast("long").alias("ts"),
-            F.col("doc_id").cast("int").alias("tx_idx"),
-            F.lit(op).alias("op"),
-            F.lit(f"c{ts}").alias("commit"),
-            F.col("lang").alias("lang"),
-            F.col("text").alias("content"),
-        )
-
-    t = LakeTable.create(
-        _scratch_dir(prefix="otr_idxv_") + "/tbl", TARGET_SCHEMA, n_buckets=8
-    )
     view = IncrementalIndexView(_scratch_dir(prefix="otr_idxv_v_"))
-    first = docs.where(F.col("doc_id") % 3 != 0)
-    drafts = first.where(F.col("doc_id") % 5 == 0).withColumn(
-        "text", F.concat(F.col("text"), F.lit(" zz draft pending zz"))
+    _docs_lake(
+        spark, sf_dir, "otr_idxv_", n_buckets=8,
+        follow=lambda t: view.follow_lake(spark, t),
     )
-    extras = docs.where(F.col("doc_id") % 7 == 0).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"), "text", "lang"
-    )
-    # data-scaled epoch width: MB-scale fixture epochs at the
-    # session's 128 analytics reduce width were pure task-launch
-    # overhead (the _epoch_shuffle_scale discipline; scoped to the
-    # core count, never a constant)
-    with _stream_state_parallelism(spark):
-        t.merge_batch(
-            env(first.where(F.col("doc_id") % 5 != 0).unionByName(drafts)
-                .unionByName(extras), 1),
-            0,
-        )
-        view.follow_lake(spark, t)
-        upserts = docs.where((F.col("doc_id") % 3 == 0) | (F.col("doc_id") % 5 == 0))
-        t.merge_batch(env(upserts, 2).unionByName(env(extras, 2, op="d")), 1)
-        view.follow_lake(spark, t)
     return view.stats(spark)
 
 
@@ -2540,55 +2265,17 @@ def q_follow_lake_corpus(spark, sf_dir):
     either side. Final live set == the documents table exactly, so the
     oracle is corpus_pipeline's full-recompute SQL, UNCHANGED: convergence
     through real lake commits is the assertion."""
-    import tempfile
-
     from oplogtoredis_spark.operators.incremental_corpus import IncrementalCorpus
-    from oplogtoredis_spark.sources.schemas import TARGET_SCHEMA
-    from oplogtoredis_spark.streaming.lake import LakeTable
 
-    docs = _docs(spark, sf_dir, par=True).select("doc_id", "text")
-
-    def env(df, ts, op="u"):
-        return df.select(
-            F.lit("docs").alias("repo"),
-            F.col("doc_id").cast("string").alias("path"),
-            F.lit(ts << 32).cast("long").alias("ts"),
-            F.col("doc_id").cast("int").alias("tx_idx"),
-            F.lit(op).alias("op"),
-            F.lit(f"c{ts}").alias("commit"),
-            F.lit("en").alias("lang"),
-            F.col("text").alias("content"),
-        )
-
-    t = LakeTable.create(
-        _scratch_dir(prefix="otr_follow_") + "/tbl", TARGET_SCHEMA, n_buckets=8
-    )
     corpus = IncrementalCorpus(
         _scratch_dir(prefix="otr_follow_c_"),
         min_tokens=20, min_alpha_ratio=0.55, min_quality=0.5, langs=("en",),
         chunk_tokens=40, overlap=8,
     )
-    first = docs.where(F.col("doc_id") % 3 != 0)
-    drafts = first.where(F.col("doc_id") % 5 == 0).withColumn(
-        "text", F.concat(F.col("text"), F.lit(" zz draft pending zz"))
+    _docs_lake(
+        spark, sf_dir, "otr_follow_", n_buckets=8, lang=F.lit("en"),
+        follow=lambda t: corpus.follow_lake(spark, t, repo="docs"),
     )
-    extras = docs.where(F.col("doc_id") % 7 == 0).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"), "text"
-    )
-    # data-scaled epoch width: MB-scale fixture epochs at the
-    # session's 128 analytics reduce width were pure task-launch
-    # overhead (the _epoch_shuffle_scale discipline; scoped to the
-    # core count, never a constant)
-    with _stream_state_parallelism(spark):
-        t.merge_batch(
-            env(first.where(F.col("doc_id") % 5 != 0).unionByName(drafts)
-                .unionByName(extras), 1),
-            0,
-        )
-        corpus.follow_lake(spark, t, repo="docs")
-        upserts = docs.where((F.col("doc_id") % 3 == 0) | (F.col("doc_id") % 5 == 0))
-        t.merge_batch(env(upserts, 2).unionByName(env(extras, 2, op="d")), 1)
-        corpus.follow_lake(spark, t, repo="docs")
     return corpus.chunks(spark).select("doc_id", "split", "chunk_idx", "n_tokens")
 
 
@@ -2862,14 +2549,11 @@ def q_stream_interval_join_events(spark, sf_dir):
     is late and the emitted set equals the batch theta join (the oracle)
     EXACTLY; tests pin the bounded-state/late-drop behavior under tight
     watermarks (tests/test_stream_joins.py)."""
-    import tempfile
-
     from oplogtoredis_spark.streaming.joins import interval_join
 
     ev = _ev(spark, sf_dir)
     base = _scratch_dir(prefix="otr_ssj_")
-
-    clicks = _dump_split_stream_dir(
+    clicks, n_clicks = _dump_split_stream_dir(
         ev.where(F.col("event_type") == "click").select(
             "user_id", "event_id", _ts_ms().alias("ts_ms")
         ),
@@ -2877,7 +2561,7 @@ def q_stream_interval_join_events(spark, sf_dir):
         "clicks",
         "ts_ms",
     )
-    purchases = _dump_split_stream_dir(
+    purchases, n_purchases = _dump_split_stream_dir(
         ev.where(F.col("event_type") == "purchase").select(
             "user_id",
             "event_id",
@@ -2888,45 +2572,28 @@ def q_stream_interval_join_events(spark, sf_dir):
         "purchases",
         "ts_ms",
     )
-    ls = (
-        spark.readStream.schema("user_id long, event_id long, ts_ms long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(clicks)
-        .withColumn("ts", F.timestamp_millis("ts_ms"))
-        .drop("ts_ms")
-    )
-    rs = (
-        spark.readStream.schema(
-            "user_id long, event_id long, ts_ms long, value double"
+
+    def join(ls, rs):
+        ls, rs = (
+            s.withColumn("ts", F.timestamp_millis("ts_ms")).drop("ts_ms")
+            for s in (ls, rs)
         )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(purchases)
-        .withColumn("ts", F.timestamp_millis("ts_ms"))
-        .drop("ts_ms")
-    )
-    out = interval_join(
-        ls, rs, on="user_id", left_ts="ts", right_ts="ts",
-        lower_ms=0, upper_ms=6 * 3600 * 1000,
-        watermark_delay="90 days", prefix="p_",
-    )
-    # parquet file sink (guide §5): the memory sink collected every join
-    # match (~1M rows at sf1.0) into the driver per run; a file sink keeps
-    # the output distributed and the read-back is a plain scan — the same
-    # change stream_dedup_events got in r6.1
-    out_dir = f"{base}/out"
-    with _stream_state_parallelism(
-        spark, width=_stateful_width(spark, clicks, purchases)
-    ):
-        q = (
-            out.writeStream.format("parquet")
-            .option("path", out_dir)
-            .outputMode("append")
-            .option("checkpointLocation", f"{base}/ck")
-            .trigger(availableNow=True)
-            .start()
+        return interval_join(
+            ls, rs, on="user_id", left_ts="ts", right_ts="ts",
+            lower_ms=0, upper_ms=6 * 3600 * 1000,
+            watermark_delay="90 days", prefix="p_",
         )
-        q.awaitTermination()
-    t = spark.read.parquet(out_dir)
+
+    t = _run_stream(
+        spark,
+        base,
+        [
+            (clicks, "user_id long, event_id long, ts_ms long"),
+            (purchases, "user_id long, event_id long, ts_ms long, value double"),
+        ],
+        join,
+        _stateful_width(spark, n_clicks + n_purchases),
+    )
     return t.select(
         "user_id",
         "event_id",
@@ -3738,51 +3405,32 @@ def q_funnel_stream_events(spark, sf_dir):
     B2 per-key ordered-delivery contract, which the fold builds on); the
     latest emission per user + the stage-0 users IS the batch funnel, so
     the oracle is SQL_FUNNEL — unchanged by design."""
-    import tempfile
-    import uuid
-
     from oplogtoredis_spark.streaming.stateful import funnel_stream
 
     ev = _ev(spark, sf_dir)
     base = _scratch_dir(prefix="otr_fst_")
-    src = _dump_split_stream_dir(
+    src, _ = _dump_split_stream_dir(
         ev.select("user_id", _ts_ms().alias("ts_ms"), "event_type"),
         base,
         "events",
         "ts_ms",
     )
     stages = ("signup", "click", "purchase")
-    stream = (
-        spark.readStream.schema(
-            "user_id long, ts_ms long, event_type string"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    name = f"fst_{uuid.uuid4().hex[:8]}"
     # core-count width, NOT the feed-scaled width the JVM state stores
     # want: this stream's state lives in applyInPandasWithState Python
     # workers, where width = fold parallelism (16 parts measured 8.7 s vs
     # 6.5 s at 32 on the same host)
-    with _stream_state_parallelism(spark):
-        q = (
-            funnel_stream(stream, stages)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{base}/ck")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    emitted = _run_stream(
+        spark,
+        base,
+        [(src, "user_id long, ts_ms long, event_type string")],
+        lambda s: funnel_stream(s, stages),
+        spark.sparkContext.defaultParallelism,
+    )
     ts_cols = [f"t_{s}_ms" for s in stages]
-    latest = (
-        spark.table(name)
-        .groupBy("user_id")
-        .agg(
-            F.max("stage").alias("stage"),
-            *[F.max_by(c, "stage").alias(c) for c in ts_cols],
-        )
+    latest = emitted.groupBy("user_id").agg(
+        F.max("stage").alias("stage"),
+        *[F.max_by(c, "stage").alias(c) for c in ts_cols],
     )
     users = _ev(spark, sf_dir, par=True).select("user_id").distinct()
     return users.join(latest, "user_id", "left").select(
@@ -3800,40 +3448,24 @@ def q_heavy_hitters_stream_events(spark, sf_dir):
     batch GROUP BY to the row (the oracle). The stream is a REAL
     availableNow run over two time-split files (cross-batch count
     accumulation exercised, not single-batch)."""
-    import tempfile
-    import uuid
-
     from oplogtoredis_spark.streaming.stateful import heavy_hitters_stream
 
     base = _scratch_dir(prefix="otr_hh_")
     # split on event_id (the r5 fixture's order); files carry the extra
     # event_id column, which the readStream schema projection drops
-    src = _dump_split_stream_dir(
+    src, rows = _dump_split_stream_dir(
         _ev(spark, sf_dir).select("event_id", "event_type"),
         base,
         "events",
         "event_id",
     )
-    stream = (
-        spark.readStream.schema("event_type string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    summaries = _run_stream(
+        spark,
+        base,
+        [(src, "event_type string")],
+        lambda s: heavy_hitters_stream(s, "event_type", capacity=8, n_partitions=4),
+        _stateful_width(spark, rows),
     )
-    name = f"hh_{uuid.uuid4().hex[:8]}"
-    with _stream_state_parallelism(spark, width=_stateful_width(spark, src)):
-        q = (
-            heavy_hitters_stream(
-                stream, "event_type", capacity=8, n_partitions=4
-            )
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{base}/ck")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    summaries = spark.table(name)
     return (
         summaries.groupBy("pid", "item")
         .agg(F.max_by("n", "ver").alias("n"))
@@ -3856,9 +3488,6 @@ def q_stream_dedup_events(spark, sf_dir):
     once no duplicate can still arrive — the streaming analogue of the
     lake MERGE's replay-window idempotency, which absorbs redeliveries
     relationally instead). The oracle is plain DISTINCT."""
-    import tempfile
-    import uuid
-
     ev = _ev(spark, sf_dir)
     base = _scratch_dir(prefix="otr_sdd_")
     feed = ev.select(
@@ -3867,40 +3496,23 @@ def q_stream_dedup_events(spark, sf_dir):
     # batch 2 carries a SECOND copy of every dup-subset row: first-half
     # originals are redelivered CROSS-batch (checkpointed state absorbs
     # them), second-half ones intra-batch — both postures exercised
-    src = _dump_split_stream_dir(
+    src, rows = _dump_split_stream_dir(
         feed,
         base,
         "events",
         "ts_ms",
         extra_second=feed.where(F.col("event_id") % 3 == 0),
     )
-    stream = (
-        spark.readStream.schema(
-            "event_id long, user_id long, event_type string, ts_ms long"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .withColumn("ts", F.timestamp_millis("ts_ms"))
+    out = _run_stream(
+        spark,
+        base,
+        [(src, "event_id long, user_id long, event_type string, ts_ms long")],
+        lambda s: s.withColumn("ts", F.timestamp_millis("ts_ms"))
         .withWatermark("ts", "90 days")
+        .dropDuplicatesWithinWatermark(["event_id"]),
+        _stateful_width(spark, rows),
     )
-    # parquet file sink (guide §5): the r5 memory sink collected the ~1M
-    # surviving rows to the driver per run; a file sink on the scratch dir
-    # keeps the output distributed and the read-back is a plain scan
-    out_dir = f"{base}/out"
-    with _stream_state_parallelism(spark, width=_stateful_width(spark, src)):
-        q = (
-            stream.dropDuplicatesWithinWatermark(["event_id"])
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .outputMode("append")
-            .option("checkpointLocation", f"{base}/ck")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(out_dir).select(
-        "event_id", "user_id", "event_type", "ts_ms"
-    )
+    return out.select("event_id", "user_id", "event_type", "ts_ms")
 
 
 SQL_STREAM_DEDUP = """
@@ -4562,8 +4174,6 @@ def q_incremental_semdedup(spark, sf_dir):
     within each epoch's affected clusters under the frozen coarse
     quantizer; final live state = the full table, so the oracle is the
     batch semdedup SQL UNCHANGED — value-exact convergence through churn."""
-    import tempfile
-
     from oplogtoredis_spark.operators.semantic_corpus import SemanticCorpus
 
     emb = _emb(spark, sf_dir).select(
@@ -4609,8 +4219,6 @@ def q_follow_lake_semdedup(spark, sf_dir):
     extras. The keep set follows each snapshot via the net changelog under
     the frozen coarse quantizer; final live state = the full embeddings
     table, so the oracle is the batch semdedup SQL UNCHANGED."""
-    import tempfile
-
     from oplogtoredis_spark.operators.semantic_corpus import SemanticCorpus
     from oplogtoredis_spark.sources.schemas import TARGET_SCHEMA
     from oplogtoredis_spark.streaming.lake import LakeTable
@@ -4619,18 +4227,10 @@ def q_follow_lake_semdedup(spark, sf_dir):
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
     vid = F.col("vec_id")
-
-    def env(df, ts, op="u"):
-        return df.select(
-            F.lit("emb").alias("repo"),
-            vid.cast("string").alias("path"),
-            F.lit(ts << 32).cast("long").alias("ts"),
-            vid.cast("int").alias("tx_idx"),
-            F.lit(op).alias("op"),
-            F.lit(f"c{ts}").alias("commit"),
-            F.lit("en").alias("lang"),
-            F.to_json(F.col("v")).alias("content"),
-        )
+    emb_env = dict(
+        key="vec_id", repo=F.lit("emb"), lang=F.lit("en"),
+        content=F.to_json(F.col("v")),
+    )
 
     t = LakeTable.create(
         _scratch_dir(prefix="otr_flsem_") + "/tbl", TARGET_SCHEMA,
@@ -4648,21 +4248,21 @@ def q_follow_lake_semdedup(spark, sf_dir):
     extras = emb.where(vid % 11 == 0).select(
         (vid + 1000000).alias("vec_id"), "v"
     )
-    # data-scaled epoch width: MB-scale fixture epochs at the
-    # session's 128 analytics reduce width were pure task-launch
-    # overhead (the _epoch_shuffle_scale discipline; scoped to the
-    # core count, never a constant)
-    with _stream_state_parallelism(spark):
+    with scoped_shuffle_partitions(spark, spark.sparkContext.defaultParallelism):
         t.merge_batch(
-            env(first.where(~is_draft).unionByName(drafts)
-                .unionByName(extras), 1),
+            _env(first.where(~is_draft).unionByName(drafts)
+                .unionByName(extras), 1, **emb_env),
             0,
         )
         state.follow_lake(spark, t, repo="emb")
         upserts = emb.where(
             ((vid >= 256) & (vid % 3 != 0)) | ((vid % 3 == 0) & is_draft)
         )
-        t.merge_batch(env(upserts, 2).unionByName(env(extras, 2, op="d")), 1)
+        t.merge_batch(
+            _env(upserts, 2, **emb_env)
+            .unionByName(_env(extras, 2, op="d", **emb_env)),
+            1,
+        )
         state.follow_lake(spark, t, repo="emb")
     return state.kept(spark).select(F.col("doc_id").alias("vec_id"), "cid")
 

@@ -1,26 +1,13 @@
-"""Engine configuration, env-var driven.
+"""Engine configuration: a frozen dataclass that callers build directly.
 
 Mirrors the shape of the reference's envconfig struct
 (/root/reference/lib/config/main.go:13-36) with Spark-appropriate semantics.
-Every knob has a safe default so tests never need the environment.
+Every field has a safe default.
 """
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
-
-
-def _env_int(name: str, default: int) -> int:
-    raw = os.environ.get(name)
-    return int(raw) if raw not in (None, "") else default
-
-
-def _env_bool(name: str, default: bool) -> bool:
-    raw = os.environ.get(name)
-    if raw in (None, ""):
-        return default
-    return raw.lower() in ("1", "true", "yes", "on")
 
 
 @dataclass(frozen=True)
@@ -54,21 +41,6 @@ class EngineConfig:
 
     # --- denylist (lib/denylist/) -------------------------------------------
     denylist: tuple[str, ...] = field(default_factory=tuple)
-
-    @staticmethod
-    def from_env() -> "EngineConfig":
-        deny = tuple(
-            x for x in os.environ.get("OTR_SPARK_DENYLIST", "").split(",") if x
-        )
-        return EngineConfig(
-            max_catch_up_seconds=_env_int("OTR_SPARK_MAX_CATCH_UP_SECONDS", 120),
-            target_buckets=_env_int("OTR_SPARK_TARGET_BUCKETS", 32),
-            resume_from_end_on_failure=_env_bool(
-                "OTR_SPARK_RESUME_FROM_END_ON_FAILURE", False
-            ),
-            start_mode=os.environ.get("OTR_SPARK_START_MODE", "replay"),
-            denylist=deny,
-        )
 
 
 DEFAULT_CONFIG = EngineConfig()

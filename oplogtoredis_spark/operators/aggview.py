@@ -43,6 +43,8 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..streaming.lake import footer_rows
+
 
 class IncrementalAggView:
     """A persisted (group_cols → n_rows, sum_e4) view following a LakeTable.
@@ -168,7 +170,7 @@ class IncrementalAggView:
         new.write.mode("overwrite").parquet(tmp)
         shutil.rmtree(out, ignore_errors=True)
         os.replace(tmp, out)
-        n_groups = self._footer_rows(out)
+        n_groups = footer_rows(out)
         meta = {"lake_version": to_v, "groups": n_groups}
         mt = self._marker + ".tmp"
         with open(mt, "w") as f:
@@ -181,17 +183,6 @@ class IncrementalAggView:
             ):
                 shutil.rmtree(os.path.join(self._dir, d), ignore_errors=True)
         return meta
-
-    @staticmethod
-    def _footer_rows(pdir: str) -> int:
-        """Row count from parquet footers — no Spark job."""
-        import pyarrow.parquet as pq
-
-        return sum(
-            pq.ParquetFile(os.path.join(pdir, f)).metadata.num_rows
-            for f in os.listdir(pdir)
-            if f.endswith(".parquet")
-        )
 
 
 class IncrementalDistinctView:
@@ -236,7 +227,6 @@ class IncrementalDistinctView:
 
     followed_lake_version = IncrementalAggView.followed_lake_version
     _state_dir = IncrementalAggView._state_dir
-    _footer_rows = staticmethod(IncrementalAggView._footer_rows)
 
     def refs(self, spark: SparkSession) -> DataFrame:
         """(group_cols..., _val, _refs) live reference counts."""
@@ -309,7 +299,7 @@ class IncrementalDistinctView:
         new.write.mode("overwrite").parquet(tmp)
         shutil.rmtree(out, ignore_errors=True)
         os.replace(tmp, out)
-        meta = {"lake_version": to_v, "refs": self._footer_rows(out)}
+        meta = {"lake_version": to_v, "refs": footer_rows(out)}
         mt = self._marker + ".tmp"
         with open(mt, "w") as f:
             json.dump(meta, f)

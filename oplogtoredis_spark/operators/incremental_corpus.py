@@ -44,7 +44,6 @@ an applied-epoch marker for idempotent replay.
 
 from __future__ import annotations
 
-import contextlib
 import json
 import os
 import re
@@ -53,19 +52,10 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
+from ..session import scoped_shuffle_partitions
+from ..streaming.lake import footer_rows
 from .sampling import hash_split
 from .text import chunk_documents, quality_filter
-
-def _footer_rows(pdir: str) -> int:
-    """Row count from parquet footers — driver-side metadata, no Spark job."""
-    import pyarrow.parquet as pq
-
-    return sum(
-        pq.ParquetFile(os.path.join(pdir, f)).metadata.num_rows
-        for f in os.listdir(pdir)
-        if f.endswith(".parquet")
-    )
-
 
 _EDIR_RE = re.compile(r"^e(\d{6})$")
 _STAGING_SUFFIX = "_compact_staging"
@@ -196,44 +186,20 @@ class IncrementalCorpus:
     # ---------------- epoch step ----------------
     _ROWS_PER_PARTITION = 50_000
 
-    @contextlib.contextmanager
     def _epoch_shuffle_scale(self, spark: SparkSession):
-        """Scale shuffle parallelism to the epoch's WORKING SET for the
-        duration of one epoch's (eager) jobs. An epoch step runs ~10 small
+        """Scope one epoch's (eager) jobs to a width that tracks the
+        corpus state: ``max(4, state_rows / 50k + 4)`` partitions, with
+        state_rows from parquet footers. An epoch step runs ~10 small
         shuffles (fold window, affected-set distinct, survivor elections,
-        flip joins); under the session's reduce-parallelism floor (session.py
-        minPartitionNum = 4x cores, sized for the 16M-row LWW collapse) each
-        would schedule 128 near-empty tasks — measured ~13 s/epoch of pure
-        task scheduling at sf0.1/local[32] vs 1.8 s for the full batch
-        recompute. The right parallelism tracks data, so: partitions =
-        clamp(state_rows / 50k, 4, session setting), with state_rows from
-        parquet footers (driver-side metadata, no Spark job — the same
-        discipline as the delta-row counters). A 100 TB corpus state keeps
-        the session's full parallelism; a bounded epoch stops paying
-        hundreds of micro-tasks. Restored on exit (the writes inside
-        apply_epoch are eager, so the scope is exact)."""
+        flip joins); a 100 TB state keeps the session's full width."""
         state_rows = sum(
-            _footer_rows(d)
+            footer_rows(d)
             for base in (self._members_dir, self._chunks_dir)
             for d in self._delta_dirs(base)
         )
-        ceil_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        p = max(4, min(ceil_p, state_rows // self._ROWS_PER_PARTITION + 4))
-        if p >= ceil_p:
-            yield
-            return
-        floor_key = "spark.sql.adaptive.coalescePartitions.minPartitionNum"
-        old_floor = spark.conf.get(floor_key, None)
-        spark.conf.set("spark.sql.shuffle.partitions", str(p))
-        spark.conf.set(floor_key, str(p))
-        try:
-            yield
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", str(ceil_p))
-            if old_floor is None:
-                spark.conf.unset(floor_key)
-            else:
-                spark.conf.set(floor_key, old_floor)
+        return scoped_shuffle_partitions(
+            spark, max(4, state_rows // self._ROWS_PER_PARTITION + 4)
+        )
 
     def apply_epoch(
         self,
@@ -405,8 +371,8 @@ class IncrementalCorpus:
             "epoch": epoch,
             # driver-side footer metadata, not Spark jobs (same discipline
             # as LakeTable's per-bucket lineage counts)
-            "member_delta_rows": _footer_rows(mdir),
-            "chunk_delta_rows": _footer_rows(cdir),
+            "member_delta_rows": footer_rows(mdir),
+            "chunk_delta_rows": footer_rows(cdir),
         }
 
     # ---------------- follow a CDC lake (changelog-driven epochs) -------

@@ -40,6 +40,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..streaming.lake import footer_rows
 from .aggview import IncrementalAggView
 from .text import tokens
 
@@ -71,7 +72,6 @@ class IncrementalIndexView:
 
     followed_lake_version = IncrementalAggView.followed_lake_version
     _state_dir = IncrementalAggView._state_dir
-    _footer_rows = staticmethod(IncrementalAggView._footer_rows)
 
     # ---------------- reads ----------------
     def postings(self, spark: SparkSession) -> DataFrame:
@@ -156,7 +156,7 @@ class IncrementalIndexView:
         new.write.mode("overwrite").parquet(tmp)
         shutil.rmtree(out, ignore_errors=True)
         os.replace(tmp, out)
-        meta = {"lake_version": to_v, "postings": self._footer_rows(out)}
+        meta = {"lake_version": to_v, "postings": footer_rows(out)}
         mt = self._marker + ".tmp"
         with open(mt, "w") as f:
             json.dump(meta, f)

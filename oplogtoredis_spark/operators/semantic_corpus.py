@@ -48,14 +48,15 @@ within a document"), the same contract streaming/history.py builds on.
 
 from __future__ import annotations
 
-import contextlib
 import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
-from .incremental_corpus import _EDIR_RE, _applied_delta_dirs, _footer_rows
+from ..session import scoped_shuffle_partitions
+from ..streaming.lake import footer_rows
+from .incremental_corpus import _EDIR_RE, _applied_delta_dirs
 
 MEMBER_SCHEMA = (
     "epoch long, op string, doc_id long, cid int, vec array<double>, nrm double"
@@ -175,35 +176,18 @@ class SemanticCorpus:
     # ---------------- epoch step ----------------
     _ROWS_PER_PARTITION = 50_000
 
-    @contextlib.contextmanager
     def _epoch_shuffle_scale(self, spark: SparkSession):
-        """Epoch jobs run at data-scaled parallelism (incremental_corpus's
-        measured fix: the session's reduce floor schedules 128 near-empty
-        tasks per tiny shuffle otherwise). Partitions = clamp(state_rows /
-        50k, 4, session ceiling); state_rows from parquet footers —
-        driver-side metadata, no Spark job."""
+        """Scope one epoch's (eager) jobs to ``max(4, state_rows / 50k +
+        4)`` partitions, with state_rows from parquet footers (the
+        incremental_corpus formula)."""
         state_rows = sum(
-            _footer_rows(d)
+            footer_rows(d)
             for base in (self._members_dir, self._keep_dir)
             for d in self._delta_dirs(base)
         )
-        ceil_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        p = max(4, min(ceil_p, state_rows // self._ROWS_PER_PARTITION + 4))
-        if p >= ceil_p:
-            yield
-            return
-        floor_key = "spark.sql.adaptive.coalescePartitions.minPartitionNum"
-        old_floor = spark.conf.get(floor_key, None)
-        spark.conf.set("spark.sql.shuffle.partitions", str(p))
-        spark.conf.set(floor_key, str(p))
-        try:
-            yield
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", str(ceil_p))
-            if old_floor is None:
-                spark.conf.unset(floor_key)
-            else:
-                spark.conf.set(floor_key, old_floor)
+        return scoped_shuffle_partitions(
+            spark, max(4, state_rows // self._ROWS_PER_PARTITION + 4)
+        )
 
     def apply_epoch(
         self,
@@ -441,8 +425,8 @@ class SemanticCorpus:
         os.replace(tmp, self._marker)
         return {
             "epoch": epoch,
-            "member_delta_rows": _footer_rows(mdir),
-            "keep_delta_rows": _footer_rows(kdir),
+            "member_delta_rows": footer_rows(mdir),
+            "keep_delta_rows": footer_rows(kdir),
         }
 
     # ---------------- follow a CDC lake (changelog-driven epochs) -------

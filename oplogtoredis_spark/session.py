@@ -9,6 +9,7 @@ cluster the same builder is used by spark-submit; only master/memory differ.
 from __future__ import annotations
 
 import atexit
+import contextlib
 import os
 import shutil
 import tempfile
@@ -18,6 +19,9 @@ from pyspark.sql import SparkSession
 
 #: per-process directory holding the package zip; removed at exit
 _PKG_DIR: str | None = None
+
+#: AQE's reduce-width floor (deprecated in Spark 4.1, still honoured)
+_FLOOR_KEY = "spark.sql.adaptive.coalescePartitions.minPartitionNum"
 
 
 def _ship_package(spark: SparkSession) -> None:
@@ -105,10 +109,7 @@ def get_spark(
     # via thousands of tiny tasks — bench.py note). Runtime-set because the
     # right value depends on the session's actual core count.
     try:
-        spark.conf.set(
-            "spark.sql.adaptive.coalescePartitions.minPartitionNum",
-            str(4 * spark.sparkContext.defaultParallelism),
-        )
+        spark.conf.set(_FLOOR_KEY, str(4 * spark.sparkContext.defaultParallelism))
     except Exception:
         pass  # conf removed in a future Spark: coalescing stays default
     # AQE coalesce floor history (the minPartitionNum floor set above is
@@ -131,3 +132,39 @@ def get_spark(
     )
     _ship_package(spark)
     return spark
+
+
+@contextlib.contextmanager
+def scoped_shuffle_partitions(spark: SparkSession, n: int):
+    """Run the enclosed jobs at reduce width ``n``: sets
+    ``spark.sql.shuffle.partitions`` and the coalescing floor to ``n``, and
+    restores both on exit, also when the body raises. Does nothing when
+    ``n`` is not below the session's width, so large data keeps the
+    session's full parallelism.
+
+    Data-scaled epoch width: MB-scale epoch and fixture jobs at the
+    session's analytics reduce width (128 at bench scale) are pure
+    task-launch overhead — an incremental-corpus epoch spent ~13 s
+    scheduling near-empty tasks at sf0.1/local[32] against 1.8 s for the
+    full batch recompute. Callers derive ``n`` from the data (parquet
+    footer row counts, feed size) or the core count, never a constant. A
+    fresh stream checkpoint pins its state-store partition count from this
+    setting, so a stream started inside the scope keeps ``n`` state
+    partitions. Scope only eager work: a lazy plan built inside runs at
+    whatever width is set when it executes."""
+    key = "spark.sql.shuffle.partitions"
+    ceil = spark.conf.get(key)
+    if n >= int(ceil):
+        yield
+        return
+    old_floor = spark.conf.get(_FLOOR_KEY, None)
+    spark.conf.set(key, str(n))
+    spark.conf.set(_FLOOR_KEY, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, ceil)
+        if old_floor is None:
+            spark.conf.unset(_FLOOR_KEY)
+        else:
+            spark.conf.set(_FLOOR_KEY, old_floor)

@@ -119,6 +119,20 @@ def _read_parquet(
             spark.conf.set(_LISTING_THRESHOLD, prev)
 
 
+def footer_rows(path: str) -> int:
+    """Row count of a parquet file, or of every parquet file directly in a
+    dir, from the footers: driver-side metadata, no Spark job."""
+    import pyarrow.parquet as pq
+
+    if os.path.isdir(path):
+        return sum(
+            footer_rows(os.path.join(path, f))
+            for f in os.listdir(path)
+            if f.endswith(".parquet")
+        )
+    return pq.ParquetFile(path).metadata.num_rows
+
+
 def _footer_col_range(path: str, col: str):
     """(min, max) for ``col`` across a parquet file's row groups, from the
     footer only (no data read) — None when stats are absent/unusable."""
@@ -1475,26 +1489,18 @@ class LakeTable:
 
         buckets = dict(m["buckets"])
         bucket_deltas = {b: list(ds) for b, ds in m.get("bucket_deltas", {}).items()}
+        # per-partition lineage (north_star): row count per written bucket,
+        # read from the parquet footers just written — driver-side metadata
+        # only, no extra Spark job; a bucket with no readable dir has none
         bucket_rows: dict[str, int] = {}
-
-        def _footer_rows(bdir: str) -> int | None:
-            # per-partition lineage (north_star): row count per written
-            # bucket, read from the parquet footers just written —
-            # driver-side metadata only, no extra Spark job
+        for b in affected:
             try:
-                import pyarrow.parquet as pq
-
-                return sum(
-                    pq.ParquetFile(os.path.join(bdir, f)).metadata.num_rows
-                    for f in os.listdir(bdir)
-                    if f.endswith(".parquet")
-                )
+                bucket_rows[str(b)] = footer_rows(os.path.join(out_dir, f"pb={b}"))
             except Exception:
-                return None
+                pass
 
         if merge_mode == "mor":
             for b in affected:
-                bdir = os.path.join(out_dir, f"pb={b}")
                 bucket_deltas.setdefault(str(b), []).append(
                     {
                         "dir": os.path.join(rel_dir, f"pb={b}"),
@@ -1502,18 +1508,11 @@ class LakeTable:
                         "sid": schema_id,
                     }
                 )
-                nrows = _footer_rows(bdir)
-                if nrows is not None:
-                    bucket_rows[str(b)] = nrows
         else:
             for b in affected:
-                bdir = os.path.join(out_dir, f"pb={b}")
-                if os.path.exists(bdir):
+                if os.path.exists(os.path.join(out_dir, f"pb={b}")):
                     buckets[str(b)] = os.path.join(rel_dir, f"pb={b}")
                     bucket_schema_id[str(b)] = schema_id
-                    nrows = _footer_rows(bdir)
-                    if nrows is not None:
-                        bucket_rows[str(b)] = nrows
                 else:
                     buckets.pop(str(b), None)  # bucket emptied (all rows gone)
                     bucket_schema_id.pop(str(b), None)

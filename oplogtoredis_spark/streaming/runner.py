@@ -233,7 +233,7 @@ def resolve_start_policy(
         if not cfg.resume_from_end_on_failure:
             raise RuntimeError(
                 "checkpoint exists but is unreadable; refusing to silently "
-                "skip events (set OTR_SPARK_RESUME_FROM_END_ON_FAILURE to override)"
+                "skip events (set EngineConfig.resume_from_end_on_failure to override)"
             )
         _archive_checkpoint(checkpoint_dir, "unreadable")
         return _catch_up_cutoff_opts(cfg)

@@ -97,3 +97,38 @@ def test_scratch_dirs_removed_at_exit(tmp_path):
     assert all(os.path.dirname(d) == str(base) for d in made)
     assert not any(os.path.exists(d) for d in made)
     assert base.is_dir() and foreign.is_dir()
+
+
+def test_stream_fixtures_leave_no_views_or_streams(spark):
+    """The stateful stream fixtures write a parquet file sink, not a memory
+    sink: a run leaves no temp view and no active stream behind."""
+    tables = sorted(t.name for t in spark.catalog.listTables())
+    streams = [q.id for q in spark.streams.active]
+    for name in ("funnel_stream_events", "heavy_hitters_stream_events"):
+        assert entry_mod.queries()[name](spark, SF).count() > 0
+    assert sorted(t.name for t in spark.catalog.listTables()) == tables
+    assert [q.id for q in spark.streams.active] == streams
+
+
+def test_run_stream_empty_output_keeps_schema(spark, tmp_path):
+    """A stream that emits no rows reads back as an empty DataFrame with
+    the stream's schema (schema inference over an empty sink would fail)."""
+    from pyspark.sql import functions as F
+
+    base = str(tmp_path)
+    feed = spark.range(10).select(
+        F.col("id").alias("k"), (F.col("id") * 10).alias("ts_ms")
+    )
+    src, rows = entry_mod._dump_split_stream_dir(feed, base, "feed", "ts_ms")
+    assert rows == 10
+    out = entry_mod._run_stream(
+        spark,
+        base,
+        [(src, "k long, ts_ms long")],
+        lambda s: s.where(F.col("k") < 0).select(
+            "k", (F.col("ts_ms") * 2).alias("t2")
+        ),
+        2,
+    )
+    assert out.schema.simpleString() == "struct<k:bigint,t2:bigint>"
+    assert out.count() == 0

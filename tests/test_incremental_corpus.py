@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from oplogtoredis_spark.operators.incremental_corpus import IncrementalCorpus
 from oplogtoredis_spark.operators.sampling import hash_split
+from oplogtoredis_spark.operators.semantic_corpus import SemanticCorpus
 from oplogtoredis_spark.operators.text import chunk_documents, quality_filter
 
 GATE = dict(min_tokens=3, min_alpha_ratio=0.3, min_quality=0.0, langs=())
@@ -138,13 +139,36 @@ def test_compact_preserves_state_and_bounds_deltas(spark, tmp_path):
     assert 0 not in set(c.chunks(spark).toPandas()["doc_id"])
 
 
-def test_epoch_shuffle_scale_tracks_state_and_restores(spark, tmp_path):
+def _inc_corpus(spark, tmp_path):
+    corpus = IncrementalCorpus(str(tmp_path / "c"), **GATE)
+    batch = _batch(
+        spark, [(i, f"alpha beta gamma delta doc{i}", "u") for i in range(6)]
+    )
+    return corpus, batch
+
+
+def _sem_corpus(spark, tmp_path):
+    corpus = SemanticCorpus(
+        str(tmp_path / "c"), threshold=0.95, n_centroids=2, sample_per_centroid=4
+    )
+    batch = spark.createDataFrame(
+        [(i, [1.0, float(i), 0.5 * i, -1.0], "u") for i in range(6)],
+        "doc_id long, embedding array<double>, op string",
+    )
+    return corpus, batch
+
+
+@pytest.mark.parametrize(
+    "make", [_inc_corpus, _sem_corpus], ids=["IncrementalCorpus", "SemanticCorpus"]
+)
+def test_epoch_shuffle_scale_tracks_state_and_restores(spark, tmp_path, make):
     """Epoch jobs run at data-scaled shuffle parallelism: a bounded epoch
     must not pay the session's reduce-parallelism floor (128 micro-tasks
     per tiny shuffle — measured ~13 s/epoch at sf0.1/local[32] before the
     fix), while a large state keeps the session ceiling. The session conf
-    is restored exactly, even across an epoch that raises."""
-    c = IncrementalCorpus(str(tmp_path / "c"), **GATE)
+    is restored exactly, even across an epoch that raises. Both corpus
+    operators scope their epochs through session.scoped_shuffle_partitions."""
+    c, batch = make(spark, tmp_path)
     ceil_p = spark.conf.get("spark.sql.shuffle.partitions")
     floor_key = "spark.sql.adaptive.coalescePartitions.minPartitionNum"
     old_floor = spark.conf.get(floor_key, None)
@@ -157,14 +181,15 @@ def test_epoch_shuffle_scale_tracks_state_and_restores(spark, tmp_path):
     assert spark.conf.get(floor_key, None) == old_floor
 
     # a real epoch leaves the session conf untouched (scope is the epoch)
-    c.apply_epoch(
-        spark,
-        _batch(
-            spark,
-            [(i, f"alpha beta gamma delta doc{i}", "u") for i in range(6)],
-        ),
-        0,
-    )
+    c.apply_epoch(spark, batch, 0)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == ceil_p
+    assert spark.conf.get(floor_key, None) == old_floor
+
+    # an epoch that raises inside the scope restores the conf too
+    with pytest.raises(RuntimeError, match="epoch failed"):
+        with c._epoch_shuffle_scale(spark):
+            assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
+            raise RuntimeError("epoch failed")
     assert spark.conf.get("spark.sql.shuffle.partitions") == ceil_p
     assert spark.conf.get(floor_key, None) == old_floor
 
