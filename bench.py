@@ -32,6 +32,7 @@ taken in the best window available, never blocked indefinitely.
 
 from __future__ import annotations
 
+import atexit
 import json
 import os
 import shutil
@@ -49,6 +50,12 @@ EVENTS_CACHE = os.environ.get(
 REPS = max(1, int(os.environ.get("OTR_BENCH_REPS", "3")))
 QUIET_WAIT = float(os.environ.get("OTR_BENCH_QUIET_WAIT", "180"))
 QUIET_LOAD = float(os.environ.get("OTR_BENCH_QUIET_LOAD", "8"))
+#: the CDC steps' tables and checkpoints, rebuilt on every run and removed
+#: at process exit (EVENTS_CACHE is an input cache and stays)
+WORK_DIRS = [
+    f"/tmp/otr_bench_{name}_{CPUS}"
+    for name in ("stream", "stream_mor", "stream_mor_nc", "stream_mor_ac", "clustered")
+]
 
 HEADLINE = [
     "cdc_final_state",
@@ -153,12 +160,14 @@ def _force(df) -> int:
 
 
 def _git_rev() -> str | None:
+    """Short HEAD hash, suffixed ``-dirty`` when tracked files differ from
+    it, so a run of uncommitted changes never carries its parent's stamp."""
     try:
         import subprocess
 
         return (
             subprocess.run(
-                ["git", "rev-parse", "--short", "HEAD"],
+                ["git", "describe", "--always", "--dirty", "--exclude", "*"],
                 cwd=os.path.dirname(os.path.abspath(__file__)),
                 capture_output=True, text=True, timeout=10,
             ).stdout.strip()
@@ -213,6 +222,9 @@ def _ensure_events() -> str:
 
 
 def main() -> None:
+    atexit.register(
+        lambda: [shutil.rmtree(d, ignore_errors=True) for d in WORK_DIRS]
+    )
     # OTR_BENCH_ONLY=a,b,c runs just those headline queries and emits a
     # clearly-labelled SUBSET artifact (no CDC section) — for re-measuring
     # a few queries inside a short quiet window on this noisy shared host.

@@ -23,9 +23,20 @@ the same properties Iceberg gives on a real cluster (swap `LakeTable` for
      late-arriving older event can never resurrect a deleted row; the read
      view filters them.
 
-Single-writer assumption: exactly one streaming query writes a table (true
-for Structured Streaming sinks; Iceberg would arbitrate concurrent writers
-with optimistic retry — out of scope here and unneeded by the design).
+One placement rule: every commit that rewrites a bucket — the CoW merge,
+compact, compact_buckets, rebucket, rewrite_clustered — places each row by
+``bucket_for(repo, path, n_buckets)``, never by its stored ``bucket``
+column, and refuses to commit when a row read from a replaced bucket
+hashes outside the replaced set. The maintenance rewrites share one body
+(``LakeTable._rewrite``); every bucket replacement, merge included, goes
+through one manifest rule (``LakeTable._replace_buckets``).
+
+Writers: one streaming query normally writes a table (true for Structured
+Streaming sinks). Concurrent writers are still safe: the snapshot claim is
+optimistic (``_write_manifest``), and ``merge_batch`` re-reads the table
+and retries a lost claim up to ``COMMIT_RETRIES`` times with jittered
+backoff (Iceberg's commit-retry analogue). Maintenance rewrites do not
+retry; a lost claim raises ``ConcurrentCommitError``.
 
 Scale notes: the manifest is O(n_buckets) — thousands of entries, driver-side
 JSON, no data-plane cost. At 100 TB you size n_buckets so a bucket's live
@@ -43,7 +54,7 @@ import threading
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from ..functions.routing import bucket_for
@@ -642,32 +653,15 @@ class LakeTable:
                 else:
                     del paths[b]
                     del sel[b]
-        cur_sid = m.get("schema_id", object())
         if not paths:
             df = spark.createDataFrame([], schema)
-        elif all(
-            m.get("bucket_schema_id", {}).get(b) == cur_sid for b in sel
-        ):
-            # fast path: every selected bucket was written at the current
-            # schema id — read with the explicit schema (no driver-side
-            # mergeSchema footer scan, measured 0.25-0.8 s per epoch)
-            df = _read_parquet(
-                spark, [p for ps in paths.values() for p in ps], schema
-            )
         else:
-            # buckets written at older schema ids → per-sid conformed reads
+            bsid = m.get("bucket_schema_id", {})
             df = self._read_conformed(
-                spark,
-                m,
-                schema,
-                [
-                    (m.get("bucket_schema_id", {}).get(b), p)
-                    for b, ps in paths.items()
-                    for p in ps
-                ],
+                spark, m, schema, [(bsid.get(b), p) for b, ps in paths.items() for p in ps]
             )
         if dsel:
-            df = self._merge_deltas_on_read(spark, df, dsel, schema, cur_sid, m)
+            df = self._merge_deltas_on_read(spark, df, dsel, schema, m)
         if not include_deleted:
             df = df.where(~F.col("deleted"))
         return df
@@ -806,36 +800,48 @@ class LakeTable:
         m: dict,
         schema: T.StructType,
         sid_dirs: list,
+        extra: tuple[T.StructField, Column] | None = None,
     ) -> DataFrame:
-        """Read a mixed-schema-id set of parquet dirs, every row conformed
-        to ``schema``. Grouped by RECORDED schema id; each group is read
-        with its registered schema and cast-conformed. This is what makes
-        type-WIDENING evolution readable: parquet mergeSchema cannot
+        """Read (schema id, parquet path) pairs, every row conformed to
+        ``schema``. When every path was written at the current schema id
+        this is one scan with the explicit schema (no driver-side
+        mergeSchema footer scan, measured 0.25-0.8 s per epoch).
+
+        Otherwise paths are grouped by RECORDED schema id; each group is
+        read with its registered schema and cast-conformed. This is what
+        makes type-WIDENING evolution readable: parquet mergeSchema cannot
         reconcile an int32-file/int64-file column (StructType.merge throws
         'incompatible data types'), so a widened table would otherwise
         wedge every read — and compaction, which reads first — once old
-        and new buckets coexist. Dirs with no recorded sid (pre-tracking
+        and new buckets coexist. Paths with no recorded sid (pre-tracking
         snapshots) keep the legacy mergeSchema path: they can only differ
-        additively."""
+        additively.
+
+        ``extra`` (field, column) appends one column computed PER SCAN,
+        before the union: file-metadata columns such as
+        ``_metadata.file_path`` do not resolve across a union."""
+        def scan(ds: list, s: T.StructType | None) -> DataFrame:
+            df = _read_parquet(spark, ds, s)
+            return df.withColumn(extra[0].name, extra[1]) if extra else df
+
         groups: dict = {}
         for sid, d in sid_dirs:
             groups.setdefault(sid, []).append(d)
+        if set(groups) == {m.get("schema_id", object())}:
+            return scan([d for _, d in sid_dirs], schema)
+        target = T.StructType([*schema.fields, extra[0]]) if extra else schema
         schemas = m.get("schemas", {"0": m["schema"]})
-        parts = []
         unknown = groups.pop(None, [])
+        reads = []
         for sid, ds in groups.items():
             sj = schemas.get(str(sid))
             if sj is None:
                 unknown += ds
-                continue
-            s = T.StructType.fromJson(json.loads(sj))
-            parts.append(
-                conform_to_schema(_read_parquet(spark, ds, s), schema)
-            )
+            else:
+                reads.append((ds, T.StructType.fromJson(json.loads(sj))))
         if unknown:
-            parts.append(
-                conform_to_schema(_read_parquet(spark, unknown), schema)
-            )
+            reads.append((unknown, None))
+        parts = [conform_to_schema(scan(ds, s), target) for ds, s in reads]
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
@@ -847,7 +853,6 @@ class LakeTable:
         base: DataFrame,
         dsel: dict,
         schema: T.StructType,
-        cur_sid,
         m: dict,
     ) -> DataFrame:
         """Merge-on-read: base ∪ deltas → one LWW max_by collapse per key.
@@ -860,12 +865,11 @@ class LakeTable:
         On a bucketed layout both sides are co-partitioned by construction,
         so a real cluster's storage-partitioned join/agg keeps this
         shuffle-free."""
-        sid_dirs: list = []
-        sids: set = set()
-        for entries in dsel.values():
-            for e in entries:
-                sid_dirs.append((e.get("sid"), os.path.join(self.path, e["dir"])))
-                sids.add(e.get("sid"))
+        sid_dirs = [
+            (e.get("sid"), os.path.join(self.path, e["dir"]))
+            for entries in dsel.values()
+            for e in entries
+        ]
         # anchored to the table-relative suffix (delta-dir/pb=N/file at the
         # END of the path): a table path that itself contains a
         # "delta/vNNNNNNNN-" substring can no longer alias every delta to the
@@ -875,35 +879,10 @@ class LakeTable:
             r"delta/v(\d{8})-[0-9a-f]+/pb=\d+/[^/]+$",
             1,
         ).cast("long")
-        if sids == {cur_sid}:
-            d = _read_parquet(
-                spark, [p for _, p in sid_dirs], schema
-            ).withColumn("_seq", seq_expr)
-        else:
-            # mixed schema ids: per-sid conformed reads, like
-            # _read_conformed — but _seq must be captured PER SCAN
-            # (file-metadata columns do not resolve across a union)
-            target = T.StructType(
-                list(schema.fields) + [T.StructField("_seq", T.LongType(), True)]
-            )
-            schemas_reg = m.get("schemas", {"0": m["schema"]})
-            groups: dict = {}
-            for sid, p in sid_dirs:
-                groups.setdefault(sid, []).append(p)
-            parts = []
-            for sid, ds in groups.items():
-                sj = schemas_reg.get(str(sid)) if sid is not None else None
-                raw = _read_parquet(
-                    spark,
-                    ds,
-                    T.StructType.fromJson(json.loads(sj)) if sj is not None else None,
-                )
-                parts.append(
-                    conform_to_schema(raw.withColumn("_seq", seq_expr), target)
-                )
-            d = parts[0]
-            for p in parts[1:]:
-                d = d.unionByName(p)
+        d = self._read_conformed(
+            spark, m, schema, sid_dirs,
+            extra=(T.StructField("_seq", T.LongType(), True), seq_expr),
+        )
         u = base.withColumn("_seq", F.lit(-1).cast("long")).unionByName(d)
         key = ["repo", "path"]
         data_cols = [f.name for f in schema.fields if f.name not in key]
@@ -1449,28 +1428,9 @@ class LakeTable:
             # partitionBy writer splits per dir within each task)
             to_write.write.partitionBy("pb").mode("overwrite").parquet(out_dir)
             metrics = observed_row(obs)
-            written = sorted(
-                int(d[3:]) for d in os.listdir(out_dir) if d.startswith("pb=")
-            )
+            written = self._written_buckets(m, out_dir, None if dense else affected)
             if dense:
                 affected = written
-            elif not set(written) <= set(affected):
-                # a row read from a touched bucket hashes to an untouched
-                # one: committing would drop it (that bucket's base is not
-                # rewritten). After a concurrent commit (the target read
-                # resolves CURRENT) it is a lost race; otherwise the stored
-                # layout is corrupt: fail loud, commit nothing
-                if self.current_version() != m["version"]:
-                    raise ConcurrentCommitError(
-                        f"version {m['version']} was superseded during the merge"
-                    )
-                stray = sorted(set(written) - set(affected))
-                raise RuntimeError(
-                    f"{self.path}: rows read from touched buckets hash to "
-                    f"untouched buckets {stray[:8]}; the stored layout breaks "
-                    "bucket_for(repo, path, n_buckets) (see fsck) — nothing "
-                    "committed"
-                )
         else:
             # empty batch (everything filtered): no data change, but the
             # batch id must still commit so replay recognizes the epoch
@@ -1485,10 +1445,7 @@ class LakeTable:
         if new_schema.json() != m["schema"]:
             schema_id = max(int(k) for k in schemas) + 1
             schemas[str(schema_id)] = new_schema.json()
-        bucket_schema_id = dict(m.get("bucket_schema_id", {}))
 
-        buckets = dict(m["buckets"])
-        bucket_deltas = {b: list(ds) for b, ds in m.get("bucket_deltas", {}).items()}
         # per-partition lineage (north_star): row count per written bucket,
         # read from the parquet footers just written — driver-side metadata
         # only, no extra Spark job; a bucket with no readable dir has none
@@ -1500,6 +1457,9 @@ class LakeTable:
                 pass
 
         if merge_mode == "mor":
+            # bases and their index entries stay in place (delta-carrying
+            # buckets are read whole regardless — the stale-redelivery rule)
+            bucket_deltas = {b: list(ds) for b, ds in m.get("bucket_deltas", {}).items()}
             for b in affected:
                 bucket_deltas.setdefault(str(b), []).append(
                     {
@@ -1508,50 +1468,11 @@ class LakeTable:
                         "sid": schema_id,
                     }
                 )
+            bucket_fields = {"bucket_deltas": bucket_deltas}
         else:
-            for b in affected:
-                if os.path.exists(os.path.join(out_dir, f"pb={b}")):
-                    buckets[str(b)] = os.path.join(rel_dir, f"pb={b}")
-                    bucket_schema_id[str(b)] = schema_id
-                else:
-                    buckets.pop(str(b), None)  # bucket emptied (all rows gone)
-                    bucket_schema_id.pop(str(b), None)
-                # a CoW rewrite is an incremental compaction for this bucket:
-                # the target read above resolved its deltas, so the rewritten
-                # base already contains their effects — drop the entries
-                # (expire_snapshots reclaims the dirs once unreferenced)
-                bucket_deltas.pop(str(b), None)
-
-        # index bookkeeping: file_stats/file_blooms (written by
-        # rewrite_clustered) CARRY FORWARD across merges, minus the entries
-        # of buckets whose BASE this merge replaced (their files are gone;
-        # keeping the keys would be dead weight, though never unsound — a
-        # missing entry means "keep the file"). MoR merges leave bases in
-        # place, so every entry survives (delta-carrying buckets are read
-        # whole regardless — the stale-redelivery rule). Without this,
-        # point-lookup bloom pruning silently died at the first merge after
-        # a rewrite, for UNTOUCHED buckets too.
-        replaced_dirs = (
-            {
-                m["buckets"][str(b)]
-                for b in affected
-                if str(b) in m["buckets"]
-            }
-            if merge_mode != "mor"
-            else set()
-        )
-
-        def _live_entries(idx: dict) -> dict:
-            return {
-                k: v
-                for k, v in idx.items()
-                if k.rsplit("/", 1)[0] not in replaced_dirs
-            }
-
-        # the bloom index travels by sidecar REFERENCE: an epoch that
-        # replaces no bloom-carrying bucket copies one string (no IO, no
-        # re-serialization); one that does writes a filtered sidecar once
-        blooms_ref = self._filtered_blooms_ref(m, replaced_dirs)
+            # a CoW rewrite is an incremental compaction of each affected
+            # bucket: the target read resolved its deltas into the new base
+            bucket_fields = self._replace_buckets(m, rel_dir, affected, schema_id)
 
         # replay bookkeeping: recent epoch keys verbatim (bounded window) +
         # per-namespace high-watermark covering everything older — manifest
@@ -1583,21 +1504,16 @@ class LakeTable:
             affected_frac_prev = m.get("affected_frac")
 
         new_manifest = {
+            **m,
             "version": new_version,
             "schema": new_schema.json(),
             "schema_id": schema_id,
             "schemas": schemas,
-            "bucket_schema_id": bucket_schema_id,
-            "n_buckets": n_buckets,
-            "buckets": buckets,
-            "bucket_deltas": bucket_deltas,
             "applied_batch_ids": recent,
             "applied_watermarks": watermarks,
             "affected_frac": affected_frac,
             "affected_frac_prev": affected_frac_prev,
-            "file_stats": _live_entries(m.get("file_stats", {})),
-            "file_blooms": {},
-            "file_blooms_ref": blooms_ref,
+            **bucket_fields,
         }
 
         # quarantine BEFORE the manifest commit: once the manifest marks the
@@ -1662,6 +1578,144 @@ class LakeTable:
         self._append_lineage(epoch_key, stats)
         return stats
 
+    # ---------------- bucket rewrites ----------------
+    def _written_buckets(
+        self, m: dict, out_dir: str, selected=None
+    ) -> list[int]:
+        """The buckets a rewrite of snapshot ``m`` wrote (its ``pb=`` dirs
+        under ``out_dir``). With ``selected`` — the buckets the rewrite
+        read and replaces — every written bucket must be one of them: a
+        row read from a selected bucket that hashes to another would be
+        dropped by the commit, since that bucket's base is not replaced.
+        After a concurrent commit (the read resolved CURRENT) that is a
+        lost race and raises ConcurrentCommitError; otherwise the stored
+        layout is corrupt and raises RuntimeError. Nothing is committed
+        either way."""
+        written = sorted(
+            int(d[3:]) for d in os.listdir(out_dir) if d.startswith("pb=")
+        )
+        stray = sorted(set(written) - set(selected)) if selected is not None else []
+        if stray:
+            if self.current_version() != m["version"]:
+                raise ConcurrentCommitError(
+                    f"version {m['version']} was superseded during the rewrite"
+                )
+            raise RuntimeError(
+                f"{self.path}: rows read from touched buckets hash to "
+                f"untouched buckets {stray[:8]}; the stored layout breaks "
+                "bucket_for(repo, path, n_buckets) (see fsck) — nothing "
+                "committed"
+            )
+        return written
+
+    def _replace_buckets(
+        self, m: dict, rel_dir: str, replaced, schema_id: int
+    ) -> dict:
+        """The one manifest rule for buckets a commit rewrote into
+        ``rel_dir`` (the CoW merge and every maintenance rewrite). A
+        replaced bucket's base becomes its ``pb=`` dir there, stamped with
+        ``schema_id``, or leaves the manifest when the rewrite emptied it.
+        Its merge-on-read deltas are dropped: the rewrite read them, so the
+        new base holds their effects (expire_snapshots reclaims the dirs
+        once unreferenced). Untouched buckets keep their entries verbatim.
+
+        Index entries (``file_stats`` and the bloom sidecar, written by
+        rewrite_clustered) carry forward for base dirs that stay live and
+        are dropped for the rest, whose files are gone. A missing entry
+        only means "keep the file", but dropping every entry would end
+        point-lookup pruning for UNTOUCHED buckets at the first merge after
+        a rewrite. Returns the manifest fields this rule owns."""
+        buckets = dict(m["buckets"])
+        sids = dict(m.get("bucket_schema_id", {}))
+        deltas = dict(m.get("bucket_deltas", {}))
+        for b in map(str, replaced):
+            d = os.path.join(rel_dir, f"pb={b}")
+            if os.path.isdir(os.path.join(self.path, d)):
+                buckets[b], sids[b] = d, schema_id
+            else:
+                buckets.pop(b, None)
+                sids.pop(b, None)
+            deltas.pop(b, None)
+        live = set(buckets.values())
+        return {
+            "buckets": buckets,
+            "bucket_schema_id": sids,
+            "bucket_deltas": deltas,
+            "file_stats": {
+                k: v
+                for k, v in m.get("file_stats", {}).items()
+                if k.rsplit("/", 1)[0] in live
+            },
+            "file_blooms": {},
+            "file_blooms_ref": self._filtered_blooms_ref(m, live),
+        }
+
+    def _rewrite(
+        self,
+        spark: SparkSession,
+        op: str,
+        drop_tombstones_older_than_ts: int,
+        summary,
+        buckets: list[int] | None = None,
+        n_buckets: int | None = None,
+        layout=None,
+        index=None,
+    ) -> dict:
+        """The one maintenance rewrite, as its own snapshot commit
+        (single-writer discipline: call it between epochs, from the
+        stream's control loop).
+
+        Reads the live rows of ``buckets`` (None = the whole table) with
+        base ∪ deltas resolved, drops tombstones ordered before
+        ``drop_tombstones_older_than_ts``, and places every row by
+        ``bucket_for(repo, path, n)`` at the target count ``n``
+        (``n_buckets``, default the table's) — never by its stored
+        ``bucket`` column, which a foreign writer or a stale layout can get
+        wrong. The rows go to one ``data/v…`` dir partitioned by ``pb``: by
+        default one hash-partitioned task per target bucket (one file per
+        bucket); ``layout(rows, m)`` may shape the write instead. The
+        written buckets must lie in the selection (_written_buckets), the
+        manifest takes them through _replace_buckets (``index(rel_dir,
+        buckets)`` may then supply index fields for the written files), and
+        one lineage record ``{op}:{version}`` holds ``summary(manifest)``
+        plus the version, which is also returned."""
+        m = self.manifest()
+        n = n_buckets or m["n_buckets"]
+        if buckets is None:  # every bucket at the old and the target count
+            replaced = {
+                *range(n), *map(int, m["buckets"]), *map(int, m.get("bucket_deltas", {}))
+            }
+        else:
+            replaced = set(buckets)
+        rows = (
+            self.read(spark, include_deleted=True, buckets=buckets)
+            .where(
+                ~F.col("deleted")
+                | (F.col("last_ts") >= F.lit(drop_tombstones_older_than_ts))
+            )
+            .withColumn("bucket", bucket_for(F.col("repo"), F.col("path"), n))
+            .withColumn("pb", F.col("bucket"))
+        )
+        if layout is None:
+            out = rows.repartition(n if buckets is None else len(replaced), F.col("pb"))
+        else:
+            out = layout(rows, m)
+        version = m["version"] + 1
+        rel_dir = f"data/v{version:08d}-{uuid.uuid4().hex[:8]}"
+        out_dir = os.path.join(self.path, rel_dir)
+        out.write.partitionBy("pb").mode("overwrite").parquet(out_dir)
+        self._written_buckets(m, out_dir, replaced)
+        fields = self._replace_buckets(
+            m, rel_dir, replaced, int(m.get("schema_id", 0))
+        )
+        if index is not None:
+            fields.update(index(rel_dir, fields["buckets"]))
+        committed = {**m, **fields, "version": version, "n_buckets": n}
+        self._write_manifest(committed)
+        stats = {**summary(committed), "version": version}
+        self._append_lineage(f"{op}:{version}", stats)
+        return stats
+
     # ---------------- maintenance ----------------
     def compact(self, spark: SparkSession, drop_tombstones_older_than_ts: int) -> dict:
         """Rewrite every bucket, dropping tombstones whose total order is
@@ -1671,53 +1725,17 @@ class LakeTable:
         passed, a delete's tombstone is no longer needed to fence late
         older events and can be reclaimed.
 
-        Runs as its own snapshot commit; safe between streaming batches
-        (single-writer discipline: call it from the same control loop).
-
-        For merge-on-read tables this is ALSO the delta fold: the read below
-        resolves base ∪ deltas through the LWW collapse, the rewrite
-        materializes that resolved state as the new base, and the new
-        manifest clears ``bucket_deltas`` — after compaction reads take the
-        delta-free fast path again (Iceberg v2's rewrite_data_files +
-        rewrite_position_delete_files analogue, emitted by
-        IcebergSinkPlanner.compact).
+        For merge-on-read tables this is ALSO the delta fold: the rewrite
+        reads base ∪ deltas through the LWW collapse, materializes that
+        resolved state as the new base, and clears ``bucket_deltas`` —
+        after compaction reads take the delta-free fast path again (Iceberg
+        v2's rewrite_data_files + rewrite_position_delete_files analogue,
+        emitted by IcebergSinkPlanner.compact). See _rewrite for the commit.
         """
-        m = self.manifest()
-        live = self.read(spark, include_deleted=True)
-        kept = live.where(
-            (~F.col("deleted")) | (F.col("last_ts") >= F.lit(drop_tombstones_older_than_ts))
+        return self._rewrite(
+            spark, "compact", drop_tombstones_older_than_ts,
+            lambda _: {"compacted": True},
         )
-        new_version = m["version"] + 1
-        rel_dir = f"data/v{new_version:08d}-{uuid.uuid4().hex[:8]}"
-        out_dir = os.path.join(self.path, rel_dir)
-        (
-            kept.withColumn("pb", F.col("bucket"))
-            .repartition(m["n_buckets"], F.col("pb"))
-            .write.partitionBy("pb")
-            .mode("overwrite")
-            .parquet(out_dir)
-        )
-        buckets = {}
-        for b in range(m["n_buckets"]):
-            bdir = os.path.join(out_dir, f"pb={b}")
-            if os.path.exists(bdir):
-                buckets[str(b)] = os.path.join(rel_dir, f"pb={b}")
-        # every surviving bucket is rewritten at the current schema
-        cur_sid = int(m.get("schema_id", 0))
-        new_manifest = {
-            **m,
-            "version": new_version,
-            "buckets": buckets,
-            "bucket_schema_id": {b: cur_sid for b in buckets},
-            "bucket_deltas": {},  # deltas are folded into the new base
-            "file_stats": {},  # described the replaced files
-            "file_blooms": {},
-            "file_blooms_ref": "",
-        }
-        self._write_manifest(new_manifest)
-        stats = {"compacted": True, "version": new_version}
-        self._append_lineage(f"compact:{new_version}", stats)
-        return stats
 
     def compact_buckets(
         self,
@@ -1731,62 +1749,15 @@ class LakeTable:
         verbatim. This is the 100 TB compaction unit (Iceberg's
         rewrite_data_files with a partition filter): a table with thousands
         of buckets compacts the handful over threshold, never the world.
-        Runs as its own snapshot commit (single-writer discipline applies,
-        same as compact)."""
-        m = self.manifest()
+        A row in a selected bucket whose key hashes outside the selection
+        fails the fold loudly (see _rewrite)."""
         sel = sorted(int(b) for b in buckets)
         if not sel:
             return {"compacted": False, "buckets": []}
-        live = self.read(spark, include_deleted=True, buckets=sel)
-        kept = live.where(
-            (~F.col("deleted"))
-            | (F.col("last_ts") >= F.lit(drop_tombstones_older_than_ts))
+        return self._rewrite(
+            spark, "compact_buckets", drop_tombstones_older_than_ts,
+            lambda _: {"compacted": True, "buckets": sel}, buckets=sel,
         )
-        new_version = m["version"] + 1
-        rel_dir = f"data/v{new_version:08d}-{uuid.uuid4().hex[:8]}"
-        out_dir = os.path.join(self.path, rel_dir)
-        (
-            kept.withColumn("pb", F.col("bucket"))
-            .repartition(len(sel), F.col("pb"))
-            .write.partitionBy("pb")
-            .mode("overwrite")
-            .parquet(out_dir)
-        )
-        buckets_map = dict(m["buckets"])
-        bsid = dict(m.get("bucket_schema_id", {}))
-        bdeltas = {b: list(ds) for b, ds in m.get("bucket_deltas", {}).items()}
-        cur_sid = int(m.get("schema_id", 0))
-        replaced_dirs = {m["buckets"][str(b)] for b in sel if str(b) in m["buckets"]}
-        for b in sel:
-            bdir = os.path.join(out_dir, f"pb={b}")
-            if os.path.exists(bdir):
-                buckets_map[str(b)] = os.path.join(rel_dir, f"pb={b}")
-                bsid[str(b)] = cur_sid
-            else:
-                buckets_map.pop(str(b), None)
-                bsid.pop(str(b), None)
-            bdeltas.pop(str(b), None)
-        self._write_manifest(
-            {
-                **m,
-                "version": new_version,
-                "buckets": buckets_map,
-                "bucket_schema_id": bsid,
-                "bucket_deltas": bdeltas,
-                # untouched buckets keep their stats/bloom entries; the
-                # folded buckets' files are gone — drop their keys
-                "file_stats": {
-                    k: v
-                    for k, v in m.get("file_stats", {}).items()
-                    if k.rsplit("/", 1)[0] not in replaced_dirs
-                },
-                "file_blooms": {},
-                "file_blooms_ref": self._filtered_blooms_ref(m, replaced_dirs),
-            }
-        )
-        stats = {"compacted": True, "version": new_version, "buckets": sel}
-        self._append_lineage(f"compact_buckets:{new_version}", stats)
-        return stats
 
     def rebucket(
         self,
@@ -1807,9 +1778,10 @@ class LakeTable:
         merge rewrites only the buckets a batch's keys hash to — a key
         whose old row lived under a different modulus would silently
         duplicate). So the rebucket rewrites ALL live rows (tombstones
-        within retention included) with a recomputed ``bucket`` column and
-        flips ``n_buckets`` in the same atomic manifest commit; there is no
-        mixed-modulus state a reader or merger can ever observe. MoR deltas
+        within retention included) through _rewrite, which places every
+        row by the new count, and flips ``n_buckets`` in the same atomic
+        manifest commit; there is no mixed-modulus state a reader or merger
+        can ever observe. MoR deltas
         fold into the new base (same as compact). Old snapshots keep their
         own ``n_buckets`` and dirs — time travel and tags read the old
         layout unchanged until expiry. The merge's plan-fragment cache keys
@@ -1818,9 +1790,8 @@ class LakeTable:
         describe the replaced files; re-run rewrite_clustered to rebuild
         them — pruning simply keeps everything in between).
 
-        Runs as its own snapshot commit; single-writer discipline applies
-        (call it between epochs, like compact). Shape: one full-table scan,
-        one shuffle on the new bucket id — the same cost as compact()."""
+        Shape: one full-table scan, one shuffle on the new bucket id — the
+        same cost as compact()."""
         if new_n_buckets < 1:
             raise ValueError(f"n_buckets must be >= 1, got {new_n_buckets}")
         m = self.manifest()
@@ -1830,53 +1801,16 @@ class LakeTable:
                 "n_buckets": new_n_buckets,
                 "version": m["version"],
             }
-        live = self.read(spark, include_deleted=True)
-        kept = live.where(
-            (~F.col("deleted"))
-            | (F.col("last_ts") >= F.lit(drop_tombstones_older_than_ts))
-        )
-        new_version = m["version"] + 1
-        rel_dir = f"data/v{new_version:08d}-{uuid.uuid4().hex[:8]}"
-        out_dir = os.path.join(self.path, rel_dir)
-        (
-            kept.withColumn(
-                "bucket",
-                bucket_for(F.col("repo"), F.col("path"), new_n_buckets),
-            )
-            .withColumn("pb", F.col("bucket"))
-            .repartition(new_n_buckets, F.col("pb"))
-            .write.partitionBy("pb")
-            .mode("overwrite")
-            .parquet(out_dir)
-        )
-        buckets = {}
-        for b in range(new_n_buckets):
-            bdir = os.path.join(out_dir, f"pb={b}")
-            if os.path.exists(bdir):
-                buckets[str(b)] = os.path.join(rel_dir, f"pb={b}")
-        cur_sid = int(m.get("schema_id", 0))
-        self._write_manifest(
-            {
-                **m,
-                "version": new_version,
+        return self._rewrite(
+            spark, "rebucket", drop_tombstones_older_than_ts,
+            lambda nm: {
+                "rebucketed": True,
                 "n_buckets": new_n_buckets,
-                "buckets": buckets,
-                "bucket_schema_id": {b: cur_sid for b in buckets},
-                "bucket_deltas": {},  # folded into the new base
-                "file_stats": {},  # described the replaced files
-                "file_blooms": {},
-                "file_blooms_ref": "",
-            }
+                "from_n_buckets": m["n_buckets"],
+                "buckets_live": len(nm["buckets"]),
+            },
+            n_buckets=new_n_buckets,
         )
-        stats = {
-            "rebucketed": True,
-            "version": new_version,
-            "n_buckets": new_n_buckets,
-            "from_n_buckets": m["n_buckets"],
-            "buckets_live": len(buckets),
-        }
-        self._append_lineage(f"rebucket:{new_version}", stats)
-        return stats
 
     def maybe_rebucket(
         self,
@@ -2026,8 +1960,8 @@ class LakeTable:
         bucket); the clustering happens within buckets: range-partitioning
         the write on (pb, <order>) makes each task hold a contiguous
         (bucket, value-range) slab, so each written file's footer min/max
-        is tight. Runs as its own snapshot commit; single-writer discipline
-        applies, same as compact."""
+        is tight. Runs as its own snapshot commit through _rewrite, same as
+        compact."""
         if not cluster_by:
             raise ValueError("cluster_by must name at least one column")
         if strategy not in ("linear", "zorder"):
@@ -2038,101 +1972,75 @@ class LakeTable:
             )
         if bloom_hashes < 1:
             raise ValueError(f"bloom_hashes must be >= 1, got {bloom_hashes}")
-        m = self.manifest()
-        live = self.read(spark, include_deleted=True)
+        schema = self.schema
         for c in bloom_cols:
-            if c not in live.columns or c in ("pb", "_z"):
+            if c not in schema.fieldNames() or c in ("pb", "_z"):
                 raise ValueError(f"bloom column not in the table: {c!r}")
-        kept = live.where(
-            (~F.col("deleted"))
-            | (F.col("last_ts") >= F.lit(drop_tombstones_older_than_ts))
-        )
-        if strategy == "zorder":
-            kept, order_cols = self._with_zorder_key(
-                kept, list(cluster_by), int(zorder_bits)
+
+        def layout(rows: DataFrame, m: dict) -> DataFrame:
+            if strategy == "zorder":
+                rows, order_cols = self._with_zorder_key(
+                    rows, list(cluster_by), int(zorder_bits)
+                )
+            else:
+                order_cols = list(cluster_by)
+            n_parts = max(1, len(m["buckets"])) * max(1, int(files_per_bucket))
+            return (
+                rows.repartitionByRange(
+                    n_parts, F.col("pb"), *[F.col(c) for c in order_cols]
+                )
+                .sortWithinPartitions("pb", *order_cols)
+                .drop("_z")
             )
-        else:
-            order_cols = list(cluster_by)
-        n_parts = max(1, len(m["buckets"])) * max(1, int(files_per_bucket))
-        new_version = m["version"] + 1
-        rel_dir = f"data/v{new_version:08d}-{uuid.uuid4().hex[:8]}"
-        out_dir = os.path.join(self.path, rel_dir)
-        (
-            kept.withColumn("pb", F.col("bucket"))
-            .repartitionByRange(
-                n_parts, F.col("pb"), *[F.col(c) for c in order_cols]
+
+        def index(rel_dir: str, buckets: dict) -> dict:
+            # persist the just-written files' column stats INTO the manifest
+            # (Iceberg's manifest min/max layout): prune_plan then plans
+            # reads with zero data-file IO. Keyed by table-relative file
+            # path, so a later rewrite (new dirs) can never consult them.
+            file_stats: dict = {}
+            for rel_bdir in buckets.values():
+                bdir = os.path.join(self.path, rel_bdir)
+                for f in os.listdir(bdir):
+                    if not f.endswith(".parquet"):
+                        continue
+                    per_col = {}
+                    # bloom cols ride along: eq-lookup planning then needs no
+                    # footer IO either (stats range check with lo = hi = eq)
+                    for c in dict.fromkeys([*cluster_by, *bloom_cols]):
+                        rng = _footer_col_range(os.path.join(bdir, f), c)
+                        if rng is not None and all(
+                            isinstance(v, (int, float, str, bool))
+                            for v in rng
+                        ):
+                            per_col[c] = [rng[0], rng[1]]
+                    if per_col:
+                        file_stats[f"{rel_bdir}/{f}"] = per_col
+            blooms = (
+                self._build_file_blooms(
+                    spark, rel_dir, buckets, list(bloom_cols), schema,
+                    int(bloom_bits), int(bloom_hashes),
+                )
+                if bloom_cols
+                else {}
             )
-            .sortWithinPartitions("pb", *order_cols)
-            .drop("_z")
-            .write.partitionBy("pb")
-            .mode("overwrite")
-            .parquet(out_dir)
-        )
-        buckets = {}
-        for b in range(m["n_buckets"]):
-            bdir = os.path.join(out_dir, f"pb={b}")
-            if os.path.exists(bdir):
-                buckets[str(b)] = os.path.join(rel_dir, f"pb={b}")
-        # persist the just-written files' column stats INTO the manifest
-        # (Iceberg's manifest min/max layout): prune_plan then plans reads
-        # with zero data-file IO. Keyed by table-relative file path, so a
-        # later CoW/compact rewrite (new dirs) can never consult stale
-        # entries; entries for files this rewrite replaced are dropped.
-        file_stats: dict = {}
-        for b, rel_bdir in buckets.items():
-            bdir = os.path.join(self.path, rel_bdir)
-            for f in os.listdir(bdir):
-                if not f.endswith(".parquet"):
-                    continue
-                per_col = {}
-                # bloom cols ride along: eq-lookup planning then needs no
-                # footer IO either (stats range check with lo = hi = eq)
-                for c in dict.fromkeys([*cluster_by, *bloom_cols]):
-                    rng = _footer_col_range(os.path.join(bdir, f), c)
-                    if rng is not None and all(
-                        isinstance(v, (int, float, str, bool))
-                        for v in rng
-                    ):
-                        per_col[c] = [rng[0], rng[1]]
-                if per_col:
-                    file_stats[f"{rel_bdir}/{f}"] = per_col
-        file_blooms: dict = {}
-        if bloom_cols:
-            file_blooms = self._build_file_blooms(
-                spark,
-                rel_dir,
-                buckets,
-                list(bloom_cols),
-                live.schema,
-                int(bloom_bits),
-                int(bloom_hashes),
-            )
-        cur_sid = int(m.get("schema_id", 0))
-        self._write_manifest(
-            {
-                **m,
-                "version": new_version,
-                "buckets": buckets,
-                "bucket_schema_id": {b: cur_sid for b in buckets},
-                "bucket_deltas": {},  # folded into the new base
+            # blooms live in an immutable sidecar, the manifest names it
+            return {
                 "file_stats": file_stats,
-                "file_blooms": {},  # legacy inline slot — blooms live in
-                "file_blooms_ref": (  # the immutable sidecar
-                    self._write_bloom_sidecar(file_blooms)
-                    if file_blooms
-                    else ""
-                ),
+                "file_blooms_ref": self._write_bloom_sidecar(blooms) if blooms else "",
             }
+
+        return self._rewrite(
+            spark, "rewrite_clustered", drop_tombstones_older_than_ts,
+            lambda nm: {
+                "clustered": True,
+                "cluster_by": list(cluster_by),
+                "stat_files": len(nm["file_stats"]),
+                "bloom_files": len(self._load_blooms(nm)),
+            },
+            layout=layout,
+            index=index,
         )
-        stats = {
-            "clustered": True,
-            "version": new_version,
-            "cluster_by": list(cluster_by),
-            "stat_files": len(file_stats),
-            "bloom_files": len(file_blooms),
-        }
-        self._append_lineage(f"rewrite_clustered:{new_version}", stats)
-        return stats
 
     def _build_file_blooms(
         self,
@@ -2274,11 +2182,12 @@ class LakeTable:
             self._cache_sidecar(ref, blooms)
         return _BLOOM_SIDECAR_CACHE[key]
 
-    def _filtered_blooms_ref(self, m: dict, replaced_dirs: set) -> str:
-        """Carry the bloom index forward across a commit that replaced the
-        base dirs in ``replaced_dirs``: unchanged index → the SAME sidecar
-        name (one string copy, no IO); entries dropped (or legacy inline
-        blooms migrating) → one new filtered sidecar; empty → ''."""
+    def _filtered_blooms_ref(self, m: dict, live_dirs: set) -> str:
+        """Carry the bloom index forward across a commit whose base dirs
+        are ``live_dirs``, keeping only their files' entries: unchanged
+        index → the SAME sidecar name (one string copy, no IO); entries
+        dropped (or legacy inline blooms migrating) → one new filtered
+        sidecar; empty → ''."""
         ref = m.get("file_blooms_ref") or ""
         if not ref and not m.get("file_blooms"):
             return ""
@@ -2286,7 +2195,7 @@ class LakeTable:
         kept = {
             k: v
             for k, v in cur.items()
-            if k.rsplit("/", 1)[0] not in replaced_dirs
+            if k.rsplit("/", 1)[0] in live_dirs
         }
         if len(kept) == len(cur) and ref:
             return ref

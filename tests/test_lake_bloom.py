@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from oplogtoredis_spark.sources.schemas import TARGET_SCHEMA
 from oplogtoredis_spark.streaming.lake import LakeTable
+from tests.test_lake_skipping import _index_names_live_dirs
 
 
 N = 1024
@@ -172,17 +173,37 @@ def test_bloom_entries_survive_merges_for_untouched_buckets(spark, tmp_path):
 
 
 def test_bloom_entries_never_stale_after_cow_merge(spark, table):
-    """A later CoW merge rewrites touched buckets into NEW dirs; bloom
-    entries are keyed by file path, so rewritten files simply have no entry
-    (kept) and the pruned read stays exact."""
+    """Every bucket rewrite (a CoW merge, a bucket-scoped fold, a rebucket)
+    writes NEW dirs; bloom entries are keyed by file path, so entries of
+    replaced dirs are dropped (their files have no entry: kept), untouched
+    buckets keep theirs, and the pruned read stays exact."""
+
+    def exact():
+        _index_names_live_dirs(table)
+        for i in (0, 333):
+            got = table.read_pruned(spark, "h", eq=_h(i))
+            want = table.read(spark).where(F.col("h") == _h(i))
+            assert _rows(got) == _rows(want)
+            assert len(_rows(got)) == 1
+
+    # a CoW merge on one bucket's keys keeps the other bucket's entries
+    b0 = [r.path for r in table.read(spark).where(F.col("bucket") == 0).collect()]
+    table.merge_batch(
+        _batch(spark, [int(p) for p in b0[:8]], ts=8), 6, extra_payload_cols=("x", "h")
+    )
+    assert table._load_blooms(table.manifest())
+    exact()
     table.merge_batch(
         _batch(spark, range(0, N, 2), ts=9), 7, extra_payload_cols=("x", "h")
     )
-    for i in (0, 333):
-        got = table.read_pruned(spark, "h", eq=_h(i))
-        want = table.read(spark).where(F.col("h") == _h(i))
-        assert _rows(got) == _rows(want)
-        assert len(_rows(got)) == 1
+    exact()
+    table.rewrite_clustered(spark, ["x"], files_per_bucket=4, bloom_cols=["h"])
+    table.compact_buckets(spark, [1])
+    assert table._load_blooms(table.manifest())
+    exact()
+    table.rebucket(spark, 4)
+    assert not table._load_blooms(table.manifest())
+    exact()
 
 
 def test_delta_bucket_read_whole_under_eq(spark, tmp_path):

@@ -263,14 +263,37 @@ def test_zorder_preserves_state_and_validates(spark, grid_table):
         t.rewrite_clustered(spark, ["x", "y"], strategy="hilbert")
 
 
+def _index_names_live_dirs(t):
+    """Every file_stats / bloom key names a base dir the manifest lists."""
+    m = t.manifest()
+    keys = [*m.get("file_stats", {}), *t._load_blooms(m)]
+    assert {k.rsplit("/", 1)[0] for k in keys} <= set(m["buckets"].values())
+
+
+def _pruned_exact(spark, t, lang):
+    got = t.read_pruned(spark, "lang", lang, lang)
+    want = t.read(spark).where(F.col("lang") == lang)
+    assert _rows(got) == _rows(want)
+    return _rows(got)
+
+
 def test_manifest_stats_never_stale_after_rewrite(spark, table):
-    """A later CoW merge rewrites buckets into NEW dirs; manifest stats are
-    keyed by file path, so the rewritten buckets fall back to footers and
-    the pruned read stays exact."""
+    """Every bucket rewrite (a CoW merge, a bucket-scoped fold, a rebucket)
+    writes NEW dirs; manifest stats are keyed by file path, so entries of
+    replaced dirs are dropped, untouched buckets keep theirs, and the
+    pruned read stays exact."""
     table.rewrite_clustered(spark, ["lang"], files_per_bucket=3)
+    _index_names_live_dirs(table)
+    # a bucket-scoped fold keeps the untouched buckets' stats
+    table.compact_buckets(spark, [0])
+    _index_names_live_dirs(table)
+    assert table.manifest()["file_stats"]
+    _pruned_exact(spark, table, "en")
     # merge touches every bucket (ids 0..63 spread over 4 buckets)
     table.merge_batch(_batch(spark, range(0, 64, 2), ts=9, lang="fr"), 7)
-    got = table.read_pruned(spark, "lang", "fr", "fr")
-    want = table.read(spark).where(F.col("lang") == "fr")
-    assert _rows(got) == _rows(want)
-    assert len(_rows(got)) >= 32
+    _index_names_live_dirs(table)
+    assert len(_pruned_exact(spark, table, "fr")) >= 32
+    table.rewrite_clustered(spark, ["lang"], files_per_bucket=3)
+    table.rebucket(spark, 8)
+    _index_names_live_dirs(table)
+    assert len(_pruned_exact(spark, table, "fr")) >= 32

@@ -1,9 +1,9 @@
 """The CoW merge's physical layout and fixed per-epoch cost: one file per
 touched bucket from a write of at most one task per core, a target read
 that lists its bucket dirs without a Spark job, plan fragments shared by
-every LakeTable of the same shape, and a merge keyed on the bucket the key
-hashes to rather than the stored column. Also the log writer's explicit
-parquet types and the package zip's cleanup."""
+every LakeTable of the same shape, and a merge and maintenance rewrites
+keyed on the bucket the key hashes to rather than the stored column. Also
+the log writer's explicit parquet types and the package zip's cleanup."""
 
 from __future__ import annotations
 
@@ -177,6 +177,13 @@ def _rewrite_row(t, bucket, key, stored_bucket=None, move_to=None):
         write(df[hit], os.path.join(t.path, m["buckets"][str(move_to)]))
 
 
+def _one_row_per_key(spark, t, kb):
+    got = t.read(spark).toPandas()
+    assert got.groupby(["repo", "path"]).size().max() == 1
+    assert len(got) == sum(len(v) for v in kb.values())
+    return got
+
+
 def test_wrong_stored_bucket_still_yields_one_row_per_key(spark, tmp_path):
     t, kb = _seeded(spark, str(tmp_path / "t"), 8, n_keys=80)
     true_b, wrong_b = sorted(kb)[0], sorted(kb)[1]
@@ -205,6 +212,44 @@ def test_row_hashing_to_an_unread_bucket_fails_loud(spark, tmp_path):
     with pytest.raises(RuntimeError, match="untouched buckets"):
         t.merge_batch(batch, 1)
     assert t.current_version() == v
+    # a bucket-scoped fold of the foreign bucket refuses the same way
+    with pytest.raises(RuntimeError, match="untouched buckets"):
+        t.compact_buckets(spark, [foreign])
+    assert t.current_version() == v
+    # the whole-table fold puts the row back where its key hashes
+    t.compact(spark, 0)
+    _one_row_per_key(spark, t, kb)
+
+
+@pytest.mark.parametrize(
+    "rewrite", ["compact", "compact_buckets", "rewrite_clustered", "rebucket"]
+)
+def test_rewrites_place_rows_by_key_hash(spark, tmp_path, rewrite):
+    t, kb = _seeded(spark, str(tmp_path / "t"), 8, n_keys=80)
+    true_b, wrong_b = sorted(kb)[0], sorted(kb)[1]
+    key = kb[true_b][0]
+    _rewrite_row(t, true_b, key, stored_bucket=wrong_b)
+    v = t.current_version()
+    if rewrite == "compact":
+        t.compact(spark, 0)
+    elif rewrite == "compact_buckets":
+        try:
+            t.compact_buckets(spark, [true_b])
+        except RuntimeError:
+            assert t.current_version() == v  # refused, nothing committed
+    elif rewrite == "rewrite_clustered":
+        t.rewrite_clustered(spark, ["path"], files_per_bucket=2)
+    else:
+        t.rebucket(spark, 16)
+        t.rebucket(spark, 8)
+    _one_row_per_key(spark, t, kb)
+
+    # a one-key merge reads only the bucket the key hashes to
+    t.merge_batch(_batch(spark, [key], 9, "new"), 1)
+    got = _one_row_per_key(spark, t, kb)
+    row = got[(got["repo"] == key[0]) & (got["path"] == key[1])]
+    assert row["content"].tolist() == [f"new-{key[0]}/{key[1]}"]
+    assert row["bucket"].tolist() == [true_b]
 
 
 def test_stream_reads_single_row_file_with_null_diff(spark, tmp_path):
