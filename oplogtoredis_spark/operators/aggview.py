@@ -28,7 +28,9 @@ shuffle over the change rows; the stored view is O(groups) — rewriting it
 per step is the scale-correct choice (a grouped view of a 100 TB fact
 table is MBs). Idempotent replay: the view version IS the lake snapshot
 version; a crash between the state write and the marker advance rewrites
-the same deterministic state.
+the same deterministic state. That follow protocol (pinned first read,
+changelog step, fold, guard, versioned commit) is the lake-follower
+core's ``LakeView`` (operators/follow.py); this module holds the algebra.
 
 Reference analogue: downstream Redis consumers keeping counters from the
 publish stream (lib/redispub/publisher.go:41-62) — here the counter set is
@@ -37,16 +39,12 @@ maintained transactionally from the table's own changelog instead.
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..streaming.lake import footer_rows
+from .follow import LakeView
 
 
-class IncrementalAggView:
+class IncrementalAggView(LakeView):
     """A persisted (group_cols → n_rows, sum_e4) view following a LakeTable.
 
     ``value_expr`` is a SQL expression over the lake row (e.g.
@@ -55,6 +53,14 @@ class IncrementalAggView:
     across the predicate boundary retracts/contributes exactly once.
     """
 
+    _SUMS = ("n_rows", "sum_e4")
+    _GUARD = (
+        "IncrementalAggView: negative folded count — changelog retracted a"
+        " row never added",
+        None,
+    )
+    _COUNT = "groups"
+
     def __init__(
         self,
         base_dir: str,
@@ -62,32 +68,14 @@ class IncrementalAggView:
         value_expr: str,
         where: str | None = None,
     ):
-        if not group_cols:
-            raise ValueError("group_cols must name at least one column")
-        self._dir = base_dir
-        self._marker = os.path.join(base_dir, "_VIEW.json")
+        super().__init__(base_dir, "group_cols", group_cols)
         self.group_cols = tuple(group_cols)
         self.value_expr = value_expr
         self.where = where
-        os.makedirs(base_dir, exist_ok=True)
-
-    # ---------------- state ----------------
-    def followed_lake_version(self) -> int:
-        """Last lake snapshot folded into the view (-1 = never)."""
-        if not os.path.exists(self._marker):
-            return -1
-        with open(self._marker) as f:
-            return json.load(f)["lake_version"]
-
-    def _state_dir(self, version: int) -> str:
-        return os.path.join(self._dir, f"v{version:08d}")
 
     def read(self, spark: SparkSession) -> DataFrame:
         """(group_cols..., n_rows, sum_e4) at the followed version."""
-        v = self.followed_lake_version()
-        if v < 0:
-            raise ValueError("view has never followed the lake")
-        return spark.read.parquet(self._state_dir(v))
+        return self._state(spark)
 
     def summary(self, spark: SparkSession) -> DataFrame:
         """Reader-facing shape: (group_cols..., n_rows, value_sum)."""
@@ -97,7 +85,6 @@ class IncrementalAggView:
             (F.col("sum_e4") / F.lit(10000.0)).alias("value_sum"),
         )
 
-    # ---------------- maintenance ----------------
     def _signed(self, rows: DataFrame, sign_col) -> DataFrame:
         """(group_cols..., n_rows, sum_e4) signed contributions."""
         if self.where is not None:
@@ -120,72 +107,8 @@ class IncrementalAggView:
             )
         )
 
-    def follow_lake(self, spark: SparkSession, table) -> dict:
-        """Catch the view up to ``table``'s current snapshot. First follow
-        aggregates the live read; later follows fold only the net
-        changelog. Returns {"lake_version", "groups"} (or
-        {"up_to_date": True})."""
-        from_v = self.followed_lake_version()
-        to_v = table.current_version()
-        if to_v <= from_v:
-            return {"lake_version": from_v, "up_to_date": True}
-        if from_v < 0:
-            # PIN the first read to the snapshotted version: a concurrent
-            # HA-twin commit between current_version() and the read action
-            # would otherwise fold v+1's rows into state stamped as v —
-            # the next follow then re-applies changes(v, v+1) and
-            # double-counts forever (the enrich.py pinning discipline)
-            contrib = self._signed(table.read(spark, version=to_v), F.lit(1))
-        else:
-            ch = table.changes(spark, from_v, to_v)
-            sign = F.when(
-                F.col("_change_type").isin("insert", "update_postimage"),
-                F.lit(1),
-            ).otherwise(F.lit(-1))
-            contrib = self._signed(ch, sign)
-            contrib = self.read(spark).unionByName(contrib)
-        new = (
-            contrib.groupBy(*self.group_cols)
-            .agg(F.sum("n_rows").alias("n_rows"), F.sum("sum_e4").alias("sum_e4"))
-            # a NEGATIVE folded count is a broken changelog (a retraction
-            # for a row never added) — fail like the sibling views instead
-            # of silently committing corrupted state; == 0 is the normal
-            # retire-the-group case
-            .withColumn(
-                "n_rows",
-                F.when(
-                    F.assert_true(
-                        F.col("n_rows") >= 0,
-                        "IncrementalAggView: negative folded count — "
-                        "changelog retracted a row never added",
-                    ).isNull(),
-                    F.col("n_rows"),
-                ),
-            )
-            .where(F.col("n_rows") > 0)
-        )
-        out = self._state_dir(to_v)
-        tmp = out + ".inprogress"
-        shutil.rmtree(tmp, ignore_errors=True)
-        new.write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(out, ignore_errors=True)
-        os.replace(tmp, out)
-        n_groups = footer_rows(out)
-        meta = {"lake_version": to_v, "groups": n_groups}
-        mt = self._marker + ".tmp"
-        with open(mt, "w") as f:
-            json.dump(meta, f)
-        os.replace(mt, self._marker)
-        # retire superseded state (the marker is the commit point)
-        for d in os.listdir(self._dir):
-            if d.startswith("v") and d != f"v{to_v:08d}" and os.path.isdir(
-                os.path.join(self._dir, d)
-            ):
-                shutil.rmtree(os.path.join(self._dir, d), ignore_errors=True)
-        return meta
 
-
-class IncrementalDistinctView:
+class IncrementalDistinctView(LakeView):
     """Exact COUNT(DISTINCT expr) per group, incrementally maintained from
     the lake changelog — the aggregate retraction alone CANNOT maintain
     (knowing a value left the group says nothing about whether another row
@@ -197,17 +120,14 @@ class IncrementalDistinctView:
     pairs) — this is why engines ship HLL for the approximate case
     (operators/profile.py, analytics.distinct_count); this operator is the
     exact counterpart for group×value domains that fit (dimension-keyed
-    views, not free-text). The per-epoch fold is union + ONE groupBy over
-    (state ∪ signed changes) — no join; a bucketed layout makes the
-    rewrite O(changed buckets). A NEGATIVE refcount can only mean the
-    changelog violated its contract (a retraction for a row never added)
-    and fails loudly JVM-side via assert_true at write time — never
-    silently clamped.
-
-    Same commit discipline as IncrementalAggView: state version = lake
-    snapshot version, crash-rewrite idempotent, superseded versions
-    retired after the marker advances.
+    views, not free-text). The per-epoch fold is the shared LakeView fold
+    over (state ∪ signed changes) — no join; a bucketed layout makes the
+    rewrite O(changed buckets). A negative refcount fails loudly.
     """
+
+    _SUMS = ("_refs",)
+    _GUARD = ("negative refcount for value ", "_val")
+    _COUNT = "refs"
 
     def __init__(
         self,
@@ -216,24 +136,14 @@ class IncrementalDistinctView:
         distinct_expr: str,
         where: str | None = None,
     ):
-        if not group_cols:
-            raise ValueError("group_cols must name at least one column")
-        self._dir = base_dir
-        self._marker = os.path.join(base_dir, "_VIEW.json")
+        super().__init__(base_dir, "group_cols", group_cols, ("_val",))
         self.group_cols = tuple(group_cols)
         self.distinct_expr = distinct_expr
         self.where = where
-        os.makedirs(base_dir, exist_ok=True)
-
-    followed_lake_version = IncrementalAggView.followed_lake_version
-    _state_dir = IncrementalAggView._state_dir
 
     def refs(self, spark: SparkSession) -> DataFrame:
         """(group_cols..., _val, _refs) live reference counts."""
-        v = self.followed_lake_version()
-        if v < 0:
-            raise ValueError("view has never followed the lake")
-        return spark.read.parquet(self._state_dir(v))
+        return self._state(spark)
 
     def read(self, spark: SparkSession) -> DataFrame:
         """(group_cols..., n_distinct) — the maintained view."""
@@ -257,56 +167,3 @@ class IncrementalDistinctView:
             .groupBy(*self.group_cols, "_val")
             .agg(F.sum("_sign").alias("_refs"))
         )
-
-    def follow_lake(self, spark: SparkSession, table) -> dict:
-        from_v = self.followed_lake_version()
-        to_v = table.current_version()
-        if to_v <= from_v:
-            return {"lake_version": from_v, "up_to_date": True}
-        if from_v < 0:
-            # pinned first read — see IncrementalAggView.follow_lake
-            contrib = self._signed(table.read(spark, version=to_v), F.lit(1))
-        else:
-            ch = table.changes(spark, from_v, to_v)
-            sign = F.when(
-                F.col("_change_type").isin("insert", "update_postimage"),
-                F.lit(1),
-            ).otherwise(F.lit(-1))
-            contrib = self.refs(spark).unionByName(self._signed(ch, sign))
-        new = (
-            contrib.groupBy(*self.group_cols, "_val")
-            .agg(F.sum("_refs").alias("_refs"))
-            # contract guard BEFORE the zero-filter: a negative refcount is
-            # a broken changelog, not an empty value — fail, don't clamp
-            .withColumn(
-                "_refs",
-                F.when(
-                    F.assert_true(
-                        F.col("_refs") >= 0,
-                        F.concat(
-                            F.lit("negative refcount for value "),
-                            F.col("_val"),
-                        ),
-                    ).isNull(),
-                    F.col("_refs"),
-                ),
-            )
-            .where(F.col("_refs") > 0)
-        )
-        out = self._state_dir(to_v)
-        tmp = out + ".inprogress"
-        shutil.rmtree(tmp, ignore_errors=True)
-        new.write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(out, ignore_errors=True)
-        os.replace(tmp, out)
-        meta = {"lake_version": to_v, "refs": footer_rows(out)}
-        mt = self._marker + ".tmp"
-        with open(mt, "w") as f:
-            json.dump(meta, f)
-        os.replace(mt, self._marker)
-        for d in os.listdir(self._dir):
-            if d.startswith("v") and d != f"v{to_v:08d}" and os.path.isdir(
-                os.path.join(self._dir, d)
-            ):
-                shutil.rmtree(os.path.join(self._dir, d), ignore_errors=True)
-        return meta

@@ -34,18 +34,13 @@ version).
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..streaming.lake import footer_rows
-from .aggview import IncrementalAggView
+from .follow import LakeView
 from .text import tokens
 
 
-class IncrementalIndexView:
+class IncrementalIndexView(LakeView):
     """Persisted postings ``(id_cols..., token, tf)`` following a LakeTable.
 
     ``text_col`` names the lake column to tokenize; ``where`` optionally
@@ -54,6 +49,10 @@ class IncrementalIndexView:
     exactly once — the aggview discipline).
     """
 
+    _SUMS = ("tf",)
+    _GUARD = ("negative tf for token ", "token")
+    _COUNT = "postings"
+
     def __init__(
         self,
         base_dir: str,
@@ -61,25 +60,15 @@ class IncrementalIndexView:
         text_col: str = "content",
         where: str | None = None,
     ):
-        if not id_cols:
-            raise ValueError("id_cols must name at least one column")
-        self._dir = base_dir
-        self._marker = os.path.join(base_dir, "_VIEW.json")
+        super().__init__(base_dir, "id_cols", id_cols, ("token",))
         self.id_cols = tuple(id_cols)
         self.text_col = text_col
         self.where = where
-        os.makedirs(base_dir, exist_ok=True)
-
-    followed_lake_version = IncrementalAggView.followed_lake_version
-    _state_dir = IncrementalAggView._state_dir
 
     # ---------------- reads ----------------
     def postings(self, spark: SparkSession) -> DataFrame:
         """(id_cols..., token, tf) at the followed version."""
-        v = self.followed_lake_version()
-        if v < 0:
-            raise ValueError("index has never followed the lake")
-        return spark.read.parquet(self._state_dir(v))
+        return self._state(spark)
 
     def stats(self, spark: SparkSession) -> DataFrame:
         """(token, n_docs, total_tf) — the inverted-index summary, the same
@@ -106,64 +95,3 @@ class IncrementalIndexView:
         return toks.groupBy(*self.id_cols, "token").agg(
             F.sum("_sign").alias("tf")
         )
-
-    def follow_lake(self, spark: SparkSession, table) -> dict:
-        """Catch the index up to ``table``'s current snapshot. First follow
-        tokenizes the live read; later follows fold only the net
-        changelog. Idempotent: replaying a fold rewrites the same
-        deterministic state at the same version."""
-        from_v = self.followed_lake_version()
-        to_v = table.current_version()
-        if to_v <= from_v:
-            return {"lake_version": from_v, "up_to_date": True}
-        if from_v < 0:
-            # pinned first read: an HA-twin commit between
-            # current_version() and the read action would otherwise fold
-            # rows stamped under the WRONG version and double-count on the
-            # next changelog fold (see IncrementalAggView.follow_lake)
-            contrib = self._signed(table.read(spark, version=to_v), F.lit(1))
-        else:
-            ch = table.changes(spark, from_v, to_v)
-            sign = F.when(
-                F.col("_change_type").isin("insert", "update_postimage"),
-                F.lit(1),
-            ).otherwise(F.lit(-1))
-            contrib = self.postings(spark).unionByName(
-                self._signed(ch, sign)
-            )
-        new = (
-            contrib.groupBy(*self.id_cols, "token")
-            .agg(F.sum("tf").alias("tf"))
-            # contract guard BEFORE the zero-filter: a negative tf is a
-            # broken changelog (retraction without prior add) — fail loud
-            .withColumn(
-                "tf",
-                F.when(
-                    F.assert_true(
-                        F.col("tf") >= 0,
-                        F.concat(
-                            F.lit("negative tf for token "), F.col("token")
-                        ),
-                    ).isNull(),
-                    F.col("tf"),
-                ),
-            )
-            .where(F.col("tf") > 0)
-        )
-        out = self._state_dir(to_v)
-        tmp = out + ".inprogress"
-        shutil.rmtree(tmp, ignore_errors=True)
-        new.write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(out, ignore_errors=True)
-        os.replace(tmp, out)
-        meta = {"lake_version": to_v, "postings": footer_rows(out)}
-        mt = self._marker + ".tmp"
-        with open(mt, "w") as f:
-            json.dump(meta, f)
-        os.replace(mt, self._marker)
-        for d in os.listdir(self._dir):
-            if d.startswith("v") and d != f"v{to_v:08d}" and os.path.isdir(
-                os.path.join(self._dir, d)
-            ):
-                shutil.rmtree(os.path.join(self._dir, d), ignore_errors=True)
-        return meta

@@ -45,48 +45,3 @@ def lww_collapse(
     out = df.groupBy(*key).agg(win)
     return out.select(*key, *[F.col(f"_w.{c}").alias(c) for c in payload])
 
-
-def lww_collapse_broadcast(
-    df: DataFrame,
-    key: tuple[str, ...] = ("repo", "path"),
-    uid_col: str = "seq",
-) -> DataFrame:
-    """Narrow-shuffle LWW: winners chosen on (key, ts, tx_idx, uid) ONLY,
-    then the wide payload rows are recovered with a broadcast semi-join —
-    the content column never enters a shuffle.
-
-    ``uid_col`` must be unique per event (log offset / seq); it breaks the
-    tie between exact duplicate events so the semi-join returns exactly one
-    row per key with no post-dedup. Winner-set size must be broadcastable
-    (≤ ~10M keys per micro-batch); above that, fall back to lww_collapse
-    (max_by), whose map-side partial agg bounds the wide shuffle instead.
-    """
-    if uid_col not in df.columns:
-        return lww_collapse(df, key)
-    narrow = df.select(*key, "ts", "tx_idx", uid_col)
-    w = F.max(
-        F.struct(F.col("ts"), F.col("tx_idx"), F.col(uid_col).alias("_uid"))
-    ).alias("_w")
-    winners = (
-        narrow.groupBy(*key)
-        .agg(w)
-        .select(
-            *key,
-            F.col("_w.ts").alias("ts"),
-            F.col("_w.tx_idx").alias("tx_idx"),
-            F.col("_w._uid").alias(uid_col),
-        )
-    )
-    out = df.join(F.broadcast(winners), on=[*key, "ts", "tx_idx", uid_col], how="left_semi")
-    return out.select(*key, *[c for c in df.columns if c not in key])
-
-
-def dedup_exact_events(
-    df: DataFrame, key: tuple[str, ...] = ("repo", "path")
-) -> DataFrame:
-    """Standalone at-most-once dedup on the identity (key, ts, tx_idx) —
-    the reference's ``processed::<ts>::<txIdx>`` SETEX keys as a relational
-    op. LWW already subsumes this; exposed for the driver-contract query and
-    for diff-folding paths that must keep every event.
-    """
-    return df.dropDuplicates([*key, "ts", "tx_idx"])

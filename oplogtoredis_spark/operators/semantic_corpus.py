@@ -20,7 +20,8 @@ the fitted sample — the parity tests and the driver query construct their
 epochs that way; a drifted sample degrades RECALL of the prune, never
 correctness of the fold.
 
-State: two append-only LWW delta logs (merge-on-read, as incremental_corpus):
+State: two append-only LWW delta logs kept by the lake-follower core
+(operators/follow.py ``EpochLog``, shared with incremental_corpus):
 
   members/e{epoch}/  (epoch, op a|d, doc_id, cid, vec, nrm)
                      every live embedding with its frozen-model cluster id;
@@ -52,22 +53,33 @@ import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.window import Window
 
-from ..session import scoped_shuffle_partitions
-from ..streaming.lake import footer_rows
-from .incremental_corpus import _EDIR_RE, _applied_delta_dirs
+from .follow import EpochLog
 
 MEMBER_SCHEMA = (
     "epoch long, op string, doc_id long, cid int, vec array<double>, nrm double"
 )
 KEEP_SCHEMA = "epoch long, op string, doc_id long, cid int"
+_VEC_TYPE = "array<double>"
 
 
-class SemanticCorpus:
+class SemanticCorpus(EpochLog):
     """SemDeDup keep-set maintained epoch-by-epoch; after any number of
     epochs, ``kept(spark)`` equals the batch ``semdedup_keep`` over the
-    live embeddings (given a stable centroid sample — see module doc)."""
+    live embeddings (given a stable centroid sample — see module doc).
+
+    ``apply_epoch`` takes ``(doc_id long, embedding array, op 'u'|'d')``;
+    a 'u' with a NULL embedding fails loudly JVM-side naming the doc_id.
+    ``follow_lake`` decodes the embedding as ``from_json(content,
+    array<double>)`` (the reference's publish payload IS a JSON document —
+    lib/redispub/publisher.go:41-62): an UNDECODABLE content decodes to
+    NULL and trips the same guard, so a corrupt vector never silently
+    drops."""
+
+    _LOGS = {
+        "members": (MEMBER_SCHEMA, "member_delta_rows"),
+        "keep": (KEEP_SCHEMA, "keep_delta_rows"),
+    }
 
     def __init__(
         self,
@@ -76,16 +88,11 @@ class SemanticCorpus:
         n_centroids: int = 8,
         sample_per_centroid: int = 32,
     ):
-        self.path = path
-        self._members_dir = os.path.join(path, "members")
-        self._keep_dir = os.path.join(path, "keep")
-        self._marker = os.path.join(path, "_applied.json")
+        super().__init__(path)
         self._model = os.path.join(path, "centroids.json")
         self.threshold = threshold
         self.n_centroids = n_centroids
         self.sample_per_centroid = sample_per_centroid
-        os.makedirs(self._members_dir, exist_ok=True)
-        os.makedirs(self._keep_dir, exist_ok=True)
         if os.path.exists(self._model):
             with open(self._model) as f:
                 cfg = json.load(f)["config"]
@@ -97,45 +104,14 @@ class SemanticCorpus:
                     f"got {mine} — parameters are frozen with the model"
                 )
 
-    # ---------------- state read (MoR fold) ----------------
-    def applied_epochs(self) -> list[int]:
-        if not os.path.exists(self._marker):
-            return []
-        with open(self._marker) as f:
-            return json.load(f)["epochs"]
-
-    def _delta_dirs(self, base: str) -> list[str]:
-        # applied-epochs gate + staging-recovery: see _applied_delta_dirs —
-        # makes epoch application atomic to readers and to replays
-        return _applied_delta_dirs(base, set(self.applied_epochs()))
-
-    def _fold(self, spark: SparkSession, base: str, schema: str) -> DataFrame:
-        """LWW per doc_id by epoch: the row of each doc's HIGHEST epoch
-        stands; a 'd' at that epoch retires it. One shuffle keyed on
-        doc_id (storage-partitioned on a bucketed layout)."""
-        dirs = self._delta_dirs(base)
-        if not dirs:
-            return spark.createDataFrame([], schema)
-        d = spark.read.schema(schema).parquet(*dirs)
-        w = Window.partitionBy("doc_id")
-        return (
-            d.withColumn("_maxe", F.max("epoch").over(w))
-            .where((F.col("epoch") == F.col("_maxe")) & (F.col("op") == "a"))
-            .drop("_maxe")
-        )
-
     def members(self, spark: SparkSession) -> DataFrame:
         """(doc_id, cid, vec) of every live embedding."""
-        return self._fold(spark, self._members_dir, MEMBER_SCHEMA).select(
-            "doc_id", "cid", "vec"
-        )
+        return self._fold(spark, "members").select("doc_id", "cid", "vec")
 
     def kept(self, spark: SparkSession) -> DataFrame:
         """The output keep set: (doc_id, cid) — the incremental equivalent
         of ``semdedup_keep`` over the live corpus."""
-        return self._fold(spark, self._keep_dir, KEEP_SCHEMA).select(
-            "doc_id", "cid"
-        )
+        return self._fold(spark, "keep").select("doc_id", "cid")
 
     # ---------------- frozen coarse quantizer ----------------
     def _fit_or_load_centroids(self, spark: SparkSession, up: DataFrame):
@@ -174,49 +150,15 @@ class SemanticCorpus:
         return self._fit_or_load_centroids(spark, up)
 
     # ---------------- epoch step ----------------
-    _ROWS_PER_PARTITION = 50_000
+    def _lake_payload(self):
+        return F.from_json(F.col("content"), _VEC_TYPE).alias("embedding")
 
-    def _epoch_shuffle_scale(self, spark: SparkSession):
-        """Scope one epoch's (eager) jobs to ``max(4, state_rows / 50k +
-        4)`` partitions, with state_rows from parquet footers (the
-        incremental_corpus formula)."""
-        state_rows = sum(
-            footer_rows(d)
-            for base in (self._members_dir, self._keep_dir)
-            for d in self._delta_dirs(base)
-        )
-        return scoped_shuffle_partitions(
-            spark, max(4, state_rows // self._ROWS_PER_PARTITION + 4)
-        )
-
-    def apply_epoch(
-        self,
-        spark: SparkSession,
-        batch: DataFrame,
-        epoch: int,
-        _extra_meta: dict | None = None,
-    ) -> dict:
-        """Apply one change batch: (doc_id long, embedding array, op 'u'|'d'),
-        at most one row per doc_id (collapse upstream — the CDC lake's LWW
-        merge already guarantees this for lake-sourced deltas). A 'u' with a
-        NULL embedding fails loudly JVM-side naming the doc_id.
-
-        Work is bounded by the batch and its affected clusters; returns
-        counters for observability. Idempotent per epoch (marker replay);
-        an epoch BELOW the latest applied one is rejected loudly — its
-        rows would be written but immediately lose the LWW fold, a silent
-        no-op the caller would misread as success."""
+    def _epoch_deltas(
+        self, spark: SparkSession, batch: DataFrame, epoch: int
+    ) -> tuple[list[DataFrame], list[DataFrame]]:
+        """The epoch's member and keep deltas. Work is bounded by the batch
+        and its affected clusters."""
         from .similarity import _dot, _norm, _sim
-
-        applied = self.applied_epochs()
-        if epoch in applied:
-            return {"skipped_replay": True}
-        if applied and epoch < max(applied):
-            raise ValueError(
-                f"epoch {epoch} is below the latest applied epoch "
-                f"{max(applied)} — its rows would lose the LWW fold; "
-                "replay only the exact epochs already applied"
-            )
 
         # the batch feeds FOUR branches (upserts, prev-cid lookup, next-
         # state anti-join, deletes) — persist it once so a lake-changelog
@@ -231,9 +173,9 @@ class SemanticCorpus:
                         F.lit("SemanticCorpus: NULL embedding for doc_id "),
                         F.col("doc_id").cast("string"),
                     )
-                ).cast("array<double>"),
+                ).cast(_VEC_TYPE),
             )
-            .otherwise(F.col("embedding").cast("array<double>"))
+            .otherwise(F.col("embedding").cast(_VEC_TYPE))
             .alias("vec"),
         )
         cents = self._fit_or_load_centroids(spark, up)
@@ -264,9 +206,7 @@ class SemanticCorpus:
             .persist()
         )
 
-        members_prev = self._fold(
-            spark, self._members_dir, MEMBER_SCHEMA
-        ).persist()
+        members_prev = self._fold(spark, "members").persist()
 
         # the incrementality boundary: clusters this epoch can affect
         prev_of_batch = members_prev.join(
@@ -343,7 +283,7 @@ class SemanticCorpus:
         # re-evaluated mapInPandas + fold at sf1.0)
         keep_next = keep_next.persist()
         keep_prev_aff = (
-            self._fold(spark, self._keep_dir, KEEP_SCHEMA)
+            self._fold(spark, "keep")
             .select("doc_id", "cid")
             .join(F.broadcast(affected), "cid")
             .persist()
@@ -369,7 +309,7 @@ class SemanticCorpus:
                 F.lit("d").alias("op"),
                 "doc_id",
                 F.lit(None).cast("int").alias("cid"),
-                F.lit(None).cast("array<double>").alias("vec"),
+                F.lit(None).cast(_VEC_TYPE).alias("vec"),
                 F.lit(None).cast("double").alias("nrm"),
             )
         )
@@ -383,165 +323,8 @@ class SemanticCorpus:
                 F.lit(None).cast("int").alias("cid"),
             )
         )
-
-        mdir = os.path.join(self._members_dir, f"e{epoch:06d}")
-        kdir = os.path.join(self._keep_dir, f"e{epoch:06d}")
-        try:
-            # the two delta writes are independent sinks (the marker below
-            # is the only commit point) — run them concurrently so the
-            # second's stages back-fill the first's tail (guide §2.6);
-            # shared persisted branches materialize once
-            with self._epoch_shuffle_scale(spark):
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(max_workers=2) as pool:
-                    f1 = pool.submit(
-                        lambda: member_delta.write.mode("overwrite").parquet(mdir)
-                    )
-                    f2 = pool.submit(
-                        lambda: keep_delta.write.mode("overwrite").parquet(kdir)
-                    )
-                    f1.result()
-                    f2.result()
-        finally:
-            for df in (
-                batch, new_rows, members_prev, affected, aff,
-                keep_next, keep_prev_aff,
-            ):
-                df.unpersist()
-
-        epochs = self.applied_epochs() + [epoch]
-        meta = {"epochs": epochs}
-        if os.path.exists(self._marker):
-            with open(self._marker) as f:
-                meta = {**json.load(f), "epochs": epochs}
-        # extra keys (e.g. follow_lake's lake_version) land in the SAME
-        # os.replace as the epoch list — a crash can never record the
-        # epoch without its lake watermark (or vice versa)
-        meta.update(_extra_meta or {})
-        tmp = self._marker + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, self._marker)
-        return {
-            "epoch": epoch,
-            "member_delta_rows": footer_rows(mdir),
-            "keep_delta_rows": footer_rows(kdir),
-        }
-
-    # ---------------- follow a CDC lake (changelog-driven epochs) -------
-    def followed_lake_version(self) -> int:
-        """Last lake snapshot this corpus has folded in (-1 = never)."""
-        if not os.path.exists(self._marker):
-            return -1
-        with open(self._marker) as f:
-            return json.load(f).get("lake_version", -1)
-
-    def follow_lake(
-        self,
-        spark: SparkSession,
-        table,
-        repo: str | None = None,
-        vec_format: str = "array<double>",
-    ) -> dict:
-        """Catch the keep set up to ``table``'s current snapshot via the NET
-        changelog (LakeTable.changes) — the CDC lake is the system of
-        record and the semantic-dedup state follows it without rescanning
-        either side (O(changed buckets) diff + O(batch) epoch fold); the
-        same composition discipline as IncrementalCorpus.follow_lake.
-
-        Embedding mapping: a vector rides the lake's generic change
-        envelope as ``path = str(doc_id), content = to_json(embedding)``
-        (the reference's publish payload IS a JSON document —
-        lib/redispub/publisher.go:41-62); ``from_json(content,
-        vec_format)`` decodes it here. An UNDECODABLE content decodes to
-        NULL and trips apply_epoch's loud NULL-embedding guard naming the
-        doc_id — a corrupt vector never silently drops. The corpus epoch
-        number IS the lake snapshot version, and the lake watermark is
-        written in the SAME atomic marker update as the epoch (a crash can
-        never record one without the other); idempotent replay; mixed
-        manual numbering rejected. With ``repo=None`` the caller asserts
-        paths are globally unique across repos — the lake key is (repo,
-        path) but doc_id here is path alone, so a cross-repo path
-        collision would violate apply_epoch's one-row-per-doc_id
-        contract."""
-        from_v = self.followed_lake_version()
-        to_v = table.current_version()
-        if any(e > to_v for e in self.applied_epochs()):
-            raise ValueError(
-                "corpus holds epochs beyond the lake's current version — "
-                "don't mix follow_lake with manual apply_epoch numbering"
-            )
-        if from_v < 0:
-            base = table.read(spark)
-            if repo is not None:
-                base = base.where(F.col("repo") == repo)
-            batch = base.select(
-                F.col("path").cast("long").alias("doc_id"),
-                F.from_json(F.col("content"), vec_format).alias("embedding"),
-                F.lit("u").alias("op"),
-            )
-        elif to_v <= from_v:
-            return {"lake_version": from_v, "up_to_date": True}
-        else:
-            ch = table.changes(spark, from_v, to_v)
-            if repo is not None:
-                ch = ch.where(F.col("repo") == repo)
-            batch = ch.where(F.col("_change_type") != "update_preimage").select(
-                F.col("path").cast("long").alias("doc_id"),
-                F.from_json(F.col("content"), vec_format).alias("embedding"),
-                F.when(F.col("_change_type") == "delete", F.lit("d"))
-                .otherwise(F.lit("u"))
-                .alias("op"),
-            )
-        stats = self.apply_epoch(
-            spark, batch, epoch=to_v, _extra_meta={"lake_version": to_v}
+        return (
+            [member_delta, keep_delta],
+            [batch, new_rows, members_prev, affected, aff, keep_next,
+             keep_prev_aff],
         )
-        stats["lake_version"] = to_v
-        return stats
-
-    # ---------------- maintenance ----------------
-    def compact(self, spark: SparkSession) -> None:
-        """Fold all deltas into one base per log (bounds the per-read delta
-        scan exactly like LakeTable.compact / IncrementalCorpus.compact).
-        Winning epochs are preserved per row so later epochs keep LWW
-        semantics."""
-        import shutil
-
-        if not self.applied_epochs():
-            return
-        last = max(self.applied_epochs())
-        with self._epoch_shuffle_scale(spark):
-            for base, schema in (
-                (self._members_dir, MEMBER_SCHEMA),
-                (self._keep_dir, KEEP_SCHEMA),
-            ):
-                dirs = self._delta_dirs(base)
-                if not dirs:
-                    continue
-                folded = (
-                    spark.read.schema(schema)
-                    .parquet(*dirs)
-                    .withColumn(
-                        "_maxe",
-                        F.max("epoch").over(Window.partitionBy("doc_id")),
-                    )
-                    .where(
-                        (F.col("epoch") == F.col("_maxe")) & (F.col("op") == "a")
-                    )
-                    .drop("_maxe")
-                )
-                out = os.path.join(base, f"e{last:06d}_compact_staging")
-                folded.write.mode("overwrite").parquet(out)
-                # sweep unapplied orphan e-dirs (crashed, never-replayed
-                # epochs — already invisible to folds via the applied gate)
-                applied = set(self.applied_epochs())
-                for d in os.listdir(base):
-                    m = _EDIR_RE.match(d)
-                    if m and int(m.group(1)) not in applied:
-                        shutil.rmtree(os.path.join(base, d))
-                # promotion is crash-safe: _recover_compact finishes it
-                # from the _SUCCESS-marked staging if we die below
-                for d in dirs:
-                    shutil.rmtree(d)
-                os.replace(out, os.path.join(base, f"e{last:06d}"))

@@ -50,7 +50,7 @@ def _patch_timers() -> None:
         ("oplogtoredis_spark.operators.incremental_corpus", "IncrementalCorpus",
          ("follow_lake", "apply_epoch", "chunks")),
         ("oplogtoredis_spark.operators.semantic_corpus", "SemanticCorpus",
-         ("follow_lake", "apply_epoch", "keep")),
+         ("follow_lake", "apply_epoch", "kept")),
         ("oplogtoredis_spark.streaming", "history",
          ("make_history_applier", "read_history")),
     ):

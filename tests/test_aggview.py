@@ -6,8 +6,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from oplogtoredis_spark.operators.aggview import IncrementalAggView
+from oplogtoredis_spark.operators.follow import changelog
 from oplogtoredis_spark.sources.schemas import TARGET_SCHEMA
 from oplogtoredis_spark.streaming.lake import LakeTable
+
+from tests.test_follow import _StaleVersionTable
 
 
 def _batch(spark, rows, ts):
@@ -144,12 +147,9 @@ def test_summary_shape_and_plan_has_no_join(spark, tmp_path):
     v.follow_lake(spark, t)
     t.merge_batch(_batch(spark, [(2, "en", "zz", "u")], 2), 1)
     # the fold is union + groupBy: no Join node anywhere in the step plan
-    ch = t.changes(spark, v.followed_lake_version(), t.current_version())
-    sign = F.when(
-        F.col("_change_type").isin("insert", "update_postimage"), F.lit(1)
-    ).otherwise(F.lit(-1))
-    step = v.read(spark).unionByName(v._signed(ch, sign)).groupBy("lang").agg(
-        F.sum("n_rows").alias("n_rows"), F.sum("sum_e4").alias("sum_e4")
+    from_v = v.followed_lake_version()
+    step = v._next_state(
+        spark, changelog(spark, t, from_v, t.current_version()), from_v
     )
     assert " Join" not in step._jdf.queryExecution().executedPlan().toString()
     v.follow_lake(spark, t)
@@ -218,38 +218,6 @@ class TestDistinctView:
             v.read(spark)
         with pytest.raises(ValueError, match="at least one column"):
             IncrementalDistinctView(str(tmp_path / "x"), (), "length(content)")
-
-
-class _StaleVersionTable(LakeTable):
-    """A table whose current_version() reports a version BELOW the real
-    CURRENT — the race window where an HA twin commits between a view's
-    version snapshot and its first read action."""
-
-    def __init__(self, path, stale_v):
-        super().__init__(path)
-        self._stale_v = stale_v
-
-    def current_version(self):
-        return self._stale_v
-
-
-def test_first_follow_pins_the_snapshotted_version(spark, tmp_path):
-    """A commit landing between current_version() and the first-read
-    action must NOT fold into state stamped with the older version — the
-    next changelog fold would double-count it. Pinned read + follow-up
-    fold must equal the batch recompute exactly."""
-    path = str(tmp_path / "tbl")
-    t = LakeTable.create(path, TARGET_SCHEMA, n_buckets=4)
-    t.merge_batch(_batch(spark, [(1, "en", "aaaa", "u"), (2, "de", "bb", "u")], 1), 0)
-    t.merge_batch(_batch(spark, [(3, "en", "cccccc", "u")], 2), 1)  # the racer
-
-    v = _mk(tmp_path)
-    stale = _StaleVersionTable(path, 1)  # sees v1 while CURRENT is v2
-    v.follow_lake(spark, stale)
-    assert v.followed_lake_version() == 1
-    # catch up to the real CURRENT: the racer's rows fold ONCE
-    v.follow_lake(spark, t)
-    assert _state(spark, v) == _recompute(spark, t, v)
 
 
 def test_negative_folded_count_fails_loud(spark, tmp_path):

@@ -130,9 +130,9 @@ def test_compact_preserves_state_and_bounds_deltas(spark, tmp_path):
                 for i in range(3)]
         c.apply_epoch(spark, _batch(spark, rows), e)
     before = _state(c.chunks(spark))
-    assert len(c._delta_dirs(c._chunks_dir)) == 4
+    assert len(c._delta_dirs("chunks")) == 4
     c.compact(spark)
-    assert len(c._delta_dirs(c._chunks_dir)) == 1
+    assert len(c._delta_dirs("chunks")) == 1
     assert _state(c.chunks(spark)).equals(before)
     # further epochs keep working on the folded base
     c.apply_epoch(spark, _batch(spark, [(0, None, "d")]), 9)

@@ -6,6 +6,7 @@ lake's live rows."""
 import pytest
 from pyspark.sql import functions as F
 
+from oplogtoredis_spark.operators.follow import changelog
 from oplogtoredis_spark.operators.indexview import IncrementalIndexView
 from oplogtoredis_spark.operators.text import tokens
 from oplogtoredis_spark.sources.schemas import TARGET_SCHEMA
@@ -166,14 +167,8 @@ def test_fold_step_has_no_join(spark, tmp_path):
     t.merge_batch(_batch(spark, [(1, "a b", "u")], 1), 0)
     v.follow_lake(spark, t)
     t.merge_batch(_batch(spark, [(2, "b c", "u")], 2), 1)
-    ch = t.changes(spark, v.followed_lake_version(), t.current_version())
-    sign = F.when(
-        F.col("_change_type").isin("insert", "update_postimage"), F.lit(1)
-    ).otherwise(F.lit(-1))
-    step = (
-        v.postings(spark)
-        .unionByName(v._signed(ch, sign))
-        .groupBy(*v.id_cols, "token")
-        .agg(F.sum("tf").alias("tf"))
+    from_v = v.followed_lake_version()
+    step = v._next_state(
+        spark, changelog(spark, t, from_v, t.current_version()), from_v
     )
     assert " Join" not in step._jdf.queryExecution().executedPlan().toString()

@@ -66,33 +66,6 @@ def test_transaction_tx_idx_tiebreak(spark):
     assert engine.iloc[0]["last_tx_idx"] == 2
 
 
-def test_broadcast_lww_equivalent(spark, small_events):
-    """The narrow-shuffle broadcast LWW variant must pick identical winners
-    (incl. under exact duplicates, where the unique seq breaks the tie)."""
-    from pyspark.sql import functions as F
-
-    from oplogtoredis_spark.operators.lww import lww_collapse, lww_collapse_broadcast
-
-    sdf = spark.createDataFrame(small_events).select(
-        "seq", "repo", "path", "ts", "tx_idx", "op", "commit", "lang", "content"
-    )
-    a = (
-        lww_collapse(sdf.drop("seq"), key=("repo", "path"))
-        .select("repo", "path", "ts", "tx_idx", "op", "content")
-        .toPandas()
-        .sort_values(["repo", "path"])
-        .reset_index(drop=True)
-    )
-    b = (
-        lww_collapse_broadcast(sdf, key=("repo", "path"))
-        .select("repo", "path", "ts", "tx_idx", "op", "content")
-        .toPandas()
-        .sort_values(["repo", "path"])
-        .reset_index(drop=True)
-    )
-    assert a.equals(b)
-
-
 def test_winning_delete_removes_row(spark):
     rows = [
         (0, 5 << 32, 0, pd.Timestamp("2024-01-01"), "i", "r/a", "f.py", "c0", "py", "v0", None),
