@@ -50,7 +50,6 @@ from __future__ import annotations
 import json
 import os
 import re
-import threading
 import time
 import uuid
 
@@ -92,42 +91,6 @@ _BLOOM_SIDECAR_CACHE: dict = {}
 #: LakeTable._epoch_exprs): key -> fragments, emptied when full.
 _EPOCH_EXPR_CACHE: dict = {}
 _EPOCH_EXPR_CACHE_MAX = 64
-
-#: Spark lists more root paths than this conf's value with a distributed
-#: listing job (default 32); see _read_parquet.
-_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-_LISTING_LOCK = threading.Lock()
-
-
-def _read_parquet(
-    spark: SparkSession, paths: list[str], schema: T.StructType | None = None
-) -> DataFrame:
-    """Parquet read over dirs/files the manifest already names, listed on
-    the driver at any path count. Spark builds the file index eagerly and,
-    past the parallel-discovery threshold, lists with a Spark job: on a
-    128-bucket table a 48-event epoch touching ~37 buckets spent 0.26-0.40 s
-    building its target read that way, against 0.03 s at ~13 buckets. The
-    threshold is raised to the path count for the index build only and
-    restored after. Only that raise/read/restore runs under the lock (it
-    keeps concurrent readers from restoring each other's raised value);
-    reads at or under the threshold build their DataFrames concurrently.
-    ``schema`` None = mergeSchema inference."""
-    reader = (
-        spark.read.schema(schema)
-        if schema is not None
-        else spark.read.option("mergeSchema", "true")
-    )
-    if len(paths) <= int(spark.conf.get(_LISTING_THRESHOLD)):
-        return reader.parquet(*paths)
-    with _LISTING_LOCK:
-        prev = spark.conf.get(_LISTING_THRESHOLD)
-        if len(paths) <= int(prev):
-            return reader.parquet(*paths)
-        spark.conf.set(_LISTING_THRESHOLD, str(len(paths)))
-        try:
-            return reader.parquet(*paths)
-        finally:
-            spark.conf.set(_LISTING_THRESHOLD, prev)
 
 
 def footer_rows(path: str) -> int:
@@ -500,17 +463,18 @@ class LakeTable:
 
     #: adaptive pruning threshold: when the manifest's last TWO affected-
     #: fraction measurements are both at least this, a CoW merge skips the
-    #: per-epoch bucket-discovery job (driver-serial 2-stage job + collect)
+    #: per-epoch bucket-discovery job (driver-serial, one single-stage job)
     #: and takes the dense posture; discovery epochs re-measure the
     #: fraction exactly, dense ones estimate it balls-into-bins, so the
     #: policy is self-correcting in both directions (VERDICT r4 #2)
     ADAPTIVE_DENSE_FRAC = 0.6
 
     #: adaptive-dense is only worth the risk on SMALL tables: the discovery
-    #: job's ~0.3-0.5 s serial cost matters when epochs are fast (a few tens
-    #: of buckets), while a mispredicted dense epoch costs an O(live buckets)
-    #: CoW rewrite — catastrophic at thousands of buckets, noise at 32. Above
-    #: this bucket count the engine always runs discovery.
+    #: job's ~0.1-0.2 s serial cost (live epochs on 4 cores) matters when
+    #: epochs are fast (a few tens of buckets), while a mispredicted dense
+    #: epoch costs an O(live buckets) CoW rewrite — catastrophic at
+    #: thousands of buckets, noise at 32. Above this bucket count the
+    #: engine always runs discovery.
     ADAPTIVE_DENSE_MAX_BUCKETS = 64
 
     def _dense_epoch(self, m: dict) -> bool:
@@ -821,7 +785,15 @@ class LakeTable:
         before the union: file-metadata columns such as
         ``_metadata.file_path`` do not resolve across a union."""
         def scan(ds: list, s: T.StructType | None) -> DataFrame:
-            df = _read_parquet(spark, ds, s)
+            # the file index is built here, on the driver at any path count
+            # the manifest names (the session's listing threshold, see
+            # session.get_spark): no Spark job; None = mergeSchema inference
+            reader = (
+                spark.read.schema(s)
+                if s is not None
+                else spark.read.option("mergeSchema", "true")
+            )
+            df = reader.parquet(*ds)
             return df.withColumn(extra[0].name, extra[1]) if extra else df
 
         groups: dict = {}
@@ -1109,11 +1081,15 @@ class LakeTable:
                     {"batch_id": batch_id, "skipped_replay": True, "wall_secs": 0.0},
                 )
                 return {"skipped_replay": True}
-            # the batch feeds two jobs: affected-bucket discovery (column-
-            # pruned to repo/path — cheap) and the merge write. Caching the
-            # batch was measured SLOWER than the second scan (full-row
-            # materialization costs more than a pruned re-read) and would be
-            # memory-hostile for large micro-batches on a real cluster.
+            # the batch feeds two jobs: affected-bucket discovery (a scan
+            # of repo/path plus the op/ts/tx_idx/wall columns the input
+            # observation on the batch root reads) and the merge write.
+            # Caching the batch does not pay for the second scan: full-row
+            # materialization costs more than a pruned re-read (persisting
+            # the merge source for discovery grew a live epoch's discovery
+            # phase by 0.05-0.1 s and cut its write by at most as much), and
+            # it would be memory-hostile for large micro-batches on a real
+            # cluster.
             try:
                 return self._apply_epoch(
                     batch, batch_id, epoch_key, epoch_ns, extra_payload_cols,
@@ -1256,6 +1232,7 @@ class LakeTable:
             ],
             "bucket": bucket,
             "bucket_b": bucket.alias("b"),
+            "affected_agg": F.collect_set(F.col("b")).alias("buckets"),
         }
         if len(_EPOCH_EXPR_CACHE) >= _EPOCH_EXPR_CACHE_MAX:
             _EPOCH_EXPR_CACHE.clear()  # bounded; shapes in use rebuild once
@@ -1318,10 +1295,14 @@ class LakeTable:
         # always (no target read at all — the batch's collapsed winners
         # append as a delta), CoW when _dense_epoch says so from the
         # manifest. Otherwise discovery derives the affected set from the
-        # RAW batch (cheap column-pruned scan), not from src: every key's
-        # winner lives in the same bucket as its events, and computing it
-        # from src would run the whole LWW collapse once for this collect
-        # and again for the write (measured 2x batch cost).
+        # RAW batch, not from src: every key's winner lives in the same
+        # bucket as its events, and computing it from src would run the
+        # whole LWW collapse once for discovery and again for the write
+        # (measured 2x batch cost). Discovery is one single-stage job: a
+        # noop write of the bucket column with the set of buckets observed
+        # on it, a result bounded by the bucket count (a distinct plans an
+        # exchange: two AQE jobs and a re-plan). Being the epoch's first
+        # action, it also completes the input observation.
         t_plan = time.time()
         dense = merge_mode == "mor" or self._dense_epoch(m)
         tgt = None
@@ -1337,9 +1318,11 @@ class LakeTable:
                 | {int(b) for b, ds in deltas.items() if ds}
             )
         else:
-            affected = sorted(
-                r.b for r in batch_ok.select(cx["bucket_b"]).distinct().collect()
-            )
+            aff_obs = _Obs(f"aff_{batch_id}")
+            batch_ok.select(cx["bucket_b"]).observe(
+                aff_obs, cx["affected_agg"]
+            ).write.format("noop").mode("overwrite").save()
+            affected = sorted(observed_row(aff_obs).get("buckets") or [])
         t_affected = time.time()
         if merge_mode != "mor":
             # read() always emits exactly the manifest schema, so the target

@@ -1,9 +1,10 @@
 """The CoW merge's physical layout and fixed per-epoch cost: one file per
 touched bucket from a write of at most one task per core, a target read
-that lists its bucket dirs without a Spark job, plan fragments shared by
-every LakeTable of the same shape, and a merge and maintenance rewrites
-keyed on the bucket the key hashes to rather than the stored column. Also
-the log writer's explicit parquet types and the package zip's cleanup."""
+and a stream batch that list their paths without a Spark job, bucket
+discovery as one single-stage job, plan fragments shared by every
+LakeTable of the same shape, and a merge and maintenance rewrites keyed on
+the bucket the key hashes to rather than the stored column. Also the log
+writer's explicit parquet types and the package zip's cleanup."""
 
 from __future__ import annotations
 
@@ -19,11 +20,12 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from oplogtoredis_spark import session
 from oplogtoredis_spark.config import EngineConfig
 from oplogtoredis_spark.functions.routing import bucket_for
 from oplogtoredis_spark.plans.oracle import assert_parity, replay_oracle
 from oplogtoredis_spark.sources.generator import generate_events, write_events
-from oplogtoredis_spark.sources.schemas import TARGET_SCHEMA
+from oplogtoredis_spark.sources.schemas import EVENT_SCHEMA, TARGET_SCHEMA
 from oplogtoredis_spark.streaming import lake as lake_mod
 from oplogtoredis_spark.streaming.lake import LakeTable
 from oplogtoredis_spark.streaming.runner import run_to_completion
@@ -110,12 +112,81 @@ def test_one_file_per_touched_bucket_in_one_wave(spark, tmp_path, k):
 def test_target_read_over_many_buckets_starts_no_job(spark, tmp_path):
     t, kb = _seeded(spark, str(tmp_path / "t"), 64, n_keys=800)
     live = sorted(int(b) for b in t.manifest()["buckets"])
-    assert len(live) > 32  # past Spark's parallel-listing threshold
-    thr = spark.conf.get(lake_mod._LISTING_THRESHOLD)
+    assert len(live) > 32  # past Spark's default parallel-listing threshold
     df, jobs = _jobs(spark, lambda: t.read(spark, include_deleted=True, buckets=live))
     assert jobs == []
-    assert spark.conf.get(lake_mod._LISTING_THRESHOLD) == thr  # restored
+    assert spark.conf.get(session.LISTING_THRESHOLD_KEY) == str(session.DRIVER_LISTING_PATHS)
     assert df.count() == sum(len(v) for v in kb.values())
+
+
+def test_stream_batch_past_listing_threshold_starts_no_job(spark, tmp_path):
+    d = str(tmp_path / "ev")
+    write_events(generate_events(n_events=200, n_repos=5, seed=3).head(80), d, n_files=80)
+    batches = []
+    q = (
+        spark.readStream.schema(EVENT_SCHEMA)
+        .option("maxFilesPerTrigger", 40)
+        .parquet(d)
+        .writeStream.trigger(availableNow=True)
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        # runs no action: any job in the stream's group is the source's own
+        .foreachBatch(lambda df, batch_id: batches.append(batch_id))
+        .start()
+    )
+    assert q.awaitTermination(120)
+    assert batches == [0, 1]
+    # the stream's clone of the session lists each 40-file batch on the driver
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert list(jobs) == []
+
+
+def _discovery_table(spark, path):
+    """A table above the adaptive-dense bucket limit: every merge on it
+    after the first runs discovery."""
+    n = 2 * LakeTable.ADAPTIVE_DENSE_MAX_BUCKETS
+    return _seeded(spark, path, n, n_keys=16 * n)
+
+
+def test_discovery_is_one_single_stage_job(spark, tmp_path):
+    t, kb = _discovery_table(spark, str(tmp_path / "t"))
+    touched = sorted(kb)[:5]
+    batch = _batch(spark, [kb[b][0] for b in touched], 2, "new")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    before_read = []
+    read = t.read
+
+    def spied_read(*args, **kwargs):
+        group = sc.getLocalProperty("spark.jobGroup.id")
+        before_read.extend(sorted(tracker.getJobIdsForGroup(group)))
+        return read(*args, **kwargs)
+
+    t.read = spied_read
+    stats, jobs = _jobs(spark, lambda: t.merge_batch(batch, 1))
+    assert not stats["adaptive_dense"] and stats["affected_buckets"] == len(touched)
+    assert len(before_read) == 1 and len(jobs) > 1  # discovery, then the write
+    assert len(tracker.getJobInfo(before_read[0]).stageIds) == 1
+    assert stats["events_in"] == len(touched)  # the input observation completed
+
+
+def test_discovery_commits_filtered_and_dead_letter_batches(spark, tmp_path):
+    t, kb = _discovery_table(spark, str(tmp_path / "t"))
+    before = t.read(spark).count()
+    filtered = _batch(spark, kb[0][:3], 2).where(F.col("path") == "nope")
+    dead = spark.createDataFrame(
+        [(None, "f.py", 2 << 32, 0, "u", "c", "py", "x"),
+         ("r1", None, 2 << 32, 1, "u", "c", "py", "y")],
+        COLS,
+    )
+    for batch_id, batch, n_dead in ((1, filtered, 0), (2, dead, 2)):
+        v = t.current_version()
+        stats = t.merge_batch(batch, batch_id)
+        assert not stats["adaptive_dense"]
+        assert stats["affected_buckets"] == 0 and stats["unprocessable_in"] == n_dead
+        assert t.current_version() == v + 1 and t.epoch_applied("", batch_id)
+    quar = spark.read.parquet(os.path.join(t.path, "_deadletter"))
+    assert sorted(r.dl_reason for r in quar.collect()) == ["null_path", "null_repo"]
+    assert t.read(spark).count() == before
 
 
 def test_plan_fragments_shared_across_tables_rebuilt_on_shape_change(spark, tmp_path):
