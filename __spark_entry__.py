@@ -1057,10 +1057,9 @@ def q_scd2_stream_history(spark, sf_dir):
         rn=rn,
     )
     base = _scratch_dir(prefix="otr_hist_")
-    # bucket count = core count (parameterised): at or above the epoch
-    # width it lets the merge take the single-payload-shuffle branch
-    # (lake.py one_shuffle) — and 1M rows over 8 buckets was an artificial
-    # width cap anyway
+    # bucket count = core count (parameterised): the merge writes one task
+    # per touched bucket up to one per core, and 1M rows over 8 buckets
+    # was an artificial width cap
     t = LakeTable.create(
         base + "/tbl", TARGET_SCHEMA,
         n_buckets=spark.sparkContext.defaultParallelism,

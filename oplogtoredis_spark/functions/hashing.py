@@ -47,14 +47,6 @@ def portable_hash31(col: Column) -> Column:
     return portable_hash64(col) % F.lit(MERSENNE31)
 
 
-def portable_hash31_sql(expr: str) -> str:
-    return f"({portable_hash64_sql(expr)} % {MERSENNE31})"
-
-
 def minhash_perm(h31: Column, i: int) -> Column:
     """i-th permutation hash: (a_i * h + b_i) mod p."""
     return (F.lit(MINHASH_A[i]) * h31 + F.lit(MINHASH_B[i])) % F.lit(MERSENNE31)
-
-
-def minhash_perm_sql(expr: str, i: int) -> str:
-    return f"(({MINHASH_A[i]} * {expr} + {MINHASH_B[i]}) % {MERSENNE31})"

@@ -49,27 +49,6 @@ def exp_bucket_le_sql(size_expr: str) -> str:
     )
 
 
-def hist_observe_aggs(size: Column, prefix: str) -> list[Column]:
-    """Per-bucket conditional-sum aggregates for an observe() pass: one
-    ``sum(size in bucket)`` column per bucket (named ``{prefix}_{le}``),
-    plus ``{prefix}_inf``. These ride an existing batch scan — the
-    histogram costs zero extra Spark jobs.
-
-    NOTE: each aggregate inlines the full bucket CASE chain — fine for a
-    one-off query, but on a hot per-epoch path use
-    :func:`hist_observe_aggs_on` over a precomputed bucket column (inlining
-    was measured at ~3.5 s/epoch on a 485k-row micro-batch: 30 aggregates x
-    29 branches per row, with no common-subexpression elimination across
-    aggregate expressions)."""
-    b = exp_bucket_le(size)
-    aggs = [
-        F.sum((b == F.lit(le)).cast("long")).alias(f"{prefix}_{le}")
-        for le in EXP_BUCKETS
-    ]
-    aggs.append(F.sum((b == F.lit(INF_LE)).cast("long")).alias(f"{prefix}_inf"))
-    return aggs
-
-
 def hist_bucket_col_sql(size_sql: str) -> str:
     """SQL for the bucket-assignment column (one CASE evaluation per row),
     parsed JVM-side in a single call — pair with
@@ -79,10 +58,17 @@ def hist_bucket_col_sql(size_sql: str) -> str:
 
 
 def hist_observe_aggs_on(bucket_col: str, prefix: str) -> list[Column]:
-    """Observe aggregates over a PRECOMPUTED bucket column (see
-    :func:`hist_bucket_col_sql`): each is a trivial equality-sum, so the
-    per-row cost is one CASE evaluation + 30 long compares instead of 870
-    branch evaluations. Expressions are built as SQL strings (one py4j
+    """Per-bucket observe() aggregates over a PRECOMPUTED bucket column
+    (see :func:`hist_bucket_col_sql`): one ``sum(bucket = le)`` column per
+    bucket (named ``{prefix}_{le}``), plus ``{prefix}_inf``. These ride an
+    existing batch scan, so the histogram costs zero extra Spark jobs.
+
+    Each aggregate is a trivial equality-sum, so the per-row cost is one
+    CASE evaluation + 30 long compares instead of 870 branch evaluations:
+    inlining the CASE chain into every aggregate was measured at ~3.5
+    s/epoch on a 485k-row micro-batch (30 aggregates x 29 branches per
+    row, with no common-subexpression elimination across aggregate
+    expressions). Expressions are built as SQL strings (one py4j
     round-trip each) — driver-side construction cost ~30 calls/epoch, not
     ~900."""
     aggs = [
@@ -99,14 +85,17 @@ def hist_observe_aggs_on(bucket_col: str, prefix: str) -> list[Column]:
 
 def observed_row(obs) -> dict:
     """``Observation.get`` tolerant of Spark 4's AQE empty-relation
-    propagation: when a micro-batch is EMPTY (e.g. the denylist dropped the
-    whole epoch), AQE replaces the scan with an empty LocalTableScan and the
-    CollectMetrics node vanishes with it — the JVM then hands back a
+    propagation: when the query stage holding the observation outputs no
+    row (an EMPTY micro-batch, or a shuffle that every row was filtered out
+    of before it), AQE replaces the stage with an empty LocalTableScan and
+    the CollectMetrics node vanishes with it — the JVM then hands back a
     schemaless empty row and ``Observation.get`` dies in ``toPyRow``'s
     assertion. Every observed aggregate in this engine is a count/sum/max
-    whose empty-input value is 0/NULL, so the correct reading of "the node
-    never ran" is an empty dict (callers all default with ``.get(..) or 0``).
-    Anything that is NOT that specific assertion re-raises."""
+    whose empty-input value is 0/NULL, so "the node vanished" reads as an
+    empty dict (callers default with ``.get(..) or 0``). Rows filtered out
+    before a shuffle were still observed, so the merge re-takes its input
+    observation when it gets {} (``LakeTable._apply_epoch``). Anything that
+    is NOT that specific assertion re-raises."""
     try:
         return obs.get
     except Exception as e:  # Py4JJavaError from PythonSQLUtils.toPyRow

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from decimal import Decimal
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 
 _TWO63 = Decimal(9223372036854775808)  # 2**63
 _TWO64 = Decimal(18446744073709551616)  # 2**64
@@ -77,13 +77,3 @@ def channels(ns_col: Column, id_col: Column) -> Column:
     document-specific channel "<ns>::<id>"
     (/root/reference/lib/oplog/processor.go:99-109)."""
     return F.array(ns_col, F.concat(ns_col, F.lit("::"), id_col))
-
-
-def with_routing(df: DataFrame, n_buckets: int) -> DataFrame:
-    """Attach all derived routing columns to a (repo, path, ...) event frame."""
-    ns = F.concat(F.col("repo"), F.lit("."), F.col("path"))
-    return (
-        df.withColumn("pkey", parallelism_key(F.col("repo")))
-        .withColumn("bucket", bucket_for(F.col("repo"), F.col("path"), n_buckets))
-        .withColumn("channels", channels(ns, F.col("path")))
-    )

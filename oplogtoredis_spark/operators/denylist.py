@@ -21,7 +21,7 @@ import json
 import os
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 
 class DenylistStore:
@@ -65,18 +65,9 @@ class DenylistStore:
         return True
 
     # --- data-plane application ---
-    def as_tuple(self) -> tuple[str, ...]:
-        return tuple(self.list())
-
     def filter(self, df: DataFrame, col: str = "repo") -> DataFrame:
         """Anti-filter re-evaluated at call time (per micro-batch)."""
         entries = self.list()
         if not entries:
             return df
         return df.where(~F.col(col).isin(*entries))
-
-    def to_df(self, spark: SparkSession) -> DataFrame:
-        return spark.createDataFrame(
-            [(e,) for e in self.list()] or spark.sparkContext.emptyRDD(),
-            "repo string",
-        )

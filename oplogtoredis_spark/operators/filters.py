@@ -35,15 +35,6 @@ def filter_denylist(df: DataFrame, denylist: tuple[str, ...]) -> DataFrame:
     return df.where(~F.col("repo").isin(*denylist))
 
 
-def filter_denylist_table(df: DataFrame, denylist_df: DataFrame) -> DataFrame:
-    """F1 for a denylist maintained as a control-plane table (the reference's
-    Postgres-backed variant, lib/denylist/pg.go:32-55): broadcast left-anti
-    join, re-evaluated per micro-batch so runtime CRUD takes effect.
-    """
-    deny = F.broadcast(denylist_df.select(F.col(denylist_df.columns[0]).alias("repo")))
-    return df.join(deny, on="repo", how="left_anti")
-
-
 def apply_all_filters(
     df: DataFrame, denylist: tuple[str, ...] = ()
 ) -> DataFrame:

@@ -25,41 +25,11 @@ incremental-corpus footer counts).
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
 from .lake import LakeTable
-
-
-def snapshot_bytes(lake: LakeTable, version: int) -> int:
-    """On-disk bytes of one committed snapshot (base buckets + live MoR
-    deltas), from driver-side file metadata — no Spark job."""
-    m = lake.manifest(version)
-    dirs = [os.path.join(lake.path, d) for d in m["buckets"].values()]
-    dirs += [
-        os.path.join(lake.path, e["dir"])
-        for entries in m.get("bucket_deltas", {}).values()
-        for e in entries
-    ]
-    total = 0
-    for d in dirs:
-        try:
-            names = os.listdir(d)
-        except FileNotFoundError:
-            continue
-        for n in names:
-            if n.endswith(".parquet"):
-                try:
-                    total += os.path.getsize(os.path.join(d, n))
-                except FileNotFoundError:
-                    # an HA twin's compact()/expire_snapshots() may reclaim
-                    # files between listdir and getsize — a vanished file
-                    # only makes the estimate smaller, never wrong enough
-                    # to matter for a broadcast-vs-shuffle decision
-                    continue
-    return total
 
 
 def make_enrich_applier(
@@ -119,7 +89,7 @@ def make_enrich_applier(
         dim = state.select(
             *keys, *[F.col(c).alias(prefix + c) for c in payload]
         )
-        if snapshot_bytes(lake, v) <= broadcast_max_bytes:
+        if lake.snapshot_bytes(v) <= broadcast_max_bytes:
             dim = F.broadcast(dim)
         out = batch_df.join(dim, on=keys, how=how).withColumn(
             f"{prefix}version", F.lit(v)

@@ -74,25 +74,6 @@ _E_RE = re.compile(r"^e(\d{8})$")
 _C_RE = re.compile(r"^c(\d{8})_(\d{8})$")
 
 
-def _applied_max(lake: LakeTable, epoch_ns: str) -> int:
-    """Highest batch id the lake has applied for this epoch namespace
-    (-1 = none). Sound even though `applied_batch_ids` keeps a bounded
-    recent window: ids only grow, so the window's max IS the max."""
-    m = lake.manifest()
-    pre = f"{epoch_ns}:"
-    mx = -1
-    for k in m.get("applied_batch_ids", []):
-        if k.startswith(pre):
-            try:
-                mx = max(mx, int(k[len(pre):]))
-            except ValueError:
-                pass
-    wm = m.get("applied_watermarks", {}).get(epoch_ns)
-    if wm is not None:
-        mx = max(mx, int(wm))
-    return mx
-
-
 def make_history_applier(
     table_path: str,
     history_dir: str,
@@ -240,7 +221,7 @@ def make_history_applier(
             batch_df, batch_id, epoch_ns=epoch_ns, merge_mode=merge_mode
         )
         if compact_min_dirs and len(
-            _live_dirs(history_dir, _applied_max(lake, epoch_ns))
+            _live_dirs(history_dir, lake.applied_max(epoch_ns))
         ) >= compact_min_dirs:
             compact_history(spark, table_path, history_dir, epoch_ns=epoch_ns)
 
@@ -317,7 +298,7 @@ def compact_history(
     target a file size instead (Iceberg's rewrite_data_files posture)."""
     import shutil
 
-    mx = _applied_max(LakeTable(table_path), epoch_ns)
+    mx = LakeTable(table_path).applied_max(epoch_ns)
     live = _live_dirs(history_dir, applied_max=mx)
     live_names = {os.path.basename(d) for d in live}
     watermark = -1
@@ -369,7 +350,7 @@ def read_history(
         F.col("last_ts").alias("valid_from"),
         F.lit(None).cast("long").alias("valid_to"),
     )
-    dirs = _live_dirs(history_dir, applied_max=_applied_max(lake, epoch_ns))
+    dirs = _live_dirs(history_dir, applied_max=lake.applied_max(epoch_ns))
     if dirs:
         closed = spark.read.parquet(*dirs).select(*open_rows.columns)
         out = closed.unionByName(open_rows)

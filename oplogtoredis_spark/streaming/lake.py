@@ -31,6 +31,21 @@ hashes outside the replaced set. The maintenance rewrites share one body
 (``LakeTable._rewrite``); every bucket replacement, merge included, goes
 through one manifest rule (``LakeTable._replace_buckets``).
 
+The manifest format is private to this module. ``create()`` writes every
+field a snapshot carries: ``version``, ``schema`` (the current schema's
+JSON), ``schema_id`` and ``schemas`` (schema id -> schema JSON),
+``bucket_schema_id`` (bucket -> the schema id its base was written at),
+``n_buckets``, ``buckets`` (bucket -> base dir), ``bucket_deltas``
+(bucket -> merge-on-read deltas ``[{dir, seq, sid}]``), and the replay
+ledger ``applied_batch_ids`` and ``applied_watermarks``. Commits add
+``writer_token``, ``affected_frac`` and ``affected_frac_prev`` (the
+dense-epoch estimate), and the rewrite_clustered index fields
+``file_stats`` and ``file_blooms_ref``. Nothing reads a missing field
+leniently: a bucket with no registered schema id fails the read. One
+walk, ``LakeTable._files``, names a snapshot's files (its base and delta
+dirs and its bloom sidecar) for reads, rollback, expiry, fsck and the
+byte count.
+
 Writers: one streaming query normally writes a table (true for Structured
 Streaming sinks). Concurrent writers are still safe: the snapshot claim is
 optimistic (``_write_manifest``), and ``merge_batch`` re-reads the table
@@ -411,12 +426,7 @@ class LakeTable:
         are written before the claim) — making it visible early is safe; its
         writer's own advance then lands in the already-covered arm above.
         Only ever raises CURRENT, never lowers it."""
-        versions = [
-            int(n[1:-5])
-            for n in os.listdir(self._manifest_dir)
-            if n.startswith("v") and n.endswith(".json")
-        ]
-        h = max(versions, default=0)
+        h = max(self._versions(), default=0)
         if self.current_version() >= h:
             return
         cur_tmp = os.path.join(self._manifest_dir, f".current-{uuid.uuid4().hex}")
@@ -447,6 +457,76 @@ class LakeTable:
                     " only retained snapshots are readable"
                 ) from None
             raise
+
+    def _versions(self) -> list[int]:
+        """Every manifest version on disk, ascending: the retained
+        snapshots plus any claim above CURRENT (a commit in flight, or a
+        crash orphan awaiting adoption)."""
+        return sorted(
+            int(n[1:-5])
+            for n in os.listdir(self._manifest_dir)
+            if n.startswith("v") and n.endswith(".json")
+        )
+
+    @staticmethod
+    def _files(m: dict) -> tuple[list[str], str]:
+        """The one walk over a snapshot's files: its table-relative data
+        dirs (every base dir, then every merge-on-read delta dir) and the
+        name of its bloom sidecar ('' when it has none)."""
+        dirs = list(m["buckets"].values())
+        dirs += [e["dir"] for es in m["bucket_deltas"].values() for e in es]
+        return dirs, m.get("file_blooms_ref", "")
+
+    def _walk(self, versions):
+        """``_files`` of each manifest in ``versions``, reading each once. A
+        manifest that expire_snapshots removed meanwhile is skipped."""
+        for v in versions:
+            try:
+                m = self.manifest(v)
+            except (FileNotFoundError, SnapshotExpiredError):
+                continue
+            yield self._files(m)
+
+    def _missing_dirs(self, m: dict) -> list[str]:
+        """The data dirs of snapshot ``m`` that are gone from disk."""
+        return [
+            d for d in self._files(m)[0]
+            if not os.path.isdir(os.path.join(self.path, d))
+        ]
+
+    def _require_retained(self, m: dict, what: str) -> None:
+        """The retention check for a time-travel read or a rollback: fail
+        loud NOW if expire_snapshots reclaimed any of the snapshot's data
+        dirs, instead of an opaque lazy path-not-found at action time."""
+        missing = self._missing_dirs(m)
+        if missing:
+            raise SnapshotExpiredError(
+                f"{what}: it references {len(missing)} expired data dir(s) "
+                f"(first: {missing[0]}) — reclaimed by expire_snapshots; "
+                "only retained snapshots are usable"
+            )
+
+    def snapshot_bytes(self, version: int | None = None) -> int:
+        """On-disk parquet bytes of one snapshot (base buckets and live
+        merge-on-read deltas; default the current one), from driver-side
+        file metadata: no Spark job. A dir or file that another writer's
+        compact() or expire_snapshots() reclaims during the count only
+        makes it smaller, never raises: the callers size a broadcast or a
+        rebucket, where a low estimate is harmless."""
+        total = 0
+        for d in self._files(self.manifest(version))[0]:
+            full = os.path.join(self.path, d)
+            try:
+                names = os.listdir(full)
+            except FileNotFoundError:
+                continue
+            for n in names:
+                if n.endswith(".parquet"):
+                    try:
+                        total += os.path.getsize(os.path.join(full, n))
+                    except FileNotFoundError:
+                        continue
+        return total
 
     @property
     def schema(self) -> T.StructType:
@@ -520,24 +600,37 @@ class LakeTable:
         # out of order — those get exact-set semantics only
         if not epoch_ns:
             return False
-        wm = m.get("applied_watermarks", {}).get(epoch_ns)
+        wm = m["applied_watermarks"].get(epoch_ns)
         return wm is not None and batch_id <= wm
+
+    def applied_max(self, epoch_ns: str) -> int:
+        """Highest batch id the table has applied for ``epoch_ns`` (-1 =
+        none): the larger of the namespace's watermark and its ids in the
+        recent window. Ids only grow within a namespace, so the bounded
+        window loses nothing the watermark does not cover."""
+        m = self.manifest()
+        pre = f"{epoch_ns}:"
+        ids = [
+            int(k[len(pre):])
+            for k in m["applied_batch_ids"]
+            if k.startswith(pre) and k[len(pre):].isdigit()
+        ]
+        return max([*ids, m["applied_watermarks"].get(epoch_ns, -1)])
 
     # ---------------- read ----------------
     def history(self) -> list[dict]:
         """Snapshot history (Iceberg's snapshots metadata-table analogue):
         one record per retained manifest version."""
         out = []
-        for name in sorted(os.listdir(self._manifest_dir)):
-            if name.startswith("v") and name.endswith(".json"):
-                m = self.manifest(int(name[1:-5]))
-                out.append(
-                    {
-                        "version": m["version"],
-                        "n_buckets_live": len(m["buckets"]),
-                        "applied_watermarks": m.get("applied_watermarks", {}),
-                    }
-                )
+        for v in self._versions():
+            m = self.manifest(v)
+            out.append(
+                {
+                    "version": m["version"],
+                    "n_buckets_live": len(m["buckets"]),
+                    "applied_watermarks": m["applied_watermarks"],
+                }
+            )
         return out
 
     def read(
@@ -577,30 +670,17 @@ class LakeTable:
         m = self.manifest(version)
         schema = T.StructType.fromJson(json.loads(m["schema"]))
         sel = dict(m["buckets"])
-        dsel = m.get("bucket_deltas", {})
+        dsel = m["bucket_deltas"]
         if buckets is not None:
             keep = set(buckets)
             sel = {b: d for b, d in sel.items() if int(b) in keep}
             dsel = {b: ds for b, ds in dsel.items() if int(b) in keep}
-        dirs = [os.path.join(self.path, d) for d in sel.values()]
         if version is not None:
-            # time travel only (never the hot path): fail loud NOW if the
-            # named snapshot's bytes were reclaimed by expire_snapshots,
-            # instead of an opaque lazy path-not-found at action time
-            ddirs = [
-                os.path.join(self.path, e["dir"])
-                for entries in dsel.values()
-                for e in entries
-            ]
-            missing = [d for d in (*dirs, *ddirs) if not os.path.isdir(d)]
-            if missing:
-                raise SnapshotExpiredError(
-                    f"snapshot v{version} of {self.path} references "
-                    f"{len(missing)} expired data dir(s) (first: "
-                    f"{os.path.relpath(missing[0], self.path)}) — reclaimed "
-                    "by expire_snapshots; only retained snapshots are "
-                    "readable"
-                )
+            # time travel only (never the hot path)
+            self._require_retained(
+                {"buckets": sel, "bucket_deltas": dsel},
+                f"snapshot v{version} of {self.path}",
+            )
         # per-bucket path lists: normally the bucket dir; under a file
         # filter, the kept files of delta-free buckets (a fully-pruned
         # bucket leaves the read entirely)
@@ -620,9 +700,10 @@ class LakeTable:
         if not paths:
             df = spark.createDataFrame([], schema)
         else:
-            bsid = m.get("bucket_schema_id", {})
+            bsid = m["bucket_schema_id"]
             df = self._read_conformed(
-                spark, m, schema, [(bsid.get(b), p) for b, ps in paths.items() for p in ps]
+                spark, m, schema,
+                [(b, bsid.get(b), p) for b, ps in paths.items() for p in ps],
             )
         if dsel:
             df = self._merge_deltas_on_read(spark, df, dsel, schema, m)
@@ -670,7 +751,7 @@ class LakeTable:
                 raise ValueError("eq is mutually exclusive with lo/hi")
             lo = hi = eq
         m = self.manifest(version)
-        dsel = m.get("bucket_deltas", {})
+        dsel = m["bucket_deltas"]
         manifest_stats = m.get("file_stats", {})
         blooms = self._load_blooms(m) if eq is not None else {}
         kept: dict = {}
@@ -763,12 +844,12 @@ class LakeTable:
         spark: SparkSession,
         m: dict,
         schema: T.StructType,
-        sid_dirs: list,
+        sources: list,
         extra: tuple[T.StructField, Column] | None = None,
     ) -> DataFrame:
-        """Read (schema id, parquet path) pairs, every row conformed to
-        ``schema``. When every path was written at the current schema id
-        this is one scan with the explicit schema (no driver-side
+        """Read (bucket, schema id, parquet path) triples, every row
+        conformed to ``schema``. When every path was written at the current
+        schema id this is one scan with the explicit schema (no driver-side
         mergeSchema footer scan, measured 0.25-0.8 s per epoch).
 
         Otherwise paths are grouped by RECORDED schema id; each group is
@@ -777,43 +858,39 @@ class LakeTable:
         reconcile an int32-file/int64-file column (StructType.merge throws
         'incompatible data types'), so a widened table would otherwise
         wedge every read — and compaction, which reads first — once old
-        and new buckets coexist. Paths with no recorded sid (pre-tracking
-        snapshots) keep the legacy mergeSchema path: they can only differ
-        additively.
+        and new buckets coexist. A path whose schema id is missing or not
+        in ``schemas`` breaks the format: the read fails, naming its
+        bucket.
 
         ``extra`` (field, column) appends one column computed PER SCAN,
         before the union: file-metadata columns such as
         ``_metadata.file_path`` do not resolve across a union."""
-        def scan(ds: list, s: T.StructType | None) -> DataFrame:
+        def scan(ds: list, s: T.StructType) -> DataFrame:
             # the file index is built here, on the driver at any path count
             # the manifest names (the session's listing threshold, see
-            # session.get_spark): no Spark job; None = mergeSchema inference
-            reader = (
-                spark.read.schema(s)
-                if s is not None
-                else spark.read.option("mergeSchema", "true")
-            )
-            df = reader.parquet(*ds)
+            # session.get_spark): no Spark job
+            df = spark.read.schema(s).parquet(*ds)
             return df.withColumn(extra[0].name, extra[1]) if extra else df
 
+        schemas = m["schemas"]
         groups: dict = {}
-        for sid, d in sid_dirs:
+        for b, sid, d in sources:
+            if str(sid) not in schemas:
+                raise ValueError(
+                    f"{self.path} v{m['version']}: bucket {b} names schema id "
+                    f"{sid!r}, which the manifest does not register"
+                )
             groups.setdefault(sid, []).append(d)
-        if set(groups) == {m.get("schema_id", object())}:
-            return scan([d for _, d in sid_dirs], schema)
+        if set(groups) == {m["schema_id"]}:
+            return scan([d for _, _, d in sources], schema)
         target = T.StructType([*schema.fields, extra[0]]) if extra else schema
-        schemas = m.get("schemas", {"0": m["schema"]})
-        unknown = groups.pop(None, [])
-        reads = []
-        for sid, ds in groups.items():
-            sj = schemas.get(str(sid))
-            if sj is None:
-                unknown += ds
-            else:
-                reads.append((ds, T.StructType.fromJson(json.loads(sj))))
-        if unknown:
-            reads.append((unknown, None))
-        parts = [conform_to_schema(scan(ds, s), target) for ds, s in reads]
+        parts = [
+            conform_to_schema(
+                scan(ds, T.StructType.fromJson(json.loads(schemas[str(sid)]))),
+                target,
+            )
+            for sid, ds in groups.items()
+        ]
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
@@ -838,8 +915,8 @@ class LakeTable:
         so a real cluster's storage-partitioned join/agg keeps this
         shuffle-free."""
         sid_dirs = [
-            (e.get("sid"), os.path.join(self.path, e["dir"]))
-            for entries in dsel.values()
+            (b, e.get("sid"), os.path.join(self.path, e["dir"]))
+            for b, entries in dsel.items()
             for e in entries
         ]
         # anchored to the table-relative suffix (delta-dir/pb=N/file at the
@@ -928,8 +1005,7 @@ class LakeTable:
         # manifest-diff bucket pruning: a bucket can only contribute
         # changes if its data dir or its delta list differs
         fb, tb = m_from["buckets"], m_to["buckets"]
-        fd = m_from.get("bucket_deltas", {})
-        td = m_to.get("bucket_deltas", {})
+        fd, td = m_from["bucket_deltas"], m_to["bucket_deltas"]
         changed = sorted(
             int(b)
             for b in set(fb) | set(tb) | set(fd) | set(td)
@@ -1269,8 +1345,9 @@ class LakeTable:
         # received-by-op counters + read-side staleness gauge,
         # lib/oplog/tail.go:71-137, lib/redispub/publisher.go:101-114)
         in_obs = _Obs(f"in_{batch_id}")
-        batch = batch.observe(in_obs, *cx["in_aggs"])
-        batch_ok, batch_dead = split_dead_letters(batch, cx["dl_reason"])
+        batch_ok, batch_dead = split_dead_letters(
+            batch.observe(in_obs, *cx["in_aggs"]), cx["dl_reason"]
+        )
         # events mapped straight to the target row shape (sha256 is computed
         # AFTER winner selection — never for losing duplicates); then the
         # entry-size histogram rides the merge-write scan only (NOT the
@@ -1312,10 +1389,9 @@ class LakeTable:
             # every bucket holding data — bases and merge-on-read deltas
             # alike (a delta-only bucket the batch touches must be read, or
             # its rewrite drops the delta's rows); none on an empty table
-            deltas = m.get("bucket_deltas", {})
             affected = sorted(
                 {int(b) for b in m["buckets"]}
-                | {int(b) for b, ds in deltas.items() if ds}
+                | {int(b) for b, ds in m["bucket_deltas"].items() if ds}
             )
         else:
             aff_obs = _Obs(f"aff_{batch_id}")
@@ -1367,25 +1443,16 @@ class LakeTable:
         # write-stage task time). Hash-partitioning on the bucket puts each
         # bucket in one task, so each touched bucket gets exactly one file.
         nb_eff = len(affected) if affected else n_buckets
-        cores = spark.sparkContext.defaultParallelism
-        width = min(nb_eff, cores)
-        # Single-payload-shuffle plan (guide §8): ``bucket`` is recomputed
-        # from the key on both sides of the union (see above), so
-        # hash-partitioning by bucket co-locates each key, and a groupBy on
-        # (bucket, *key) is satisfied by that partitioning (subset rule)
-        # with NO second exchange — the bucketed write below then reuses
-        # the same layout, so the full payload crosses the wire ONCE
-        # instead of key-collapse + bucket-repartition. Only taken when the
-        # touched bucket count keeps reduce parallelism at or above the
-        # core count (a 100 TB table has thousands of buckets, so this IS
-        # the production branch); small-bucket fixtures keep the two-step
-        # plan whose collapse runs at full session width.
-        one_shuffle = nb_eff >= cores
-        if one_shuffle:
-            u = u.repartition(width, F.col("bucket"))
-            p2 = u.groupBy("bucket", *key).agg(*cx["collapse_aggs"])
-        else:
-            p2 = u.groupBy(*key).agg(*cx["collapse_aggs"])
+        width = min(nb_eff, spark.sparkContext.defaultParallelism)
+        # One payload shuffle (guide §8): ``bucket`` is recomputed from the
+        # key on both sides of the union (see above), so hash-partitioning
+        # by bucket co-locates each key, and a groupBy on (bucket, *key) is
+        # satisfied by that partitioning (subset rule) with NO second
+        # exchange. The bucketed write below reuses the same layout, so the
+        # full payload crosses the wire once, at any touched-bucket count.
+        p2 = u.repartition(width, F.col("bucket")).groupBy("bucket", *key).agg(
+            *cx["collapse_aggs"]
+        )
         merged = p2.select(*cx["merged_cols"])
         # metrics ride the same pass via observe() — no second job
         # (reference metrics analogue, SURVEY.md §2 M1; lib/redispub/publisher.go:64-114)
@@ -1404,12 +1471,11 @@ class LakeTable:
         out_dir = os.path.join(self.path, rel_dir)
         t_write0 = time.time()
         if dense or affected:
-            to_write = merged.withColumn("pb", F.col("bucket"))
-            if not one_shuffle:
-                to_write = to_write.repartition(width, F.col("pb"))
-            # (one_shuffle: already hash-partitioned by bucket — the
-            # partitionBy writer splits per dir within each task)
-            to_write.write.partitionBy("pb").mode("overwrite").parquet(out_dir)
+            # already hash-partitioned by bucket: the partitionBy writer
+            # splits per dir within each task
+            merged.withColumn("pb", F.col("bucket")).write.partitionBy(
+                "pb"
+            ).mode("overwrite").parquet(out_dir)
             metrics = observed_row(obs)
             written = self._written_buckets(m, out_dir, None if dense else affected)
             if dense:
@@ -1422,9 +1488,9 @@ class LakeTable:
 
         # schema-id bookkeeping: rewritten buckets carry the (possibly newly
         # evolved) current schema id; untouched buckets keep their old id and
-        # read through the mergeSchema fallback until rewritten/compacted
-        schemas = dict(m.get("schemas", {"0": m["schema"]}))
-        schema_id = int(m.get("schema_id", 0))
+        # read with its registered schema until rewritten/compacted
+        schemas = dict(m["schemas"])
+        schema_id = m["schema_id"]
         if new_schema.json() != m["schema"]:
             schema_id = max(int(k) for k in schemas) + 1
             schemas[str(schema_id)] = new_schema.json()
@@ -1442,7 +1508,7 @@ class LakeTable:
         if merge_mode == "mor":
             # bases and their index entries stay in place (delta-carrying
             # buckets are read whole regardless — the stale-redelivery rule)
-            bucket_deltas = {b: list(ds) for b, ds in m.get("bucket_deltas", {}).items()}
+            bucket_deltas = {b: list(ds) for b, ds in m["bucket_deltas"].items()}
             for b in affected:
                 bucket_deltas.setdefault(str(b), []).append(
                     {
@@ -1462,7 +1528,7 @@ class LakeTable:
         # size and commit cost are O(1) over the stream's lifetime
         recent = [str(x) for x in m["applied_batch_ids"]] + [epoch_key]
         recent = recent[-self._REPLAY_WINDOW:]
-        watermarks = dict(m.get("applied_watermarks", {}))
+        watermarks = dict(m["applied_watermarks"])
         prev_wm = watermarks.get(epoch_ns)
         watermarks[epoch_ns] = batch_id if prev_wm is None else max(prev_wm, batch_id)
 
@@ -1506,9 +1572,20 @@ class LakeTable:
         # The write is epoch-keyed + overwrite, so a pre-commit crash/replay
         # is idempotent (append would duplicate). Only runs when the observed
         # count says the dead branch is non-empty (healthy logs pay zero
-        # extra jobs); the merge write action above completed the input
-        # observation, so the count is final here.
+        # extra jobs); the epoch's first action completed the input
+        # observation, so the count is final here. Unless that action was a
+        # merge write whose shuffle held no row (no valid batch row and no
+        # target rows: a first merge or a merge-on-read epoch): AQE then
+        # drops the empty stage and its observation with it. Only such an
+        # epoch, which merged nothing, re-observes the batch, with a noop
+        # write: no exchange, so that observation cannot be dropped.
         im = observed_row(in_obs)
+        if not im:
+            in_obs = _Obs(f"in_again_{batch_id}")
+            batch.observe(in_obs, *cx["in_aggs"]).write.format("noop").mode(
+                "overwrite"
+            ).save()
+            im = observed_row(in_obs)
         n_dead = int(im.get("unprocessable_in") or 0)
         if n_dead:
             from ..operators.deadletter import quarantine
@@ -1609,8 +1686,8 @@ class LakeTable:
         point-lookup pruning for UNTOUCHED buckets at the first merge after
         a rewrite. Returns the manifest fields this rule owns."""
         buckets = dict(m["buckets"])
-        sids = dict(m.get("bucket_schema_id", {}))
-        deltas = dict(m.get("bucket_deltas", {}))
+        sids = dict(m["bucket_schema_id"])
+        deltas = dict(m["bucket_deltas"])
         for b in map(str, replaced):
             d = os.path.join(rel_dir, f"pb={b}")
             if os.path.isdir(os.path.join(self.path, d)):
@@ -1629,7 +1706,6 @@ class LakeTable:
                 for k, v in m.get("file_stats", {}).items()
                 if k.rsplit("/", 1)[0] in live
             },
-            "file_blooms": {},
             "file_blooms_ref": self._filtered_blooms_ref(m, live),
         }
 
@@ -1666,7 +1742,7 @@ class LakeTable:
         n = n_buckets or m["n_buckets"]
         if buckets is None:  # every bucket at the old and the target count
             replaced = {
-                *range(n), *map(int, m["buckets"]), *map(int, m.get("bucket_deltas", {}))
+                *range(n), *map(int, m["buckets"]), *map(int, m["bucket_deltas"])
             }
         else:
             replaced = set(buckets)
@@ -1688,9 +1764,7 @@ class LakeTable:
         out_dir = os.path.join(self.path, rel_dir)
         out.write.partitionBy("pb").mode("overwrite").parquet(out_dir)
         self._written_buckets(m, out_dir, replaced)
-        fields = self._replace_buckets(
-            m, rel_dir, replaced, int(m.get("schema_id", 0))
-        )
+        fields = self._replace_buckets(m, rel_dir, replaced, m["schema_id"])
         if index is not None:
             fields.update(index(rel_dir, fields["buckets"]))
         committed = {**m, **fields, "version": version, "n_buckets": n}
@@ -1769,7 +1843,7 @@ class LakeTable:
         own ``n_buckets`` and dirs — time travel and tags read the old
         layout unchanged until expiry. The merge's plan-fragment cache keys
         on the bucket count, so a live stream picks up the new modulus on
-        its next epoch. ``file_stats``/``file_blooms`` are cleared (they
+        its next epoch. ``file_stats`` and the bloom sidecar are dropped (they
         describe the replaced files; re-run rewrite_clustered to rebuild
         them — pruning simply keeps everything in between).
 
@@ -1813,15 +1887,7 @@ class LakeTable:
                 f"target_bucket_bytes must be >= 1, got {target_bucket_bytes}"
             )
         m = self.manifest()
-        dirs = [os.path.join(self.path, d) for d in m["buckets"].values()]
-        for entries in m.get("bucket_deltas", {}).values():
-            dirs += [os.path.join(self.path, e["dir"]) for e in entries]
-        total = 0
-        for d in dirs:
-            if os.path.isdir(d):
-                for fn in os.listdir(d):
-                    if fn.endswith(".parquet"):
-                        total += os.path.getsize(os.path.join(d, fn))
+        total = self.snapshot_bytes(m["version"])
         n = m["n_buckets"]
         if n >= max_n_buckets or total <= target_bucket_bytes * n:
             return {"rebucketed": False, "n_buckets": n, "live_bytes": total}
@@ -2154,10 +2220,10 @@ class LakeTable:
 
     def _load_blooms(self, m: dict) -> dict:
         """The manifest's bloom index: the referenced sidecar (memoized —
-        immutable once linked), or the legacy inline ``file_blooms`` dict."""
-        ref = m.get("file_blooms_ref") or ""
+        immutable once linked), or {} when the manifest names none."""
+        ref = m.get("file_blooms_ref", "")
         if not ref:
-            return m.get("file_blooms") or {}
+            return {}
         key = (self.path, ref)
         if key not in _BLOOM_SIDECAR_CACHE:
             with open(os.path.join(self._manifest_dir, ref)) as f:
@@ -2169,10 +2235,9 @@ class LakeTable:
         """Carry the bloom index forward across a commit whose base dirs
         are ``live_dirs``, keeping only their files' entries: unchanged
         index → the SAME sidecar name (one string copy, no IO); entries
-        dropped (or legacy inline blooms migrating) → one new filtered
-        sidecar; empty → ''."""
-        ref = m.get("file_blooms_ref") or ""
-        if not ref and not m.get("file_blooms"):
+        dropped → one new filtered sidecar; empty → ''."""
+        ref = m.get("file_blooms_ref", "")
+        if not ref:
             return ""
         cur = self._load_blooms(m)
         kept = {
@@ -2180,7 +2245,7 @@ class LakeTable:
             for k, v in cur.items()
             if k.rsplit("/", 1)[0] in live_dirs
         }
-        if len(kept) == len(cur) and ref:
+        if len(kept) == len(cur):
             return ref
         return self._write_bloom_sidecar(kept) if kept else ""
 
@@ -2230,7 +2295,7 @@ class LakeTable:
         m = self.manifest()
         over = [
             int(b)
-            for b, ds in m.get("bucket_deltas", {}).items()
+            for b, ds in m["bucket_deltas"].items()
             if len(ds) >= min_deltas_per_bucket
         ]
         if not over:
@@ -2281,11 +2346,7 @@ class LakeTable:
         # never reclaims a snapshot a tag points at) — drop the tag first to
         # release the bytes
         keep_versions |= set(self.tags().values())
-        all_versions = {
-            int(n[1:-5])
-            for n in os.listdir(self._manifest_dir)
-            if n.startswith("v") and n.endswith(".json")
-        }
+        all_versions = set(self._versions())
         # versions above CURRENT: in-flight or orphaned claims — protected
         protected = keep_versions | {v for v in all_versions if v > cur}
         expired = sorted(all_versions - protected)
@@ -2293,16 +2354,10 @@ class LakeTable:
         def _dirs_and_ref(versions) -> tuple[set[str], set[str]]:
             dirs: set[str] = set()
             refs: set[str] = set()
-            for v in versions:
-                try:
-                    mv = self.manifest(v)
-                except (FileNotFoundError, SnapshotExpiredError):
-                    continue
-                dirs |= set(mv["buckets"].values())
-                for entries in mv.get("bucket_deltas", {}).values():
-                    dirs |= {e["dir"] for e in entries}
-                if mv.get("file_blooms_ref"):
-                    refs.add(mv["file_blooms_ref"])
+            for ds, ref in self._walk(versions):
+                dirs.update(ds)
+                if ref:
+                    refs.add(ref)
             return dirs, refs
 
         referenced, kept_sidecars = _dirs_and_ref(protected)
@@ -2461,20 +2516,9 @@ class LakeTable:
         if to_version == cur:
             return cur  # no-op
         target = self.manifest(to_version)  # FileNotFoundError if unknown
-        dirs = [os.path.join(self.path, d) for d in target["buckets"].values()]
-        ddirs = [
-            os.path.join(self.path, e["dir"])
-            for entries in target.get("bucket_deltas", {}).values()
-            for e in entries
-        ]
-        missing = [d for d in (*dirs, *ddirs) if not os.path.isdir(d)]
-        if missing:
-            raise SnapshotExpiredError(
-                f"cannot rollback {self.path} to v{to_version}: it references"
-                f" {len(missing)} expired data dir(s) (first: "
-                f"{os.path.relpath(missing[0], self.path)}) — reclaimed by "
-                "expire_snapshots; only retained snapshots are restorable"
-            )
+        self._require_retained(
+            target, f"cannot rollback {self.path} to v{to_version}"
+        )
         new_version = cur + 1
         self._write_manifest({**target, "version": new_version})
         self._append_lineage(
@@ -2523,22 +2567,23 @@ class LakeTable:
         from ..operators.expectations import run_expectations, unique
 
         m = self.manifest()
-        missing_base = sum(
-            not os.path.isdir(os.path.join(self.path, d))
-            for d in m["buckets"].values()
-        )
-        missing_delta = sum(
-            not os.path.isdir(os.path.join(self.path, e["dir"]))
-            for es in m.get("bucket_deltas", {}).values()
-            for e in es
-        )
+        # merges and rewrites write bases under data/, deltas under delta/
+        missing = self._missing_dirs(m)
+        missing_delta = sum(d.startswith("delta/") for d in missing)
+        missing_base = len(missing) - missing_delta
+        # one read per manifest (the current one is in hand) gives both the
+        # dirs any retained snapshot references and the index sidecars each
+        # one names (a missing sidecar would silently disable point-lookup
+        # pruning — sound, but a lost index is still corruption worth
+        # surfacing)
+        others = [v for v in self._versions() if v != m["version"]]
         referenced: set[str] = set()
-        for name in os.listdir(self._manifest_dir):
-            if name.startswith("v") and name.endswith(".json"):
-                mv = self.manifest(int(name[1:-5]))
-                referenced |= set(mv["buckets"].values())
-                for es in mv.get("bucket_deltas", {}).values():
-                    referenced |= {e["dir"] for e in es}
+        missing_sidecars = 0
+        for ds, ref in [self._files(m), *self._walk(others)]:
+            referenced.update(ds)
+            missing_sidecars += bool(ref) and not os.path.isfile(
+                os.path.join(self._manifest_dir, ref)
+            )
         orphans = 0
         for root in ("data", "delta"):
             droot = os.path.join(self.path, root)
@@ -2554,30 +2599,6 @@ class LakeTable:
                         and os.path.join(root, snap, b) not in referenced
                     ):
                         orphans += 1
-        # index sidecars referenced by any retained manifest must exist (a
-        # missing one would silently disable point-lookup pruning — sound
-        # but a lost index is still corruption worth surfacing). The ref is
-        # extracted with a key-anchored scan instead of a full json.load of
-        # every manifest: a long-lived stream commits one manifest per
-        # epoch, and before expire_metadata runs this check is O(epochs)
-        # driver-side — parsing MB-scale bucket maps per manifest was the
-        # dominant term (ADVICE r5). Manifests are engine-written json with
-        # a flat string value for this key, so the anchored regex is exact.
-        _ref_re = re.compile(r'"file_blooms_ref"\s*:\s*"([^"]*)"')
-
-        def _blooms_ref(name: str) -> str:
-            with open(os.path.join(self._manifest_dir, name)) as f:
-                mm = _ref_re.search(f.read())
-            return mm.group(1) if mm else ""
-
-        missing_sidecars = sum(
-            1
-            for name in os.listdir(self._manifest_dir)
-            if name.startswith("v") and name.endswith(".json")
-            for ref in [_blooms_ref(name)]
-            if ref
-            and not os.path.isfile(os.path.join(self._manifest_dir, ref))
-        )
         meta = spark.createDataFrame(
             [
                 ("fsck:missing_base_dir", missing_base),
@@ -2592,11 +2613,7 @@ class LakeTable:
         # raw per-file scan (base + delta dirs) for the two location/column
         # checks; _metadata.file_path names each row's actual pb= dir
         schema = T.StructType.fromJson(json.loads(m["schema"]))
-        dirs = [os.path.join(self.path, d) for d in m["buckets"].values()] + [
-            os.path.join(self.path, e["dir"])
-            for es in m.get("bucket_deltas", {}).values()
-            for e in es
-        ]
+        dirs = [os.path.join(self.path, d) for d in self._files(m)[0]]
         raw_checks = [
             {
                 "kind": "row",

@@ -8,7 +8,7 @@ import pandas as pd
 import pytest
 
 from oplogtoredis_spark.sources.schemas import TARGET_SCHEMA
-from oplogtoredis_spark.streaming.enrich import make_enrich_applier, snapshot_bytes
+from oplogtoredis_spark.streaming.enrich import make_enrich_applier
 from oplogtoredis_spark.streaming.lake import LakeTable
 
 KEYS = ["repo", "path"]
@@ -134,9 +134,9 @@ def test_broadcast_decision_by_snapshot_bytes(spark, lake, tmp_path):
 
 def test_snapshot_bytes_counts_all_live_dirs(lake):
     v = lake.current_version()
-    b = snapshot_bytes(lake, v)
+    b = lake.snapshot_bytes(v)
     assert b > 0
-    assert snapshot_bytes(lake, 0) == 0   # the empty created snapshot
+    assert lake.snapshot_bytes(0) == 0   # the empty created snapshot
 
 
 def test_rejects_unknown_how(lake):
@@ -154,7 +154,7 @@ def test_prefix_collision_fails_loud(spark, lake):
         applier(clashing, 0)
 
 
-def test_snapshot_bytes_tolerates_vanishing_files(lake):
+def test_snapshot_bytes_tolerates_vanishing_files(spark, lake):
     import os
     from unittest import mock
 
@@ -167,7 +167,10 @@ def test_snapshot_bytes_tolerates_vanishing_files(lake):
         return real_getsize(p)
 
     with mock.patch("os.path.getsize", side_effect=flaky):
-        assert snapshot_bytes(lake, v) == 0  # shrinks, never raises
+        assert lake.snapshot_bytes(v) == 0  # shrinks, never raises
+        # the rebucket policy sizes the table with the same count
+        st = lake.maybe_rebucket(spark, target_bucket_bytes=1)
+        assert st["rebucketed"] is False and st["live_bytes"] == 0
 
 
 def test_lake_version_payload_column_rejected(spark, tmp_path):

@@ -130,6 +130,26 @@ def test_schema_evolution_added_column(spark, table):
     assert got.loc["r/b", "stars"] == 777
 
 
+@pytest.mark.parametrize("sid", [None, 99])
+def test_bucket_without_registered_schema_id_fails_read(spark, table, sid):
+    """A live bucket whose schema id is missing, or names no schema in
+    ``schemas``, breaks the manifest format: read() fails naming the
+    bucket instead of guessing the bucket's schema from its files."""
+    table.merge_batch(
+        _batch(spark, [("r/a", "f.py", 1 << 32, 0, "i", "c0", "py", "v1")]), 0
+    )
+    m = table.manifest()
+    (b,) = m["buckets"]
+    sids = dict(m["bucket_schema_id"])
+    if sid is None:
+        del sids[b]
+    else:
+        sids[b] = sid
+    table._write_manifest({**m, "version": m["version"] + 1, "bucket_schema_id": sids})
+    with pytest.raises(ValueError, match=f"bucket {b} names schema id {sid!r}"):
+        table.read(spark)
+
+
 def test_merge_schemas_widening():
     from pyspark.sql import types as T
 

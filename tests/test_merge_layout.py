@@ -1,7 +1,8 @@
 """The CoW merge's physical layout and fixed per-epoch cost: one file per
-touched bucket from a write of at most one task per core, a target read
-and a stream batch that list their paths without a Spark job, bucket
-discovery as one single-stage job, plan fragments shared by every
+touched bucket from one shuffle and a write of at most one task per core,
+a target read and a stream batch that list their paths without a Spark
+job, bucket discovery as one single-stage job, dead letters quarantined
+on every merge path, plan fragments shared by every
 LakeTable of the same shape, and a merge and maintenance rewrites keyed on
 the bucket the key hashes to rather than the stored column. Also the log
 writer's explicit parquet types and the package zip's cleanup."""
@@ -79,9 +80,27 @@ def _seeded(spark, path, n_buckets, n_keys=400):
     return t, kb
 
 
+def _shuffle_stages(spark, jobs):
+    """How many stages of ``jobs`` wrote shuffle output (a stage that a
+    later job reuses is counted once; a skipped stage never ran)."""
+    from py4j.protocol import Py4JJavaError
+
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    stages = {s for j in jobs for s in sc.statusTracker().getJobInfo(j).stageIds}
+    n = 0
+    for s in stages:
+        try:
+            n += store.lastStageAttempt(s).shuffleWriteRecords() > 0
+        except Py4JJavaError:
+            continue
+    return n
+
+
 @pytest.mark.parametrize("k", [2, 12])
 def test_one_file_per_touched_bucket_in_one_wave(spark, tmp_path, k):
-    # k=2 takes the two-step collapse, k=12 the one-shuffle plan (k >= cores)
+    # fewer touched buckets (k=2) than cores and more (k=12) run the same
+    # plan: one shuffle on the bucket, then the write
     t, kb = _seeded(spark, str(tmp_path / "t"), 32)
     touched = sorted(kb)[:k]
     batch = _batch(spark, [kk for b in touched for kk in kb[b]], 2, "new")
@@ -102,6 +121,7 @@ def test_one_file_per_touched_bucket_in_one_wave(spark, tmp_path, k):
     write_stage = max(tracker.getJobInfo(jobs[-1]).stageIds)
     n_tasks = tracker.getStageInfo(write_stage).numTasks
     assert n_tasks <= spark.sparkContext.defaultParallelism
+    assert _shuffle_stages(spark, jobs) == 1
 
     got = t.read(spark).toPandas()
     assert len(got) == sum(len(v) for v in kb.values())
@@ -169,24 +189,51 @@ def test_discovery_is_one_single_stage_job(spark, tmp_path):
     assert stats["events_in"] == len(touched)  # the input observation completed
 
 
-def test_discovery_commits_filtered_and_dead_letter_batches(spark, tmp_path):
-    t, kb = _discovery_table(spark, str(tmp_path / "t"))
-    before = t.read(spark).count()
-    filtered = _batch(spark, kb[0][:3], 2).where(F.col("path") == "nope")
+def _dense_table(spark, path):
+    """Two epochs that touch every bucket of a small table: the next CoW
+    merge is adaptive-dense."""
+    t, kb = _seeded(spark, path, 8, n_keys=80)
+    t.merge_batch(_batch(spark, [k for ks in kb.values() for k in ks], 2), 1)
+    return t
+
+
+#: (table factory, merge mode, adaptive-dense?) per merge path
+_MERGE_PATHS = {
+    "first": (lambda spark, p: LakeTable.create(p, TARGET_SCHEMA, n_buckets=8), "cow", False),
+    "dense": (_dense_table, "cow", True),
+    "discovery": (lambda spark, p: _discovery_table(spark, p)[0], "cow", False),
+    "mor": (lambda spark, p: _seeded(spark, p, 8, n_keys=80)[0], "mor", False),
+}
+
+
+@pytest.mark.parametrize("merge_path", list(_MERGE_PATHS))
+def test_discovery_commits_filtered_and_dead_letter_batches(spark, tmp_path, merge_path):
+    make, mode, dense = _MERGE_PATHS[merge_path]
+    filtered = _batch(spark, [("r1", "a.py")] * 3, 9).where(F.col("path") == "nope")
     dead = spark.createDataFrame(
-        [(None, "f.py", 2 << 32, 0, "u", "c", "py", "x"),
-         ("r1", None, 2 << 32, 1, "u", "c", "py", "y")],
+        [(None, "f.py", 9 << 32, 0, "u", "c", "py", "x"),
+         ("r1", None, 9 << 32, 1, "u", "c", "py", "y")],
         COLS,
     )
-    for batch_id, batch, n_dead in ((1, filtered, 0), (2, dead, 2)):
-        v = t.current_version()
-        stats = t.merge_batch(batch, batch_id)
-        assert not stats["adaptive_dense"]
-        assert stats["affected_buckets"] == 0 and stats["unprocessable_in"] == n_dead
-        assert t.current_version() == v + 1 and t.epoch_applied("", batch_id)
-    quar = spark.read.parquet(os.path.join(t.path, "_deadletter"))
-    assert sorted(r.dl_reason for r in quar.collect()) == ["null_path", "null_repo"]
-    assert t.read(spark).count() == before
+    for name, batch, n_dead in (("filtered", filtered, 0), ("dead", dead, 2)):
+        # a fresh table each: an epoch that merges nothing resets the
+        # dense estimate, so a second batch on the same table would not be
+        t = make(spark, str(tmp_path / name))
+        before = t.read(spark).count()
+        v, live = t.current_version(), len(t.manifest()["buckets"])
+        stats = t.merge_batch(batch, 7, merge_mode=mode)
+        assert stats["adaptive_dense"] is dense
+        # a dense epoch rewrites every bucket it read, whatever it merged
+        assert stats["affected_buckets"] == (live if dense else 0)
+        assert stats["unprocessable_in"] == n_dead
+        assert t.current_version() == v + 1 and t.epoch_applied("", 7)
+        quar = os.path.join(t.path, "_deadletter")
+        if n_dead:
+            got = spark.read.parquet(quar).collect()
+            assert sorted(r.dl_reason for r in got) == ["null_path", "null_repo"]
+        else:
+            assert not os.path.exists(quar)
+        assert t.read(spark).count() == before
 
 
 def test_plan_fragments_shared_across_tables_rebuilt_on_shape_change(spark, tmp_path):
@@ -260,8 +307,8 @@ def test_wrong_stored_bucket_still_yields_one_row_per_key(spark, tmp_path):
     true_b, wrong_b = sorted(kb)[0], sorted(kb)[1]
     key = kb[true_b][0]
     _rewrite_row(t, true_b, key, stored_bucket=wrong_b)
-    # touches every bucket (one-shuffle plan at 4+ cores), the planted
-    # key's among them, and the bucket its stored column names
+    # touches every bucket, the planted key's among them, and the bucket
+    # its stored column names
     batch = _batch(spark, [key] + [ks[-1] for b, ks in kb.items() if b != true_b], 5, "new")
     t.merge_batch(batch, 1)
     got = t.read(spark).toPandas()
